@@ -1,6 +1,8 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -193,7 +195,9 @@ object NeighborQuery {
   * per walk, conn.py:815) — and the containers merge with `pick_unique`.
   * Consequence pinned by ReferenceQueryParitySpec: a seed's own walk never
   * contains the seed, but a seed REACHED FROM ANOTHER seed's walk does
-  * appear in the merged result.
+  * appear in the merged result. graft runs these semantics as one
+  * seed-tagged walk ([[GraphReader.traverseQuery]]): every seed advances in
+  * the same jobs, each with its own budget and visited set.
   */
 final case class TraverseQuery(
     seeds: Seq[(String, FilterExpr)], // (vertexType, field-map anchor)
@@ -233,6 +237,7 @@ final class GraphReader(
       */
     localizeCap: Int = GraphReader.DefaultLocalizeCap
 ) {
+  import GraphReader.{RankCol, SeedCol}
 
   def node(q: NodeQuery): DataFrame = {
     var df = vertexDf(q.vertex)
@@ -298,7 +303,8 @@ final class GraphReader(
     *     hop graft runs every (edge, side) branch in one parallel job with
     *     the budget applied per branch, where the reference truncates in
     *     its sequential edge order — mid-hop truncation keeps a different
-    *     (backend-order-dependent) subset; sizes still agree when one
+    *     (backend-order-dependent) subset: graft keeps a branch's rows
+    *     first by far-endpoint identity; sizes still agree when one
     *     branch fires per hop. Budget counts joined rows per hop; a row
     *     re-collected through a cycle at a later hop re-counts here where
     *     the reference's marker-dedup skips it — only their interaction
@@ -318,16 +324,18 @@ final class GraphReader(
     // the reference passes them into the per-hop edge fetch
     // (db/traversal.py:121-204), not onto the result vertices
     withTimeout(anchor.sparkSession) {
-      val (out, hopFrames) = walk(q.vertex, anchor, hops, q.direction,
+      val (out, hopFrames) = walk(Seq(q.vertex -> anchor), hops, q.direction,
         q.relations, q.edgeLimit.getOrElse(caps.defaultEdgeLimit), q.filters)
       finish(out, hopFrames)
     }
   }
 
-  /** Multi-seed reachability: independent per-seed walks, merged +
-    * deduplicated (see [[TraverseQuery]]). Seed count is capped at
-    * `caps.maxSeeds` (≤ 10) and each walk is edge-budgeted, so the
-    * sequential per-seed loop is bounded work even at cluster scale.
+  /** Multi-seed reachability with the semantics of independent per-seed
+    * walks merged and deduplicated (see [[TraverseQuery]]), run as ONE
+    * seed-tagged walk: every frame of the walk carries the seed's index,
+    * each seed keeps its own edge budget and its own visited set, and a
+    * hop costs the same jobs for ten seeds as for one. Seed count is
+    * capped at `caps.maxSeeds` (≤ 10).
     */
   def traverseQuery(q: TraverseQuery): GraphOutput = {
     val hops = caps.narrowHops(q.hops)
@@ -337,32 +345,14 @@ final class GraphReader(
       q.seeds.map { case (t, f) => t -> anchorIds(t, None, Some(f)) } ++
         q.seedIds.map { case (t, id) => t -> anchorIds(t, Some(id), None) }
     if (anchors.isEmpty) return GraphOutput.empty
-    val spark = anchors.head._2.sparkSession
-    withTimeout(spark) {
-      // the walks are INDEPENDENT (reference conn.py:791-830 loops them
-      // serially; their results merge commutatively), so run them
-      // concurrently — at maxSeeds ≤ 10 and hops ≤ 3 a serial loop costs
-      // up to 30 sequential job rounds of pure latency. Each future
-      // thread re-joins the caller's job group so the timeout cancel
-      // reaches every walk's jobs (localProperties don't cross pooled
-      // executor threads).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val sc = spark.sparkContext
-      val group = Option(sc.getLocalProperty("spark.jobGroup.id"))
-      val futures = anchors.map { case (t, a) => Future {
-        group.foreach(g =>
-          sc.setJobGroup(g, "graft traverse walk", interruptOnCancel = true))
-        walk(t, a, hops, q.direction, q.relations, budget, q.edgeFilter)
-      }}
-      val walks = futures.map(Await.result(_, Duration.Inf))
-      val merged = walks.map(_._1).reduceLeft(_ unionWith _)
-      // reference container.pick_unique() after the merge (conn.py:829)
-      val dedup = GraphOutput(
-        merged.vertices.map { case (t, df) => t -> df.dropDuplicates() },
-        merged.edges.map { case (k, df) => k -> df.dropDuplicates() })
-      finish(dedup, walks.flatMap(_._2))
+    withTimeout(anchors.head._2.sparkSession) {
+      val (out, hopFrames) = walk(anchors, hops, q.direction, q.relations, budget,
+        q.edgeFilter)
+      // reference container.pick_unique() after the merge (conn.py:829):
+      // a vertex reached by several seeds is one document (the walk's edge
+      // frames are already deduplicated)
+      finish(out.copy(vertices = out.vertices.map { case (t, df) => t -> df.dropDuplicates() }),
+        hopFrames)
     }
   }
 
@@ -467,30 +457,47 @@ final class GraphReader(
     else spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
-  /** One BFS walk from one anchor — the engine's `bfs_neighbors`
-    * (db/traversal.py:113-243). See [[neighbors]] for the pinned semantics.
+  /** The BFS walk of one or more seeds — the engine's `bfs_neighbors`
+    * (db/traversal.py:113-243), once per seed in the reference. See
+    * [[neighbors]] for the pinned semantics. Every frontier, visited and
+    * edge frame carries the index of the seed whose walk it belongs to
+    * (`_seed`), so all seeds advance together, one set of jobs per hop:
+    *   - visited sets are per seed, so a seed's own walk never holds the
+    *     seed, while another seed's walk may reach it;
+    *   - each seed has its own edge budget, assigned to the hop's branches
+    *     in order; a bounded branch numbers each seed's rows (`_rn`, first
+    *     by far-endpoint identity), so trimming a seed's share of a branch
+    *     is a filter on the persisted frame;
+    *   - the edges of all seeds merge with `dropDuplicates` (pick_unique).
     */
   private def walk(
-      anchorType: String,
-      anchor: DataFrame,
+      anchors: Seq[(String, DataFrame)],
       hops: Int,
       direction: Direction,
       relations: Seq[String],
       edgeLimit: Int,
       edgeFilter: Option[FilterExpr] = None
   ): (GraphOutput, Seq[DataFrame]) = {
-    // visited / frontier are Map[vertexType -> DataFrame of id columns];
-    // visited only ever gains HYDRATABLE ids (the anchor aside) — a
-    // dangling endpoint is re-attempted if reached again, like the
+    // visited / frontier are Map[vertexType -> DataFrame of (id columns,
+    // seed)]; visited only ever gains HYDRATABLE ids (the anchors aside) —
+    // a dangling endpoint is re-attempted if reached again, like the
     // reference re-running its empty hydration fetch
     def idCols(t: String) = schema.vertex(t).idColumns
-    val anchorSet = localize(anchor.distinct())
-    var visited: Map[String, DataFrame] = Map(anchorType -> anchorSet)
+    def tagged(t: String) = idCols(t) :+ SeedCol
+    // an anchor frame holds at most one row (see anchorIds)
+    val anchorSets: Map[String, DataFrame] = anchors.zipWithIndex.groupBy(_._1._1)
+      .map { case (t, seeds) =>
+        t -> localize(seeds.map { case ((_, a), i) => a.withColumn(SeedCol, lit(i)) }
+          .reduceLeft(_.unionByName(_)))
+      }
+    var visited = anchorSets
     var frontier = visited
     var collectedEdges = Map.empty[EdgeKey, DataFrame]
     val hopFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val unbounded = edgeLimit >= Int.MaxValue / 2
-    var budget = edgeLimit
+    val budget = Array.fill(anchors.size)(edgeLimit) // per seed, in seed order
+    // a per-seed amount as a column: element `_seed` of an array literal
+    def perSeed(xs: Seq[Long]) = typedLit(xs).getItem(col(SeedCol))
 
     def vertexCollection(t: String): Option[DataFrame] =
       try Some(vertexDf(t))
@@ -507,14 +514,16 @@ final class GraphReader(
     final case class Branch(key: EdgeKey, toType: String, toPrefix: String,
         joined: DataFrame)
 
-    for (_ <- 1 to hops if frontier.nonEmpty && (unbounded || budget > 0)) {
+    for (_ <- 1 to hops if frontier.nonEmpty && (unbounded || budget.exists(_ > 0))) {
       var nextFrontier = Map.empty[String, DataFrame]
       var newEdges = Map.empty[EdgeKey, DataFrame]
       val branches = scala.collection.mutable.ArrayBuffer.empty[Branch]
       val hopFar = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
 
+      // the edge collection is read only when the frontier holds its
+      // from-type
       def expand(e: EdgeDef, fromType: String, fromPrefix: String, toType: String, toPrefix: String): Unit =
-        frontier.get(fromType).zip(edgeDf(e.key)).foreach { case (front, edf0) =>
+        for (front <- frontier.get(fromType); edf0 <- edgeDf(e.key)) {
           // edge filters constrain which edges are traversed, as in the
           // reference's per-hop edge fetch (db/traversal.py:121-204). The
           // filter applies to EVERY traversed edge type; a row lacking a
@@ -529,20 +538,32 @@ final class GraphReader(
             case None => edf0
           }
           val keys = idCols(fromType)
-          // truncation beyond the remaining budget keeps an arbitrary
-          // subset — matching the reference, whose truncation order is
-          // backend-dependent (db/traversal.py:36). The limited frame is
-          // persisted ONCE and both the edge set and the frontier derive
-          // from it: two independent materializations of an unordered limit
-          // could pick different subsets (dangling endpoints).
-          // GlobalLimit funnels through ONE partition — skip it entirely
-          // when the caller disabled the cap (huge sentinel), so uncapped
-          // traversals keep their parallelism.
           val expanded = edf.join(
             broadcast(front.withColumnsRenamed(keys.map(k => k -> s"$fromPrefix$k").toMap)),
             keys.map(k => s"$fromPrefix$k"), "inner")
+          // truncation beyond a seed's remaining budget keeps its rows
+          // first by far-endpoint identity (the reference's truncation
+          // order is backend-dependent, db/traversal.py:36). The ranked
+          // frame is persisted ONCE and both the edge set and the frontier
+          // derive from it. The literal bound on the rank lets Spark cut
+          // each seed's rows per partition before the shuffle (a partial
+          // WindowGroupLimit, for budgets up to its threshold). At most
+          // the seeds' budgets survive, so the frame is kept as ONE
+          // partition: every consumer then reads it in one task. The
+          // unbounded sentinel skips the ranking, so uncapped traversals
+          // keep their parallelism.
           val joined = (if (unbounded) expanded
-            else expanded.limit(budget)).persist(lvl)
+            else {
+              val far = idCols(toType).map(k => s"$toPrefix$k")
+              val rest = edf.schema.fields.collect {
+                case f if RowOrdering.isOrderable(f.dataType) && !far.contains(f.name) => f.name
+              }
+              val w = Window.partitionBy(SeedCol).orderBy((far ++ rest).map(col): _*)
+              expanded.withColumn(RankCol, row_number().over(w))
+                .where(col(RankCol) <= budget.max &&
+                  col(RankCol) <= perSeed(budget.toSeq.map(_.toLong)))
+                .coalesce(1)
+            }).persist(lvl)
           hopFrames += joined
           branches += Branch(e.key, toType, toPrefix, joined)
         }
@@ -570,40 +591,46 @@ final class GraphReader(
       }
 
       // materialize every branch's persisted frame in ONE job (a union of
-      // 1-projections): the branches run in parallel inside a single job
-      // DAG instead of serially inside the per-type localize collects —
-      // per-hop wall time becomes max(branch) + one job overhead rather
-      // than sum(branch).
-      if (branches.nonEmpty)
-        branches.map(_.joined.select(lit(1).as("one"))).reduce(_.union(_)).count(): Unit
+      // narrow projections): the branches run in parallel inside a single
+      // job DAG — per-hop wall time is max(branch) + one job overhead
+      // rather than sum(branch). A bounded walk takes its per-(branch,
+      // seed) row counts from the same job; the unbounded path counts
+      // nothing.
+      val counts: Map[(Int, Int), Long] =
+        if (branches.isEmpty) Map.empty
+        else if (unbounded) {
+          branches.map(_.joined.select(lit(1).as("one"))).reduce(_.union(_)).count(): Unit
+          Map.empty
+        } else branches.zipWithIndex
+          .map { case (b, i) => b.joined.select(lit(i).as("_branch"), col(SeedCol)) }
+          .reduce(_.union(_)).groupBy("_branch", SeedCol).count().collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
 
-      // global edge budget (reference edge_count, traversal.py:173-177,
+      // per-seed edge budget (reference edge_count, traversal.py:173-177,
       // 202-203), assigned to branches IN ORDER like the reference's
-      // sequential edge loop — a branch past the exhaustion point
-      // contributes nothing, a straddling branch is trimmed. Counts come
-      // from the already-persisted frames (cache-local); the unbounded
-      // path never counts at all.
-      branches.foreach { b =>
+      // sequential edge loop — a branch past a seed's exhaustion point
+      // contributes none of that seed's rows, a straddling branch is
+      // trimmed to the seed's remainder.
+      branches.zipWithIndex.foreach { case (b, i) =>
         val frame =
           if (unbounded) b.joined
           else {
-            val n = b.joined.count()
-            val take = math.min(n, math.max(budget, 0).toLong)
-            budget -= take.toInt
-            if (take == n) b.joined
-            else if (take == 0L) null
-            else {
-              val t = b.joined.limit(take.toInt).persist(lvl)
-              hopFrames += t
-              t.count(): Unit // pin the subset before both consumers read it
+            val n = budget.indices.map(s => counts.getOrElse((i, s), 0L))
+            val take = budget.indices.map { s =>
+              val t = math.min(n(s), budget(s).toLong)
+              budget(s) -= t.toInt
               t
             }
+            if (take == n) b.joined
+            else if (take.forall(_ == 0L)) null
+            else b.joined.where(col(RankCol) <= perSeed(take))
           }
         if (frame != null) {
+          val edges = frame.drop(SeedCol, RankCol)
           newEdges += b.key -> newEdges.get(b.key)
-            .map(_.unionByName(frame, true)).getOrElse(frame)
+            .map(_.unionByName(edges, true)).getOrElse(edges)
           hopFar += b.toType -> frame.select(
-            idCols(b.toType).map(k => col(s"${b.toPrefix}$k").as(k)): _*).distinct()
+            idCols(b.toType).map(k => col(s"${b.toPrefix}$k").as(k)) :+ col(SeedCol): _*)
         }
       }
 
@@ -612,7 +639,7 @@ final class GraphReader(
       // edge-row ids (traversal.py:227-235)
       hopFar.groupBy(_._1).foreach { case (t, fars) =>
         val far = fars.map(_._2).reduceLeft(_.union(_)).distinct()
-        val unseen = visited.get(t).map(v => far.join(v, idCols(t), "left_anti")).getOrElse(far)
+        val unseen = visited.get(t).map(v => far.join(v, tagged(t), "left_anti")).getOrElse(far)
         val hydratable = vertexCollection(t) match {
           case Some(v) => unseen.join(v.select(idCols(t).map(col): _*), idCols(t), "left_semi")
           case None    => unseen.limit(0)
@@ -621,10 +648,10 @@ final class GraphReader(
       }
 
       // localize each hop's small frontier set (≤ edgeLimit rows per
-      // expand): later hops, hydration, and the element-cap count reuse it
-      // with a depth-0 plan. A frontier above the cap stays distributed and
-      // is persisted instead (re-evaluation through the limit would
-      // otherwise pick a different subset).
+      // expand and seed): later hops, hydration, and the element-cap count
+      // reuse it with a depth-0 plan. A frontier above the cap stays
+      // distributed and is persisted instead (re-evaluation through the
+      // budget filter would otherwise be recomputed per consumer).
       nextFrontier = nextFrontier.map { case (t, df) =>
         // persist BEFORE probing: an over-cap frontier's probe partitions
         // land in the cache and its consumers reuse them, instead of the
@@ -640,21 +667,23 @@ final class GraphReader(
         k -> Seq(collectedEdges.get(k), newEdges.get(k)).flatten
           .reduceLeft(_.unionByName(_, true)).dropDuplicates()
       }.toMap
+      // the next frontier is distinct and disjoint from what was visited
       visited = (visited.keySet ++ nextFrontier.keySet).map { t =>
-        t -> Seq(visited.get(t), nextFrontier.get(t)).flatten.reduceLeft(_.union(_)).distinct()
+        t -> Seq(visited.get(t), nextFrontier.get(t)).flatten.reduceLeft(_.union(_))
       }.toMap
       frontier = nextFrontier
     }
 
     // far-endpoint hydration (traversal.py:227-234, 412-433): project the
-    // visited id sets back onto the full vertex docs via semi-joins. The
-    // ANCHOR is excluded — the result container holds what was REACHED
-    // (the reference never appends the anchor doc; a cycle back to it is
-    // caught by the visited set). A type with no stored collection
-    // contributes no documents, exactly like the reference's failed
-    // hydration fetch.
+    // visited id sets back onto the full vertex docs via semi-joins. Each
+    // seed's ANCHOR is excluded from its own walk — the result container
+    // holds what was REACHED (the reference never appends the anchor doc;
+    // a cycle back to it is caught by the visited set). A type with no
+    // stored collection contributes no documents, exactly like the
+    // reference's failed hydration fetch.
     val hydrated = visited.flatMap { case (t, ids) =>
-      val reached = if (t == anchorType) ids.join(anchorSet, idCols(t), "left_anti") else ids
+      val reached = anchorSets.get(t)
+        .fold(ids)(a => ids.join(a, tagged(t), "left_anti")).drop(SeedCol)
       vertexCollection(t).map(v => t -> v.join(reached, idCols(t), "left_semi"))
     }
     (GraphOutput(hydrated, collectedEdges), hopFrames.toSeq)
@@ -662,6 +691,12 @@ final class GraphReader(
 }
 
 object GraphReader {
+  /** Walk-internal columns: the seed a row belongs to, and a bounded
+    * branch's per-seed row number.
+    */
+  private val SeedCol = "_seed"
+  private val RankCol = "_rn"
+
   /** BFS id-set localization threshold: below it, frontier/visited sets
     * collect to a LocalRelation each hop (plan-depth reset); above it they
     * stay distributed. 100k ids ≈ a few MB — far past any caps-lattice

@@ -1,6 +1,7 @@
 package graft.store
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,6 +26,16 @@ import graft.graph.GraphOutput
   *  - `INDEX.json` manifest mirroring the reference's INDEX.json
   *    (layout.py:23-120).
   *
+  * Reads of a collection's current version are memoized per instance: one
+  * entry per collection dir holds (version, pointer stamp, DataFrame),
+  * where the stamp is the `_CURRENT` file's modification time and file
+  * key. Every read still re-reads `_CURRENT`; the entry is reused only
+  * while both the version and the stamp are unchanged, so a flip by any
+  * writer, or a root deleted and rewritten at the same version number, is
+  * seen by the next read. A hit costs no Spark job (a fresh
+  * `spark.read.parquet` lists the files and infers the schema in one);
+  * the data itself is still scanned on every action.
+  *
   * Upsert semantics ("Explicit identities", reference README): writing a
   * batch merges on the vertex identity — existing docs are updated
   * field-wise (later wins), new docs inserted. Implemented as
@@ -48,6 +59,8 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
       */
     val buckets: Option[Int] = None) {
 
+  import GraphStore.{Loaded, Stamp}
+
   def this(root: String, schema: GraphSchema, spark: SparkSession) =
     this(root, schema, spark, None)
 
@@ -66,10 +79,39 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
     s"graft_${tag(root)}_${collection.replaceAll("[^A-Za-z0-9]", "_")}_${tag(collection)}_v$v"
   }
 
-  private def currentVersion(dir: String): Option[Int] = {
+  /** The `_CURRENT` pointer: version and stamp (modification time, file
+    * key). The attributes are read BEFORE the contents: a flip between the
+    * two pairs the new version with the old stamp, which the next read
+    * sees as a change (the other order could pin an old version to the new
+    * stamp). A flip replaces the file, so its file key changes too.
+    */
+  private def pointer(dir: String): Option[(Int, Stamp)] = {
     val p = Paths.get(dir, "_CURRENT")
-    if (Files.exists(p)) Try(new String(Files.readAllBytes(p)).trim.toInt).toOption
-    else None
+    Try {
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      new String(Files.readAllBytes(p)).trim.toInt -> (a.lastModifiedTime -> a.fileKey)
+    }.toOption
+  }
+
+  private def currentVersion(dir: String): Option[Int] = pointer(dir).map(_._1)
+
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
+
+  /** The current version of a collection dir and its relation, served from
+    * the memo while the pointer is unchanged (see the class doc). Safe to
+    * call concurrently: racing misses may both read the version, and
+    * whichever entry lands last is checked against the pointer on the next
+    * read like any other.
+    */
+  private def current(dir: String): Option[(Int, DataFrame)] = pointer(dir).map {
+    case (v, stamp) =>
+      val hit = loaded.get(dir)
+      if (hit != null && hit.version == v && hit.stamp == stamp) v -> hit.df
+      else {
+        val df = spark.read.parquet(s"$dir/v$v")
+        loaded.put(dir, Loaded(v, stamp, df))
+        v -> df
+      }
   }
 
   /** Atomic pointer flip: write a temp file, then ATOMIC_MOVE over
@@ -92,17 +134,16 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
     */
   private val GenCol = "_gen"
 
-  def readVertices(name: String): Option[DataFrame] =
-    currentVersion(vdir(name)).map { v =>
-      // prefer the bucketed catalog table (exchange-free join scans); fall
-      // back to the path when this session didn't write it
-      val tbl = tableName(name, v)
-      if (buckets.isDefined && spark.catalog.tableExists(tbl)) spark.table(tbl)
-      else spark.read.parquet(s"${vdir(name)}/v$v")
-    }
+  def readVertices(name: String): Option[DataFrame] = {
+    // prefer the bucketed catalog table (exchange-free join scans); fall
+    // back to the path when this session didn't write it
+    val bucketed = if (buckets.isEmpty) None
+      else currentVersion(vdir(name)).map(tableName(name, _))
+        .filter(spark.catalog.tableExists).map(spark.table)
+    bucketed.orElse(current(vdir(name)).map(_._2))
+  }
 
-  def readEdges(k: EdgeKey): Option[DataFrame] =
-    currentVersion(edir(k)).map(v => spark.read.parquet(s"${edir(k)}/v$v"))
+  def readEdges(k: EdgeKey): Option[DataFrame] = current(edir(k)).map(_._2)
 
   def vertices(name: String): DataFrame =
     readVertices(name).getOrElse(
@@ -118,8 +159,8 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
   def upsertVertices(name: String, incoming: DataFrame): UpsertReport = {
     val vdef = schema.vertex(name)
     val dir = vdir(name)
-    val cur = currentVersion(dir)
-    val next = cur.getOrElse(-1) + 1
+    val cur = current(dir)
+    val next = cur.fold(-1)(_._1) + 1
     // Drop-unkeyed accounting (reference `_drop_unkeyed_docs`,
     // graflo/hq/db_writer.py:206-238): a doc carrying NONE of its vertex's
     // identity fields cannot be upserted — every backend would invent a key
@@ -146,8 +187,8 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
     val neu = observed.withColumn(GenCol, monotonically_increasing_id() + 1L)
     val merged = cur match {
       case None => MergeOps.mergeDocBasis(neu, vdef.idColumns, GenCol)
-      case Some(v) =>
-        val existing = spark.read.parquet(s"$dir/v$v").withColumn(GenCol, lit(0L))
+      case Some((_, stored)) =>
+        val existing = stored.withColumn(GenCol, lit(0L))
         MergeOps.mergeDocBasis(
           existing.unionByName(neu, allowMissingColumns = true), vdef.idColumns, GenCol)
     }
@@ -172,7 +213,7 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
           .saveAsTable(tableName(name, next))
         // retire the previous version's catalog entry (external table drop
         // keeps the files; version dirs remain the durable format)
-        cur.foreach(p => spark.sql(s"DROP TABLE IF EXISTS ${tableName(name, p)}"))
+        cur.foreach(p => spark.sql(s"DROP TABLE IF EXISTS ${tableName(name, p._1)}"))
       case None =>
         merged.repartition(vdef.idColumns.map(col): _*)
           .write.mode("overwrite").parquet(s"$dir/v$next")
@@ -191,12 +232,11 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
   def insertEdges(k: EdgeKey, incoming: DataFrame): Unit = {
     val edef = schema.edgeByKey.getOrElse(k, EdgeDef(k.source, k.target, k.relation))
     val dir = edir(k)
-    val cur = currentVersion(dir)
-    val next = cur.getOrElse(-1) + 1
+    val cur = current(dir)
+    val next = cur.fold(-1)(_._1) + 1
     val all = cur match {
-      case None    => incoming
-      case Some(v) => spark.read.parquet(s"$dir/v$v")
-        .unionByName(incoming, allowMissingColumns = true)
+      case None              => incoming
+      case Some((_, stored)) => stored.unionByName(incoming, allowMissingColumns = true)
     }
     val dedupCols = edef.identities.flatMap {
       case "source" => schema.vertex(k.source).idColumns.map("src_" + _)
@@ -300,7 +340,7 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
     require(targetBytes > 0, "targetBytes must be positive")
     val vdef = schema.vertex(name)
     val dir = vdir(name)
-    currentVersion(dir).flatMap { cur =>
+    current(dir).flatMap { case (cur, stored) =>
       val live = Paths.get(dir, s"v$cur")
       import scala.jdk.CollectionConverters._
       val s = Files.list(live)
@@ -313,8 +353,7 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
       if (sizes.size <= nOut) None
       else {
         val next = cur + 1
-        spark.read.parquet(live.toString)
-          .repartition(nOut, vdef.idColumns.map(col): _*)
+        stored.repartition(nOut, vdef.idColumns.map(col): _*)
           .write.mode("overwrite").parquet(s"$dir/v$next")
         flip(dir, next)
         Some((sizes.size, nOut))
@@ -530,6 +569,14 @@ final class GraphStore(val root: String, val schema: GraphSchema, spark: SparkSe
     val keys = schema.vertex(name).idColumns
     probe.join(vertices(name), keys, "left_anti")
   }
+}
+
+object GraphStore {
+  /** `_CURRENT`'s modification time and file key. */
+  private type Stamp = (FileTime, AnyRef)
+
+  /** A memoized current-version relation (see [[GraphStore]]). */
+  private final case class Loaded(version: Int, stamp: Stamp, df: DataFrame)
 }
 
 /** One collection's upsert accounting (the stats behind the reference's

@@ -96,16 +96,41 @@ class LocalizeGateSpec extends SparkSpec {
   }
 
   test("multi-seed traverse: distributed branch identical (per-seed budgets intact)") {
-    val q = TraverseQuery(
-      seeds = Seq("u" -> FilterExpr.eq("id", "u0"), "w" -> FilterExpr.eq("id", "w1")),
-      hops = 2, edgeLimit = Some(Int.MaxValue))
-    val local = reader(GraphReader.DefaultLocalizeCap).traverseQuery(q)
-    val dist  = reader(0).traverseQuery(q)
-    assert(outSignature(local) == outSignature(dist))
+    def single(r: GraphReader, s: (String, FilterExpr), limit: Int) =
+      r.neighbors(NeighborQuery(s._1, s._2, hops = 2, edgeLimit = Some(limit)))
+    def merged(gs: Seq[graft.graph.GraphOutput]) = {
+      val sigs = gs.map(outSignature)
+      def union(xs: Seq[Map[String, Seq[String]]]) =
+        xs.flatMap(_.keys).distinct.map(k => k -> xs.flatMap(_.getOrElse(k, Nil)).distinct.sorted).toMap
+      (union(sigs.map(_._1)), union(sigs.map(_._2)))
+    }
+    val unbounded = Seq("u" -> FilterExpr.eq("id", "u0"), "w" -> FilterExpr.eq("id", "w1"))
+    // budget 12 over 2 hops: u1's walk needs 3 + 6 edge rows and never
+    // runs out; w4's needs 6 + 14 and runs out in hop 2, inside the branch
+    // that reaches u1 (w4 — v4 → u1). u1's walk reaches w4 (u1 → v4 — w4).
+    val bounded = Seq("u" -> FilterExpr.eq("id", "u1"), "w" -> FilterExpr.eq("id", "w4"))
+    Seq(unbounded -> Int.MaxValue, bounded -> 12).foreach { case (seeds, limit) =>
+      val q = TraverseQuery(seeds, hops = 2, edgeLimit = Some(limit))
+      val outs = Seq(GraphReader.DefaultLocalizeCap, 0).map { cap =>
+        val r = reader(cap)
+        val out = outSignature(r.traverseQuery(q))
+        // the tagged walk equals the reference's independent per-seed walks
+        assert(out == merged(seeds.map(single(r, _, limit))), s"localizeCap $cap, limit $limit")
+        out
+      }
+      assert(outs(0) == outs(1))
+    }
+    val r = reader(GraphReader.DefaultLocalizeCap)
+    // w4 ran out of budget, u1 did not
+    assert(outSignature(single(r, bounded(0), 12)) == outSignature(single(r, bounded(0), Int.MaxValue)))
+    assert(outSignature(single(r, bounded(1), 12)) != outSignature(single(r, bounded(1), Int.MaxValue)))
+    // each seed is in the result, reached by the other seed's walk
+    val out = outSignature(r.traverseQuery(TraverseQuery(bounded, hops = 2, edgeLimit = Some(12))))
+    assert(out._1("u").contains("u1") && out._1("w").contains("w4"))
   }
 
   test("bounded edge budget: truncation point agrees across branches") {
-    // a small budget forces the per-hop limit path; the deterministic
+    // a small budget forces the per-hop budget trim; the far-identity
     // ordering inside the walk must make both branches truncate identically
     val q = NeighborQuery("u", FilterExpr.eq("id", "u3"), hops = 2,
       edgeLimit = Some(7))

@@ -109,4 +109,23 @@ class QuerySpec extends SparkSpec {
       "a" -> FilterExpr.eq("id", "a1"), "c" -> FilterExpr.eq("id", "c2")), hops = 1))
     assert(ok.vertices("b").count() == 3 - 1) // b1,b2 from a1; b2 from c2 (dedup)
   }
+
+  test("a hop reads an edge collection only when the frontier holds its from-type") {
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[EdgeKey]()
+    val counting = new GraphReader(schema, vs(_), k => { calls.add(k); es.get(k) })
+    import scala.jdk.CollectionConverters._
+    def walked(hops: Int): Seq[EdgeKey] = {
+      calls.clear()
+      counting.neighbors(NeighborQuery("a", FilterExpr.eq("id", "a1"), hops = hops,
+        direction = Direction.Out))
+      calls.asScala.toSeq
+    }
+    val ab = EdgeKey("a", "b", "ab"); val bc = EdgeKey("b", "c", "bc")
+    // hop 1's frontier holds only a: ab from its source side, bc not at all
+    // (an eager walk reads both edges from both sides: 4 reads per hop)
+    assert(walked(1) == Seq(ab))
+    // hop 2's frontier holds only b: ab from its target side, bc from its
+    // source side; the undirected bc's c side is not read
+    assert(walked(2) == Seq(ab, ab, bc))
+  }
 }

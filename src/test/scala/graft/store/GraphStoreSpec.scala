@@ -3,6 +3,7 @@ package graft.store
 import graft.SparkSpec
 import graft.model._
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.Files
 
 class GraphStoreSpec extends SparkSpec {
@@ -125,5 +126,114 @@ class GraphStoreSpec extends SparkSpec {
     val e = store.edges(EdgeKey("p", "q", "rel")).collect().head
     assert(e.getAs[Long]("src_id") == 1L) // resolved name→primary id
     assert(Files.exists(java.nio.file.Paths.get(root, "INDEX.json")))
+  }
+
+  // ------------------------------------------------ current-version memo
+
+  private val rel = EdgeKey("p", "q", "rel")
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a marker job run after `body` is seen, every job
+    * `body` started has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val marker = s"graft-store-spec-barrier-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(d => { assert(d != null, "listener saw no marker job"); d })
+        .takeWhile(_ != marker).size
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** The version dir every file of a read comes from. */
+  private def versionOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => java.nio.file.Paths.get(new java.net.URI(f)).getParent
+      .getFileName.toString).toSet
+
+  private def ids(store: GraphStore): Seq[Long] = {
+    import spark.implicits._
+    store.vertices("p").select("id").as[Long].collect().toSeq.sorted
+  }
+
+  test("memo: repeated reads of an unchanged version launch no Spark job") {
+    import spark.implicits._
+    val store = newStore()
+    store.upsertVertices("p", Seq((1L, "a", 1.0)).toDF("id", "name", "score"))
+    store.insertEdges(rel, Seq((1L, 10L)).toDF("src_id", "dst_qid"))
+    store.vertices("p"); store.readEdges(rel) // first reads of these versions
+    assert(jobsDuring((1 to 3).foreach { _ =>
+      store.vertices("p"); store.readVertices("p"); store.edges(rel); store.readEdges(rel)
+    }) == 0)
+    assert(store.vertices("p") eq store.vertices("p"))
+    // a new instance has no memo: its first read pays the file listing and
+    // schema inference that a hit skips
+    assert(jobsDuring(new GraphStore(store.root, schema, spark).vertices("p")) > 0)
+  }
+
+  test("memo: the next read sees every write that flips a version") {
+    import spark.implicits._
+    val store = newStore()
+    store.upsertVertices("p", Seq((1L, "a", 1.0)).toDF("id", "name", "score"))
+    assert(ids(store) == Seq(1L) && versionOf(store.vertices("p")) == Set("v0"))
+    store.upsertVertices("p", Seq((2L, "b", 2.0)).toDF("id", "name", "score"))
+    assert(ids(store) == Seq(1L, 2L) && versionOf(store.vertices("p")) == Set("v1"))
+    store.applyChanges("p", Seq((3L, "c", "upsert", 1L), (1L, "a", "delete", 1L))
+      .toDF("id", "name", "op", "seq"), "op", "seq")
+    assert(ids(store) == Seq(2L, 3L) && versionOf(store.vertices("p")) == Set("v2"))
+    store.overwriteVertices("p", (5L to 44L).map(i => (i, s"n$i", 0.0))
+      .toDF("id", "name", "score").repartition(4))
+    assert(ids(store) == (5L to 44L) && versionOf(store.vertices("p")) == Set("v3"))
+    assert(store.compactVertices("p", targetBytes = 1L << 30).exists(_._2 == 1))
+    assert(ids(store) == (5L to 44L) && versionOf(store.vertices("p")) == Set("v4"))
+    assert(store.vertices("p").inputFiles.length == 1)
+
+    store.insertEdges(rel, Seq((1L, 10L)).toDF("src_id", "dst_qid"))
+    assert(store.edges(rel).count() == 1)
+    store.insertEdges(rel, Seq((2L, 20L)).toDF("src_id", "dst_qid"))
+    assert(store.edges(rel).count() == 2 && versionOf(store.edges(rel)) == Set("v1"))
+    store.overwriteEdges(rel, Seq((3L, 30L)).toDF("src_id", "dst_qid"))
+    assert(store.edges(rel).select("src_id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("memo: a root deleted and rewritten at the same version is seen by another instance") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store-memo").toString
+    val first = new GraphStore(root, schema, spark)
+    first.upsertVertices("p", Seq((1L, "a", 1.0)).toDF("id", "name", "score"))
+    first.insertEdges(rel, Seq((1L, 10L)).toDF("src_id", "dst_qid"))
+    assert(ids(first) == Seq(1L) && first.edges(rel).count() == 1)
+    freshDir(root)
+    val second = new GraphStore(root, schema, spark)
+    second.upsertVertices("p", Seq((7L, "g", 7.0), (8L, "h", 8.0)).toDF("id", "name", "score"))
+    second.insertEdges(rel, Seq((7L, 70L), (8L, 80L)).toDF("src_id", "dst_qid"))
+    assert(versionOf(first.vertices("p")) == Set("v0")) // same version number
+    assert(ids(first) == Seq(7L, 8L))
+    assert(first.edges(rel).select("src_id").as[Long].collect().toSeq.sorted == Seq(7L, 8L))
+  }
+
+  test("memo: vacuum, then read") {
+    import spark.implicits._
+    val store = newStore()
+    (1 to 3).foreach { i =>
+      store.upsertVertices("p", Seq((i.toLong, s"n$i", 0.0)).toDF("id", "name", "score"))
+      assert(ids(store) == (1L to i.toLong))
+    }
+    store.vacuum(keepPrevious = 0)
+    assert(store.vertexVersions("p") == Seq(2))
+    assert(ids(store) == Seq(1L, 2L, 3L))
+    store.upsertVertices("p", Seq((4L, "n4", 0.0)).toDF("id", "name", "score"))
+    store.vacuum(keepPrevious = 0)
+    assert(ids(store) == Seq(1L, 2L, 3L, 4L) && versionOf(store.vertices("p")) == Set("v3"))
   }
 }
