@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Corpus-curation operators for large-scale training-data pipelines
   * (extension surface alongside [[Dedup]]/[[TextAnalysis]]/[[Similarity]]):
@@ -1771,7 +1772,7 @@ object Corpus {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sh = graft.ext.Dedup.explodeShingles(df, idCol, textCol, n)
       .select(col(idCol).as("_id"), col("shingle")).distinct().persist(lvl)
-    var covered = sh.select(col("shingle")).limit(0).localCheckpoint(true)
+    var covered = materialize(sh.select(col("shingle")).limit(0))
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long, Long)]
     var round = 1
     var done = false
@@ -1783,10 +1784,11 @@ object Corpus {
       else {
         val doc = gains.head.get(0)
         val gain = gains.head.getLong(1)
-        covered = covered
+        val (next, c) = materialize(covered
           .unionByName(sh.where(col("_id") === doc).select("shingle"))
-          .distinct().localCheckpoint(true)
-        picks += ((round, doc, gain, covered.count()))
+          .distinct(), count(lit(1)).as("covered"))
+        covered = next
+        picks += ((round, doc, gain, c.getLong(0)))
         round += 1
       }
     }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Large-scale deduplication operators for training-data pipelines —
   * extensions beyond the reference surface (BASELINE.json north star).
@@ -399,11 +400,8 @@ object Dedup {
         struct(col(bCol).as("_src"), col(aCol).as("_dst")))).as("_e"))
       .select(col("_e._src").as("_src"), col("_e._dst").as("_dst"))
       .distinct().persist(lvl)
-    // each round's frame is localCheckpoint'ed (eager): without lineage
-    // truncation the logical plan nests one join deeper per round and
-    // re-analysis blows up long before the data does
-    var labels = nodes.select(col(idCol).as("_id"))
-      .distinct().withColumn("component", col("_id")).localCheckpoint(true)
+    var labels = materialize(nodes.select(col(idCol).as("_id"))
+      .distinct().withColumn("component", col("_id")))
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -422,21 +420,18 @@ object Dedup {
       // rounds instead of O(diameter), which matters both at 100 TB (long
       // chains) and in wall-clock (each round is a fixed-cost Spark job).
       val mapping = propagated.select(col("_id").as("_m_id"), col("component").as("_m_comp"))
-      // carry the previous label INTO the checkpointed frame: the
-      // convergence probe is then a filter over cached data instead of a
-      // join of the last two rounds
-      val next = propagated
+      // carry the previous label through the round: the convergence probe
+      // is then a counter on the round's own materialization job instead
+      // of a join of the last two rounds
+      val (next, c) = materialize(propagated
         .join(mapping, propagated("component") === mapping("_m_id"), "left")
         .select(col("_id"), col("_prev"),
           least(col("component"), coalesce(col("_m_comp"), col("component")))
-            .as("component"))
-        .localCheckpoint(true)
-      val changed = next.where(col("component") =!= col("_prev")).limit(1).count()
+            .as("component")),
+        count(when(col("component") =!= col("_prev"), lit(1))).as("changed"))
       labels = next.drop("_prev")
-      converged = changed == 0
+      converged = c.getLong(0) == 0L
       it += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        Console.err.println(s"[cc] round $it changed=$changed ${System.nanoTime() / 1e9}")
     }
     edges.unpersist()
     // silent partial propagation would split clusters (duplicate canonical

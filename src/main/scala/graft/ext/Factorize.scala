@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Rank-1 alternating least squares — the distributed core of recommender
   * training (r̂_ui = x_u · y_i), in the house exact-integer fixed-point
@@ -39,20 +40,17 @@ object Factorize {
     def bc(df: DataFrame): DataFrame =
       if (nR <= broadcastLimit) broadcast(df) else df
     val s2 = scale * scale
-    var y = r.select(col("i")).distinct().withColumn("y", lit(scale))
-      .localCheckpoint(true)
+    var y = materialize(r.select(col("i")).distinct().withColumn("y", lit(scale)))
     var x: DataFrame = null
     for (_ <- 1 to rounds) {
-      x = r.join(bc(y), Seq("i"))
+      x = materialize(r.join(bc(y), Seq("i"))
         .groupBy("u").agg(sum(col("r") * col("y")).as("_ry"),
           sum(col("y") * col("y")).as("_yy"))
-        .select(col("u"), expr(s"($s2 * _ry) div _yy").as("x"))
-        .localCheckpoint(true)
-      y = r.join(bc(x), Seq("u"))
+        .select(col("u"), expr(s"($s2 * _ry) div _yy").as("x")))
+      y = materialize(r.join(bc(x), Seq("u"))
         .groupBy("i").agg(sum(col("r") * col("x")).as("_rx"),
           sum(col("x") * col("x")).as("_xx"))
-        .select(col("i"), expr(s"($s2 * _rx) div _xx").as("y"))
-        .localCheckpoint(true)
+        .select(col("i"), expr(s"($s2 * _rx) div _xx").as("y")))
     }
     r.unpersist(blocking = false)
     (x.withColumnRenamed("u", userCol), y.withColumnRenamed("i", itemCol))

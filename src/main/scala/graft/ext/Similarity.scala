@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Approximate-nearest-neighbor / similarity search over an embedding column
   * (`array<float>`) — training-data-pipeline extension (BASELINE.json).
@@ -261,9 +262,8 @@ object Similarity {
     // by the broadcast side) so the tk heap frame can be released NOW;
     // returning a lazy frame would pin tk's cached partitions for the
     // session lifetime across repeated invocations
-    val mined = bestA.join(bestB, Seq("src_id", "tgt_id"))
-      .select(col("src_id"), col("tgt_id"), round(col("margin"), 4).as("margin"))
-      .localCheckpoint(true)
+    val mined = materialize(bestA.join(bestB, Seq("src_id", "tgt_id"))
+      .select(col("src_id"), col("tgt_id"), round(col("margin"), 4).as("margin")))
     tk.unpersist(blocking = false)
     mined
   }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Experiment / inference statistics over exact counts — the A/B-test and
   * independence layer a product-analytics deployment runs on event data.
@@ -1178,10 +1179,9 @@ object Stats {
         .select(col("r"), col("c"), col("n"),
           expr("w * t_r div rs").as("w"))
       val cs = w.groupBy("c").agg(sum("w").as("cs"))
-      w = w.join(broadcast(cs), Seq("c")).join(broadcast(colT), Seq("c"))
+      w = materialize(w.join(broadcast(cs), Seq("c")).join(broadcast(colT), Seq("c"))
         .select(col("r"), col("c"), col("n"),
-          expr("w * t_c div cs").as("w"))
-        .localCheckpoint(true)
+          expr("w * t_c div cs").as("w")))
     }
     cells.unpersist(blocking = false)
     w.select(col("r").as(rowCol), col("c").as(colCol), col("n"),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Histogram-based decision-split finding — the inner kernel of every
   * distributed gradient-boosting / decision-tree trainer (XGBoost
@@ -169,8 +170,7 @@ object Tree {
     // persist ONLY what the two melt passes read: features + label
     val base = df.select(featureCols.map(col) :+
       labelExpr.cast("long").as("_y"): _*).persist(lvl)
-    val rootBest = nodeBest(melt(base, lit("~")), nBins)
-      .localCheckpoint(true) // 1 row
+    val rootBest = materialize(nodeBest(melt(base, lit("~")), nBins)) // 1 row
     val sided = base
       .crossJoin(broadcast(rootBest.select(col("b.f").as("_bf"),
         col("b.bin").as("_sb"), col("b.mn").as("_mn"), col("b.mx").as("_mx"))))
@@ -179,8 +179,7 @@ object Tree {
           .otherwise("R"))
       .drop("_bf", "_sb", "_mn", "_mx")
       .persist(lvl)
-    val childBest = nodeBest(melt(sided, col("_nd")), nBins)
-      .localCheckpoint(true) // 2 rows
+    val childBest = materialize(nodeBest(melt(sided, col("_nd")), nBins)) // 2 rows
     val leaves = sided
       .join(broadcast(childBest.select(col("nd").as("_nd"),
         col("b.f").as("_bf"), col("b.bin").as("_sb"),
@@ -279,11 +278,11 @@ object Tree {
       val (bnt, bst) = (b.getAs[Long]("nt"), b.getAs[Long]("st"))
       val addL = (bsl / bnl) * lrPct / 100 // trunc at each step, like //
       val addR = ((bst - bsl) / (bnt - bnl)) * lrPct / 100
-      cur = cur.withColumn("_p",
-        col("_p") + when(binOfLit(bf) <= bb, addL).otherwise(addR))
-        .localCheckpoint(true)
-      val sse = cur.agg(sum(expr(
-        "((_y - _p) * (_y - _p)) div 10000")).as("s")).head().getLong(0)
+      val (next, c) = materialize(cur.withColumn("_p",
+          col("_p") + when(binOfLit(bf) <= bb, addL).otherwise(addR)),
+        sum(expr("((_y - _p) * (_y - _p)) div 10000")).as("sse"))
+      cur = next
+      val sse = c.getLong(0)
       val (mn, mx) = mnmx(bf)
       val splitValue = BigDecimal(mn + (bb + 1).toDouble * ((mx - mn) / nBins))
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Whole-graph analytics over edge frames — extensions beyond the
   * reference's read-query surface (BFS/traversals live in
@@ -16,10 +17,41 @@ import org.apache.spark.sql.functions._
   * iteration is reproducible to the last unit in any SQL engine. The
   * deliberate cost: each division floors away < 1 unit of mass per edge
   * (bounded drift, identical in every engine).
+  *
+  * Materialize policy: every iterative loop here (and in `graft.ext`)
+  * materializes its per-round frames through [[Rounds.materialize]] — an
+  * eager `localCheckpoint`, NOT `persist`:
+  *   - a cache keeps the symbolic plan of every earlier round inside the
+  *     new frame, so a cache miss (or any post-loop aggregate after
+  *     unpersist) replays the whole iteration history, and the
+  *     broadcast-subquery plans defeat fragment reuse — measured
+  *     superlinear per-round cost on the k-core loop; the checkpoint
+  *     materializes AND severs lineage;
+  *   - the checkpoint runs through AQE, so small exchanges coalesce
+  *     instead of pinning the session's shuffle-partition count the way a
+  *     cache does (measured 16x task-count inflation per round when the
+  *     PageRank frames were persisted), and it exposes REAL size
+  *     statistics to downstream join planning;
+  *   - superseded blocks are freed by the context cleaner once
+  *     unreferenced — no explicit unpersist.
+  * A round's probes (rows, removed, changed, totals) ride the same
+  * checkpoint job as counters instead of separate `count`/`isEmpty` jobs.
+  *
+  * Node keys: the PageRank family and HITS iterate on dense long ids from
+  * [[nodeDict]]; the other loops stay string-keyed — encoding them was
+  * measured slower at bench scale (the dict + encode boundaries break the
+  * single adaptive execution the per-query edge derivation fuses into;
+  * see OPTIMIZATION_r12.md).
   */
 object GraphAlgos {
 
   private val lvlMemDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** Size gate for the loops' broadcast choices: a node- or row-keyed
+    * state frame is broadcast to the edge join while its observed size is
+    * at most this many rows; above it the join shuffles instead.
+    */
+  private[graft] val BroadcastRows = 1000000L
 
   /** Order-preserving dense-long dictionary over a distinct single-column
     * `node` frame: node → nid ∈ [0, n) assigned in LEXICOGRAPHIC node
@@ -34,11 +66,10 @@ object GraphAlgos {
     *
     * Assignment is the scalable two-pass shape: a range sort of the n-row
     * node set, then `zipWithIndex` (per-partition counts + offsets — no
-    * single-task window, no driver collect). The result is eagerly
-    * checkpointed: ~2 small jobs once per algorithm call, amortized over
-    * every iteration that follows.
+    * single-task window, no driver collect). The result is materialized
+    * with its row count n observed in the same job: returns (dict, n).
     */
-  private[graft] def nodeDict(nodes: DataFrame): DataFrame = {
+  private[graft] def nodeDict(nodes: DataFrame): (DataFrame, Long) = {
     val spark = nodes.sparkSession
     val sorted = nodes.select(col("node").cast("string").as("node"))
       .orderBy("node")
@@ -46,16 +77,17 @@ object GraphAlgos {
       org.apache.spark.sql.Row(r.getString(0), i)
     }
     import org.apache.spark.sql.types._
-    spark.createDataFrame(rows, StructType(Seq(
+    val (dict, m) = materialize(spark.createDataFrame(rows, StructType(Seq(
         StructField("node", StringType, nullable = true),
-        StructField("nid", LongType, nullable = false))))
-      .localCheckpoint(true)
+        StructField("nid", LongType, nullable = false)))),
+      count(lit(1)).as("n"))
+    (dict, m.getLong(0))
   }
 
   /** Re-key a (src, dst[, payload…]) edge frame through the dictionary —
     * both endpoints inner-joined against the n-row dict (broadcast under
-    * the caller's node limit; above it these two up-front hash joins are
-    * the price of removing the string width from EVERY later iteration).
+    * [[BroadcastRows]]; above it these two up-front hash joins are the
+    * price of removing the string width from EVERY later iteration).
     * Payload columns pass through untouched.
     */
   private[graft] def encodeEdges(e: DataFrame, dict: DataFrame,
@@ -65,16 +97,6 @@ object GraphAlgos {
     e.join(d.select(col("node").as("src"), col("nid").as("_sid")), Seq("src"))
       .join(d.select(col("node").as("dst"), col("nid").as("_did")), Seq("dst"))
       .select(Seq(col("_sid").as("src"), col("_did").as("dst")) ++ others: _*)
-  }
-
-  /** Same re-keying for a canonical undirected (a, b[, payload…]) frame. */
-  private[graft] def encodeUnd(und: DataFrame, dict: DataFrame,
-      bcDict: Boolean): DataFrame = {
-    val d = if (bcDict) broadcast(dict) else dict
-    val others = und.columns.filterNot(c => c == "a" || c == "b").map(col)
-    und.join(d.select(col("node").as("a"), col("nid").as("_aid")), Seq("a"))
-      .join(d.select(col("node").as("b"), col("nid").as("_bid")), Seq("b"))
-      .select(Seq(col("_aid").as("a"), col("_bid").as("b")) ++ others: _*)
   }
 
   /** Decode an id column back to the node string via the dictionary
@@ -92,127 +114,140 @@ object GraphAlgos {
       .select(outCols.toSeq: _*)
   }
 
+  /** Canonical undirected pairs (a < b) of a directed edge frame:
+    * endpoints cast to string, self-loops dropped, duplicates removed. A
+    * lazy plan — callers fuse it into their own first materialization.
+    */
+  private[graft] def undirectedPairs(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(
+      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
+      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+
+  /** Both orientations (u, v) of canonical (a, b) pairs — per node, its
+    * rows are exactly its neighbors. Lazy, like [[undirectedPairs]].
+    */
+  private[graft] def bothDirections(und: DataFrame): DataFrame =
+    und.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(und.select(col("b").as("u"), col("a").as("v")))
+
+  /** An edge frame on dictionary ids: `e` is (src, dst[, w]) longs, `dict`
+    * decodes them, `n` is the node count, `bc` the broadcast decision.
+    */
+  private[graft] final case class EncodedGraph(e: DataFrame, dict: DataFrame,
+      n: Long, bc: Boolean)
+
+  /** Shared prelude of the PageRank family and [[hitsFixed]]: string
+    * edges (distinct, or with `weightCol` summed per (src, dst) and
+    * non-positive totals dropped), materialized → [[nodeDict]] and n from
+    * its own job → broadcast decision → [[encodeEdges]], materialized.
+    *
+    * Precondition handled here: an edge with a null endpoint is dropped
+    * before the dictionary and the degrees. Null is not a node — counting
+    * it would grow n by one and shift every initial rank, and the encode
+    * join drops the edge anyway.
+    */
+  private[graft] def encodeGraph(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: Option[String] = None): EncodedGraph = {
+    val s = edges.select(Seq(col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst")) ++
+        weightCol.map(w => col(w).cast("long").as("w")): _*)
+      .where(col("src").isNotNull && col("dst").isNotNull)
+    val eStr = materialize(
+      if (weightCol.isEmpty) s.distinct()
+      else s.groupBy("src", "dst").agg(sum(col("w")).as("w")).where(col("w") > 0))
+    val (dict, n) = nodeDict(eStr.select(col("src").as("node"))
+      .union(eStr.select(col("dst"))).distinct())
+    val bc = n <= BroadcastRows
+    EncodedGraph(materialize(encodeEdges(eStr, dict, bc)), dict, n, bc)
+  }
+
+  private def requireRankArgs(iterations: Int, dampingPct: Int): Unit = {
+    require(iterations >= 1, "need at least one iteration")
+    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
+  }
+
+  /** The PageRank family's one iteration loop over an encoded graph: the
+    * nodes where `teleportTo` holds start at `init` and receive the base
+    * mass init·(100−damping)÷100 each iteration ([[rankStep]]); the
+    * others start at and receive 0.
+    */
+  private def rankLoop(g: EncodedGraph, teleportTo: Column, init: Long,
+      iterations: Int, dampingPct: Int): DataFrame = {
+    def atTeleport(v: Long): Column = when(teleportTo, lit(v)).otherwise(lit(0L))
+    val teleport = atTeleport(init * (100L - dampingPct) / 100L)
+    val out = rankOut(g)
+    var ranks = g.dict.select(col("nid").as("node"))
+      .withColumn("rank", atTeleport(init))
+    for (_ <- 1 to iterations)
+      ranks = materialize(rankStep(g, out, ranks, teleport, dampingPct))
+    decodeNode(ranks, g.dict, "node", g.bc)
+  }
+
+  /** Per-source total outgoing weight `out`, materialized: the out-degree,
+    * or Σw when the edges carry a weight column `w`.
+    */
+  private[graft] def rankOut(g: EncodedGraph): DataFrame =
+    materialize(g.e.groupBy("src").agg((
+      if (g.e.columns.contains("w")) sum(col("w")) else count(lit(1))).as("out")))
+
+  /** One PageRank-family iteration: the n-row share table (rank ⋈ the
+    * per-source [[rankOut]] total, both node-keyed) joins the encoded
+    * edges ONCE — a broadcast under [[BroadcastRows]], so the big edge
+    * frame never re-exchanges — then one map-side-combined sum per dst.
+    * The unweighted share is (rank·damping÷100)÷outdeg per source; the
+    * weighted one splits (rank·damping÷100) by w÷W per edge. Exposed so
+    * `PlanAssertSpec` can pin that plan without running a loop.
+    */
+  private[graft] def rankStep(g: EncodedGraph, out: DataFrame,
+      ranks: DataFrame, teleport: Column, dampingPct: Int): DataFrame = {
+    val (shareCols, mass) =
+      if (g.e.columns.contains("w"))
+        (Seq(col("src"), expr(s"(rank * $dampingPct) div 100").as("t"),
+          col("out")), expr("(t * w) div out"))
+      else (Seq(col("src"), expr(s"(rank * $dampingPct div 100) div out").as("m")),
+        col("m"))
+    val share = ranks.withColumnRenamed("node", "src").join(out, Seq("src"))
+      .select(shareCols: _*)
+    val contrib = g.e.join(if (g.bc) broadcast(share) else share, Seq("src"))
+      .groupBy(col("dst").as("node")).agg(sum(mass).as("m"))
+    g.dict.select(col("nid").as("node")).join(contrib, Seq("node"), "left")
+      .select(col("node"), (teleport + coalesce(col("m"), lit(0L))).as("rank"))
+  }
+
   /** Fixed-point PageRank: `iterations` synchronous updates of
     * rank(v) = base + Σ_{u→v} (rank(u)·damping÷100)÷outdeg(u), all in
     * integer micro-units of `scale` total mass. Dangling-node mass is
     * dropped (the standard simplification); `base` is the uniform
-    * teleport share (scale÷n)·(100−damping)÷100.
+    * teleport share (scale÷n)·(100−damping)÷100. Edges with a null
+    * endpoint are dropped first (see [[encodeGraph]]).
     *
-    * Scale shape: one distinct + count for the node set, a degree groupBy,
-    * then per iteration ONE pass over the edges — the per-source outflow
-    * share (rank·damping÷100÷outdeg) is precomputed as an n-row table
-    * (rank ⋈ degree, both keyed by node) and joined to the edges once;
-    * when n fits the broadcast budget (`broadcastNodeLimit`) that join is
-    * a broadcast, so the big edge frame never re-shuffles across
-    * iterations and the dst aggregation partial-combines map-side. Each
-    * iteration's rank frame is persisted so the lineage stays flat (the
-    * iterated-join anti-pattern at scale is lineage blowup, not the joins).
+    * Scale shape: the [[encodeGraph]] prelude and a degree groupBy once,
+    * then per iteration ONE pass over the edges ([[rankStep]]).
     */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, dampingPct: Int = 85,
-      scale: Long = 1000000000000L,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, "need at least one iteration")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, NOT persist: the checkpoint materializes
-    // through AQE (small exchanges coalesce instead of pinning the
-    // session's shuffle-partition count the way a cache does — measured
-    // 16x task-count inflation per round when these frames were persisted)
-    // and exposes REAL size statistics to downstream join planning
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .localCheckpoint(true)
-    // dictionary-encode node keys to dense longs for the loop (see
-    // nodeDict): the equality-only iteration is invariant under any key
-    // bijection, so running it on 8-byte ids and decoding the output is
-    // result-identical while every per-iteration exchange narrows
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
-    val init = scale / n
-    val base = (init * (100L - dampingPct)) / 100L
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (_ <- 1 to iterations) {
-      // n-row share table first (rank ⋈ degree are both node-keyed), then
-      // ONE join against the big edge frame — broadcast below the limit
-      val share = ranks.withColumnRenamed("node", "src").join(deg, Seq("src"))
-        .select(col("src"),
-          expr(s"(rank * $dampingPct div 100) div outdeg").as("m"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      // localCheckpoint (eager), not persist: caching keeps the symbolic
-      // plan of every earlier iteration inside the new frame, and a cache
-      // miss (or any post-loop aggregate after unpersist) replays the full
-      // iteration history — measured superlinear on the k-core loop.
-      // Checkpointing materializes AND severs lineage; superseded blocks
-      // are freed by the context cleaner when unreferenced.
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    // checkpoint blocks free via the context cleaner once unreferenced —
-    // no explicit unpersist needed for eStr/e/deg
-    decodeNode(ranks, dict, "node", bc)
+      scale: Long = 1000000000000L): DataFrame = {
+    requireRankArgs(iterations, dampingPct)
+    val g = encodeGraph(edges, srcCol, dstCol)
+    rankLoop(g, lit(true), scale / g.n, iterations, dampingPct)
   }
 
   /** Weighted PageRank: [[pageRankFixed]] with per-edge weights — each
     * source's outflow divides proportionally to edge weight instead of
     * uniformly (rank·damping÷100)·w_uv ÷ W_u with W_u the source's total
-    * outgoing weight. Same integer fixed-point contract; parallel edges
-    * sum their weights. Caller contract: weight·scale must fit a long
-    * (weights ≤ ~10⁶ at the default scale), the price of exactness.
-    *
-    * Scale shape identical to the unweighted loop: the n-row
-    * (node, outflow, W) table joins the edge frame ONCE per iteration
-    * (broadcast under the limit), the per-edge share is narrow integer
-    * math, and the dst aggregation partial-combines map-side.
+    * outgoing weight. Same integer fixed-point contract, loop and
+    * null-endpoint precondition; parallel edges sum their weights. Caller
+    * contract: weight·scale must fit a long (weights ≤ ~10⁶ at the
+    * default scale), the price of exactness.
     */
   def weightedPageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int, dampingPct: Int = 85,
-      scale: Long = 1000000000000L,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, "need at least one iteration")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .where(col("w") > 0)
-      .localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
-    val init = scale / n
-    val base = (init * (100L - dampingPct)) / 100L
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("wsum"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (_ <- 1 to iterations) {
-      val share = ranks.withColumnRenamed("node", "src").join(wsum, Seq("src"))
-        .select(col("src"), expr(s"(rank * $dampingPct) div 100").as("t"),
-          col("wsum"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .select(col("dst"), expr("(t * w) div wsum").as("m"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    decodeNode(ranks, dict, "node", bc)
+      scale: Long = 1000000000000L): DataFrame = {
+    requireRankArgs(iterations, dampingPct)
+    val g = encodeGraph(edges, srcCol, dstCol, Some(weightCol))
+    rankLoop(g, lit(true), scale / g.n, iterations, dampingPct)
   }
 
   /** DuckDB replay of [[weightedPageRankFixed]], iterations unrolled. */
@@ -249,55 +284,21 @@ object GraphAlgos {
     * by proximity to the seed set — the query-time "related items" /
     * local-graph-feature primitive.
     *
-    * Same scale shape and determinism contract as [[pageRankFixed]]
-    * (n-row share table joined once per iteration against the edge
-    * frame, integer micro-units, per-iteration localCheckpoint).
+    * Same prelude, loop and determinism contract as [[pageRankFixed]].
+    * The seed membership test is an isin over the seeds' dictionary ids (a
+    * |seeds|-row lookup; seeds absent from the graph match nothing).
     */
   def personalizedPageRankFixed(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Seq[String], iterations: Int,
-      dampingPct: Int = 85, scale: Long = 1000000000000L,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
-    require(iterations >= 1, "need at least one iteration")
+      dampingPct: Int = 85, scale: Long = 1000000000000L): DataFrame = {
+    requireRankArgs(iterations, dampingPct)
     require(seeds.nonEmpty, "need at least one seed")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed. The
-    // seed membership test becomes an isin over the seeds' dictionary ids
-    // (a |seeds|-row metadata lookup, like the existing n count — seeds
-    // absent from the graph simply match nothing, exactly as before).
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
-    val init = scale / seeds.length
-    val base = (init * (100L - dampingPct)) / 100L
-    val seedIds = dict.where(col("node").isin(seeds: _*))
+    val g = encodeGraph(edges, srcCol, dstCol)
+    val seedIds = g.dict.where(col("node").isin(seeds: _*))
       .select("nid").collect().map(_.getLong(0)).toSeq
     val isSeed =
       if (seedIds.isEmpty) lit(false) else col("node").isin(seedIds: _*)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank",
-      when(isSeed, lit(init)).otherwise(lit(0L)))
-    for (_ <- 1 to iterations) {
-      val share = ranks.withColumnRenamed("node", "src").join(deg, Seq("src"))
-        .select(col("src"),
-          expr(s"(rank * $dampingPct div 100) div outdeg").as("m"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    decodeNode(ranks, dict, "node", bc)
+    rankLoop(g, isSeed, scale / seeds.length, iterations, dampingPct)
   }
 
   /** Weighted single-source shortest paths, `maxHops` synchronous
@@ -310,55 +311,43 @@ object GraphAlgos {
     * Scale shape: per round ONE keyed join of the current frontier-
     * inclusive distance table against the edges plus a map-side-combinable
     * min groupBy; the distance table is node-keyed (≤ n rows), broadcast
-    * under `broadcastNodeLimit`, so the edge frame never re-shuffles.
-    * Each round persists and drops the superseded cache — flat lineage,
-    * O(1) cached frames. Rounds are a hard cap (the reference's traversal
+    * while its observed row count is under [[BroadcastRows]], so the edge
+    * frame never re-shuffles; that count rides the round's checkpoint job.
+    * String-keyed (see the object scaladoc). Rounds are a hard cap (the reference's traversal
     * hop caps, query/caps.py) — at diameter convergence extra rounds are
     * no-ops but still cost a pass; choose maxHops accordingly.
     */
   def shortestPathsFixed(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, source: String, maxHops: Int,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
+      weightCol: String, source: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // NOTE (round 12): dictionary-encoding this loop's node keys was
-    // implemented and A/B-measured — it LOST locally (the per-query edge
-    // derivation used to fuse into one adaptive execution; the dict +
-    // encode boundaries cost more than narrow keys save at bench scale) —
-    // so the loop stays string-keyed; only the per-round count() job was
-    // folded into the checkpoint via observe. See OPTIMIZATION_r12.md.
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"),
       col(weightCol).cast("long").as("w"))
       .groupBy("src", "dst").agg(min("w").as("w")) // parallel edges: keep lightest
       .persist(lvlMemDisk)
     var dist = Seq((source, 0L)).toDF("node", "dist")
-    var distRows = 1L // known: the seed row (the observed checkpoint count
-    for (r <- 1 to maxHops) { // below keeps this exact every later round)
-      // localCheckpoint severs the per-round lineage (see pageRankFixed);
-      // the row count rides the SAME materialization job via observe
-      // instead of a separate count() job per round
-      val obs = org.apache.spark.sql.Observation(s"sssp_rows_$r")
-      dist = dist.unionByName(relaxRound(e, dist, distRows, broadcastNodeLimit))
-        .groupBy("node").agg(min("dist").as("dist"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      distRows = obs.get("rows").asInstanceOf[Long]
+    var distRows = 1L // the seed row; later rounds count on their checkpoint
+    for (_ <- 1 to maxHops) {
+      val (next, c) = materialize(dist.unionByName(relaxRound(e, dist, distRows))
+        .groupBy("node").agg(min("dist").as("dist")), count(lit(1)).as("rows"))
+      dist = next
+      distRows = c.getLong(0)
     }
     e.unpersist(blocking = false)
     dist
   }
 
   /** One Bellman-Ford relaxation: the node-keyed distance table joins the
-    * edge frame, broadcast while it fits — exposed package-private so
-    * `PlanAssertSpec` can assert the loop's plan invariants (distance side
-    * broadcast under the limit, no Exchange on the cached edge side)
-    * without executing the loop.
+    * edge frame, broadcast while `distRows` ≤ [[BroadcastRows]] — exposed
+    * package-private so `PlanAssertSpec` can assert the loop's plan
+    * invariants (distance side broadcast under the limit, no Exchange on
+    * the cached edge side) without executing the loop.
     */
-  private[graft] def relaxRound(e: DataFrame, dist: DataFrame, distRows: Long,
-      broadcastNodeLimit: Long): DataFrame = {
-    val distSide = if (distRows <= broadcastNodeLimit) broadcast(dist) else dist
+  private[graft] def relaxRound(e: DataFrame, dist: DataFrame,
+      distRows: Long): DataFrame = {
+    val distSide = if (distRows <= BroadcastRows) broadcast(dist) else dist
     e.join(distSide.withColumnRenamed("node", "src"), Seq("src"))
       .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
   }
@@ -397,19 +386,15 @@ object GraphAlgos {
     * (src, dst).
     *
     * Scale shape: per round one keyed join of the edge frame against the
-    * (broadcast-small until it isn't) arrival table + one min groupBy;
-    * `localCheckpoint` severs per-round lineage like the other fixed-point
-    * loops.
+    * arrival table (broadcast while its observed row count is under
+    * [[BroadcastRows]]) + one min groupBy, materialized per round.
     */
   def temporalReachability(edges: DataFrame, srcCol: String, dstCol: String,
-      tsCol: String, source: String, startTime: Long, maxHops: Int,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
+      tsCol: String, source: String, startTime: Long,
+      maxHops: Int): DataFrame = {
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // string-keyed (dictionary encoding measured and rejected — see
-    // shortestPathsFixed note); per-round count() folded into the
-    // checkpoint via observe
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"),
       col(tsCol).cast("long").as("t"))
@@ -417,18 +402,15 @@ object GraphAlgos {
       .persist(lvlMemDisk)
     var arr = Seq((source, startTime)).toDF("node", "arrival")
     var arrRows = 1L
-    for (r <- 1 to maxHops) {
-      val arrSide = if (arrRows <= broadcastNodeLimit) broadcast(arr) else arr
+    for (_ <- 1 to maxHops) {
+      val arrSide = if (arrRows <= BroadcastRows) broadcast(arr) else arr
       val relaxed = e.join(arrSide.withColumnRenamed("node", "src"), Seq("src"))
         .where(col("t") >= col("arrival"))
         .select(col("dst").as("node"), col("t").as("arrival"))
-      // row count observed on the checkpoint job — no separate count()
-      val obs = org.apache.spark.sql.Observation(s"treach_rows_$r")
-      arr = arr.unionByName(relaxed)
-        .groupBy("node").agg(min("arrival").as("arrival"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      arrRows = obs.get("rows").asInstanceOf[Long]
+      val (next, c) = materialize(arr.unionByName(relaxed)
+        .groupBy("node").agg(min("arrival").as("arrival")), count(lit(1)).as("rows"))
+      arr = next
+      arrRows = c.getLong(0)
     }
     e.unpersist(blocking = false)
     arr
@@ -593,28 +575,28 @@ object GraphAlgos {
         when(lowFirst, col("b")).otherwise(col("a")).as("hi"))
   }
 
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val o = orientByDegree(und)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // wedges from a common low endpoint; u < v in oriented order kills the
-    // (u,v)/(v,u) mirror so each triangle closes once
+  /** Every triangle of a degree-oriented edge frame exactly once, as
+    * (lo, u, v): wedges from a common low endpoint, u < v in oriented
+    * order kills the (u,v)/(v,u) mirror, and the closing edge {u, v} may
+    * be oriented either way — probe both directions (positional union:
+    * keep (u, v) column order in BOTH legs).
+    */
+  private def orientedTriangles(o: DataFrame): DataFrame = {
     val wedges = o.select(col("lo"), col("hi").as("u"))
       .join(o.select(col("lo"), col("hi").as("v")), Seq("lo"))
       .where(col("u") < col("v"))
-    // the closing edge {u, v} may be oriented either way — probe both
-    // directions (positional union: keep (u, v) column order in BOTH legs)
-    val tri = wedges.join(
+    wedges.join(
       o.select(col("lo").as("u"), col("hi").as("v"))
         .unionAll(o.select(col("hi").as("u"), col("lo").as("v"))),
       Seq("u", "v"))
-    val out = tri.select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
+  }
+
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val o = orientByDegree(undirectedPairs(edges, srcCol, dstCol))
+      .persist(lvlMemDisk)
+    val out = orientedTriangles(o).select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     out.count(): Unit // materialize before dropping the oriented cache
     o.unpersist(blocking = false)
     out
@@ -657,15 +639,12 @@ object GraphAlgos {
     * Returns (seed, node, dist) for nodes reachable within `maxHops`.
     */
   def multiSourceShortestPaths(edges: DataFrame, srcCol: String,
-      dstCol: String, weightCol: String, seeds: Seq[String], maxHops: Int,
-      broadcastRowLimit: Long = 1000000L): DataFrame = {
+      dstCol: String, weightCol: String, seeds: Seq[String],
+      maxHops: Int): DataFrame = {
     require(seeds.nonEmpty, "need at least one seed")
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // string-keyed (dictionary encoding measured and rejected — see
-    // shortestPathsFixed note); per-round count() folded into the
-    // checkpoint via observe
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"),
       col(weightCol).cast("long").as("w"))
@@ -673,18 +652,14 @@ object GraphAlgos {
       .persist(lvlMemDisk)
     var dist = seeds.distinct.map(s => (s, s, 0L)).toDF("seed", "node", "dist")
     var distRows = seeds.distinct.size.toLong
-    for (r <- 1 to maxHops) {
-      val side = if (distRows <= broadcastRowLimit) broadcast(dist) else dist
+    for (_ <- 1 to maxHops) {
+      val side = if (distRows <= BroadcastRows) broadcast(dist) else dist
       val relaxed = e.join(side.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("seed"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      // localCheckpoint severs the per-round lineage (see pageRankFixed);
-      // the row count rides the checkpoint job via observe
-      val obs = org.apache.spark.sql.Observation(s"mssp_rows_$r")
-      dist = dist.unionByName(relaxed)
-        .groupBy("seed", "node").agg(min("dist").as("dist"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      distRows = obs.get("rows").asInstanceOf[Long]
+      val (next, c) = materialize(dist.unionByName(relaxed)
+        .groupBy("seed", "node").agg(min("dist").as("dist")), count(lit(1)).as("rows"))
+      dist = next
+      distRows = c.getLong(0)
     }
     e.unpersist(blocking = false)
     dist
@@ -743,39 +718,24 @@ object GraphAlgos {
       maxRounds: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     require(maxRounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — the dict
-    // and encode boundaries broke the single adaptive execution this
-    // per-query edge derivation fuses into; see OPTIMIZATION_r12.md)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    // localCheckpoint (eager) rather than persist: each round's frame is
-    // MATERIALIZED AND ITS LINEAGE SEVERED. With plain caching the round
-    // r+1 plan still embeds rounds 0..r symbolically — any cache miss (or
-    // the final aggregate after unpersist) replays the whole iteration
-    // history, and the broadcast-subquery plans defeat fragment reuse —
-    // measured as superlinear per-round cost on this very loop.
-    var e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
+    var e = materialize(bothDirections(undirectedPairs(edges, srcCol, dstCol)))
     var round = 0
     var stable = false
     while (round < maxRounds && !stable) {
       // peel via the REMOVED set: it is small (and empty at convergence),
       // so the anti-join broadcast is tiny and the fixpoint check is a
-      // #nodes-row aggregate, not an edge-frame materialization
-      val removed = e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") < k).select("node")
-        .localCheckpoint(true)
-      if (removed.isEmpty) {
+      // counter on its #nodes-row checkpoint, not an edge-frame pass
+      val (removed, c) = materialize(
+        e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+          .where(col("deg") < k).select("node"),
+        count(lit(1)).as("removed"))
+      if (c.getLong(0) == 0L) {
         stable = true
       } else {
-        e = e
+        e = materialize(e
           .join(broadcast(removed).withColumnRenamed("node", "u"), Seq("u"), "left_anti")
           .join(broadcast(removed).withColumnRenamed("node", "v"), Seq("v"), "left_anti")
-          .select("u", "v")
-          .localCheckpoint(true)
+          .select("u", "v"))
         round += 1
       }
     }
@@ -815,7 +775,7 @@ object GraphAlgos {
     * edges — O(√m) fanout per node regardless of raw degree, so a hub's
     * id-ordered neighborhood can't mint a quadratic wedge blowup), then
     * edges under k−2 drop via anti-join; fixed `maxRounds` budget with an
-    * early `isEmpty` convergence probe, lineage severed per round.
+    * early exit once a round's checkpoint counts no weak edge.
     * Returns surviving (a, b, support) under the FINAL edge set. Support
     * values are orientation-independent (each triangle is found exactly
     * once and credits its three canonical edges), so the unrolled oracle
@@ -825,27 +785,12 @@ object GraphAlgos {
       maxRounds: Int): DataFrame = {
     require(k >= 3, "k must be >= 3")
     require(maxRounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    var e = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    var e = materialize(undirectedPairs(edges, srcCol, dstCol))
     // returns (support frame, oriented-edge cache): the caller unpersists
     // the cache once the support consumer is materialized
     def support(cur: DataFrame): (DataFrame, DataFrame) = {
-      val o = orientByDegree(cur)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // wedges from a common low endpoint; u < v kills the (u,v)/(v,u)
-      // mirror; the closing edge {u, v} may be oriented either way
-      val wedges = o.select(col("lo"), col("hi").as("u"))
-        .join(o.select(col("lo"), col("hi").as("v")), Seq("lo"))
-        .where(col("u") < col("v"))
-      val tri = wedges.join(
-        o.select(col("lo").as("u"), col("hi").as("v"))
-          .unionAll(o.select(col("hi").as("u"), col("lo").as("v"))),
-        Seq("u", "v"))
-      val sup = tri.select(explode(array(
+      val o = orientByDegree(cur).persist(lvlMemDisk)
+      val sup = orientedTriangles(o).select(explode(array(
         struct(least(col("lo"), col("u")).as("a"),
           greatest(col("lo"), col("u")).as("b")),
         struct(least(col("lo"), col("v")).as("a"),
@@ -860,21 +805,20 @@ object GraphAlgos {
     var stable = false
     while (round < maxRounds && !stable) {
       val (sup, oCache) = support(e)
-      val weak = e.join(sup, Seq("a", "b"), "left")
+      val (weak, c) = materialize(e.join(sup, Seq("a", "b"), "left")
         .where(coalesce(col("support"), lit(0L)) < k - 2)
-        .select("a", "b")
-        .localCheckpoint(true)
+        .select("a", "b"), count(lit(1)).as("weak"))
       oCache.unpersist(blocking = false)
-      if (weak.isEmpty) stable = true
+      if (c.getLong(0) == 0L) stable = true
       else {
-        e = e.join(weak, Seq("a", "b"), "left_anti").localCheckpoint(true)
+        e = materialize(e.join(weak, Seq("a", "b"), "left_anti"))
         round += 1
       }
     }
     val (supF, oF) = support(e)
-    val out = e.join(supF, Seq("a", "b"), "left")
-      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
-      .localCheckpoint(true) // materialize so the oriented cache can drop
+    // materialized so the oriented cache can drop
+    val out = materialize(e.join(supF, Seq("a", "b"), "left")
+      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support")))
     oF.unpersist(blocking = false)
     out
   }
@@ -942,31 +886,22 @@ object GraphAlgos {
     * H-index needs the neighbor values ranked, so this operator does pay
     * a per-node window sort each round (unlike [[kCore]]'s pure counts);
     * the tie order inside equal values cannot change max(min(rank, v)),
-    * so the window needs no extra tiebreak. Lineage severed per round.
+    * so the window needs no extra tiebreak. Materialized per round.
     */
   def coreNumbers(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
     import org.apache.spark.sql.expressions.Window
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
-    var h = e.groupBy(col("u").as("node")).agg(count(lit(1)).as("h"))
-      .localCheckpoint(true)
+    val e = materialize(bothDirections(undirectedPairs(edges, srcCol, dstCol)))
+    var h = materialize(e.groupBy(col("u").as("node")).agg(count(lit(1)).as("h")))
     for (_ <- 1 to rounds) {
       val nb = e
         .join(h.withColumnsRenamed(Map("node" -> "u", "h" -> "hu")), Seq("u"))
         .select(col("v").as("node"), col("hu"))
       val w = Window.partitionBy("node").orderBy(col("hu").desc)
-      h = nb.withColumn("rn", row_number().over(w))
+      h = materialize(nb.withColumn("rn", row_number().over(w))
         .groupBy("node")
-        .agg(max(least(col("rn").cast("long"), col("hu"))).as("h"))
-        .localCheckpoint(true)
+        .agg(max(least(col("rn").cast("long"), col("hu"))).as("h")))
     }
     h
   }
@@ -1004,23 +939,15 @@ object GraphAlgos {
     * Scale shape: per round one edge⋈labels join (labels are node-keyed,
     * broadcast-eligible) and two partial-agg groupBys — the per-node
     * argmax is min over a (−count, label) struct, NEVER a window sort.
-    * Round lineage is severed per iteration (see [[pageRankFixed]]).
+    * Materialized per round. String-keyed: a dictionary would have to be
+    * order-preserving, since the tie-break is the smallest label.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // note LPA would additionally need the ORDER-PRESERVING dictionary,
-    // since its tie-break is the smallest label)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true)
-    var labels = e.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
+    val e = materialize(bothDirections(undirectedPairs(edges, srcCol, dstCol)))
+    var labels = materialize(e.select(col("u").as("node")).distinct()
+      .withColumn("label", col("node")))
     for (_ <- 1 to rounds) {
       val neigh = e
         .join(labels.withColumnsRenamed(Map("node" -> "u")), Seq("u"))
@@ -1028,10 +955,9 @@ object GraphAlgos {
         .unionByName(labels) // self-vote
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("c"))
-      labels = neigh.groupBy("node")
+      labels = materialize(neigh.groupBy("node")
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
-        .select(col("node"), col("m.l").as("label"))
-        .localCheckpoint(true)
+        .select(col("node"), col("m.l").as("label")))
     }
     labels
   }
@@ -1072,10 +998,7 @@ object GraphAlgos {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = undirectedPairs(edges, srcCol, dstCol)
     val deg = und.select(col("a").as("node")).unionAll(und.select(col("b")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val tri = triangleCounts(edges, srcCol, dstCol)
@@ -1114,11 +1037,7 @@ object GraphAlgos {
     // anti-join) — materialize the distinct edge set once, the same
     // "adjacency list is an index you build once" shape a real link-
     // prediction pass uses at scale
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = undirectedPairs(edges, srcCol, dstCol).persist(lvlMemDisk)
     val adj = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     val deg = adj.groupBy(col("a").as("w")).agg(count(lit(1)).as("deg"))
     // centers with deg ∈ [2, maxDegree]; quantized contribution per center
@@ -1129,7 +1048,7 @@ object GraphAlgos {
     // aliases carry different projections)
     val wedgeSide = adj.join(centers, adj("a") === centers("w"))
       .select(col("w"), col("b").as("n"), col("_q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val pairs = wedgeSide.as("x").join(wedgeSide.as("y"),
       col("x.w") === col("y.w") && col("x.n") < col("y.n"))
       .select(col("x.n").as("a"), col("y.n").as("b"), col("x._q").as("_q"))
@@ -1154,8 +1073,7 @@ object GraphAlgos {
     * against the (walks × 1)-row frontier — broadcast-sized for any sane
     * walk count — and the argmin is a map-side-combinable min over a
     * (hash, neighbor) struct, so no hop ever sorts or windows the
-    * candidate set. Frontier lineage is severed per hop (localCheckpoint)
-    * — see [[pageRankFixed]].
+    * candidate set. The frontier is materialized per hop.
     */
   /** Walk-kernel edge prep: project, drop self-loops, cache — NO global
     * distinct. Duplicate (src, dst) rows cannot change any hop's outcome:
@@ -1193,10 +1111,9 @@ object GraphAlgos {
           md5(concat_ws(":", col("walk_id"), lit(st.toString), col("dst")))
             .as("h"),
           col("dst").as("d")).as("hd"))
-      frontier = cand.groupBy("walk_id").agg(min(col("hd")).as("m"))
+      frontier = materialize(cand.groupBy("walk_id").agg(min(col("hd")).as("m"))
         .select(col("walk_id"), lit(st.toLong).as("step"),
-          col("m.d").as("node"))
-        .localCheckpoint(true)
+          col("m.d").as("node")))
       out = out.unionByName(frontier)
     }
     e.unpersist(blocking = false)
@@ -1297,19 +1214,15 @@ object GraphAlgos {
     *
     * Scale shape: each round is one edge ⋈ registers join keyed on the
     * endpoint plus a (node, bucket) max — the register frame is
-    * nodes × ≤256 rows regardless of density; per-round eager checkpoint
-    * keeps lineage flat (the fixed-point contract used by the PageRank
-    * family).
+    * nodes × ≤256 rows regardless of density; materialized per round.
     */
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // the registers are md5(node string)-derived either way)
+    // string-keyed: the registers are md5(node string)-derived either way
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct().persist(lvl)
+      .distinct().persist(lvlMemDisk)
     val nodes = e.select(col("u").as("node")).distinct()
     // registers ride a 256-byte VECTOR per node aggregated by the native
     // map-side-combining HllRegisterMerge — each round's exchange carries
@@ -1317,9 +1230,8 @@ object GraphAlgos {
     // register) (the row layout exchanged |edges|·registers rows/round;
     // measured 5x slower on the co-purchase graph)
     import graft.expr.HllRegisterAgg.{hllBuild, hllMerge, hllStats}
-    var regs = graft.ext.Sketch.hllProject(nodes, "node")
-      .groupBy("node").agg(hllBuild(col("bucket"), col("_rho")).as("regs"))
-      .localCheckpoint(true)
+    var regs = materialize(graft.ext.Sketch.hllProject(nodes, "node")
+      .groupBy("node").agg(hllBuild(col("bucket"), col("_rho")).as("regs")))
     def roundRow(r: Int, g: DataFrame): DataFrame = {
       val est = graft.ext.Sketch.estimateFromStats(
         g.select(col("node"), hllStats(col("regs")).as("_st"))
@@ -1336,9 +1248,8 @@ object GraphAlgos {
     for (r <- 1 to rounds) {
       val fromNbr = e.join(regs.withColumnRenamed("node", "v"), Seq("v"))
         .select(col("u").as("node"), col("regs"))
-      regs = fromNbr.unionByName(regs)
-        .groupBy("node").agg(hllMerge(col("regs")).as("regs"))
-        .localCheckpoint(true)
+      regs = materialize(fromNbr.unionByName(regs)
+        .groupBy("node").agg(hllMerge(col("regs")).as("regs")))
       out = out.unionByName(roundRow(r, regs))
     }
     e.unpersist()
@@ -1413,7 +1324,7 @@ object GraphAlgos {
     * Scale shape: per step one edge ⋈ frontier join (frontier ≤ #walks
     * rows → broadcast), one (prev, dst) membership probe against the edge
     * set (keyed join), and a struct-min argmin — no windows over the edge
-    * frame; per-step checkpoint keeps lineage flat.
+    * frame; the frontier is materialized per step.
     */
   def biasedWalks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], steps: Int, pReturn: Double, qOut: Double,
@@ -1452,12 +1363,11 @@ object GraphAlgos {
             .when(col("_n1"), lit(1.0)).otherwise(lit(qOut)))
         .withColumn("_kq",
           round(-log(col("_u")) * col("_winv") * 1e12).cast("long"))
-      frontier = weighted
+      frontier = materialize(weighted
         .groupBy("walk_id")
         .agg(min(struct(col("_kq"), col("dst"), col("src"))).as("m"))
         .select(col("walk_id"), lit(st.toLong).as("step"),
-          col("m.dst").as("node"), col("m.src").as("prev"))
-        .localCheckpoint(true)
+          col("m.dst").as("node"), col("m.src").as("prev")))
       out = out.unionByName(frontier.select("walk_id", "step", "node"))
     }
     e.unpersist(blocking = false)
@@ -1535,10 +1445,9 @@ object GraphAlgos {
     */
   def linkPredictionAuc(pairs: DataFrame, aCol: String, bCol: String,
       evalCap: Int = 5000): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the canonical pair frame feeds FIVE downstream branches
-    // (test/train/nodes/eSub/adj); localCheckpoint — not persist — both
-    // materializes it once (a lazy persist lets concurrent stages of the
+    // (test/train/nodes/eSub/adj); materializing it (not persist) both
+    // runs it once (a lazy persist lets concurrent stages of the
     // single final job race the empty cache and recompute the whole
     // upstream pair build) and TRUNCATES LINEAGE, without which every
     // branch's logical plan carries its own copy of the pair-build
@@ -1548,11 +1457,7 @@ object GraphAlgos {
     // sf0.1 isolated median 16.6 s → 9.9 s on the build host; the
     // remaining floor is the pair build + canonical distinct itself
     // (~3 s warm), which is inherent input construction.
-    val e = pairs.select(col(aCol).cast("string").as("_x"),
-        col(bCol).cast("string").as("_y"))
-      .select(least(col("_x"), col("_y")).as("a"),
-        greatest(col("_x"), col("_y")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    val e = materialize(undirectedPairs(pairs, aCol, bCol))
     val h = md5(concat_ws(":", lit("h"), col("a"), col("b")))
     val tag = substring(h, 1, 2)
     // eval set: the held-out 10%, CAPPED deterministically (smallest full
@@ -1561,15 +1466,15 @@ object GraphAlgos {
     val test = e.withColumn("_h", h).where(tag < "1a")
       .orderBy("_h", "a", "b").limit(evalCap)
       .select("a", "b") // ≤ evalCap rows; checkpointed via ev below
-    val train = e.where(!(tag < "1a")).persist(lvl)
+    val train = e.where(!(tag < "1a")).persist(lvlMemDisk)
     // negative sample: non-edges among the 200 smallest-md5 nodes. The
     // anti-join only needs edges whose BOTH endpoints fall in that node
     // set — two broadcast semi-joins shrink the full edge frame to the
     // 200-node subgraph first, so the anti probe broadcasts instead of
     // shuffling every edge
-    val nodes = e.select(col("a").as("n")).union(e.select(col("b"))).distinct()
-      .withColumn("_h", md5(concat(lit("n:"), col("n"))))
-      .orderBy("_h", "n").limit(200).select("n").localCheckpoint(true)
+    val nodes = materialize(e.select(col("a").as("n")).union(e.select(col("b")))
+      .distinct().withColumn("_h", md5(concat(lit("n:"), col("n"))))
+      .orderBy("_h", "n").limit(200).select("n"))
     val eSub = e
       .join(broadcast(nodes.withColumnRenamed("n", "a")), Seq("a"), "left_semi")
       .join(broadcast(nodes.withColumnRenamed("n", "b")), Seq("b"), "left_semi")
@@ -1584,21 +1489,19 @@ object GraphAlgos {
     // only ever needs adjacency rows whose endpoint u appears in an eval
     // pair (≤ 2·|ev| nodes, broadcast-small); the w-keyed join otherwise
     // fans out over every training edge.
-    val ev = test.withColumn("_pos", lit(true))
-      .unionByName(negs.withColumn("_pos", lit(false)))
-      .localCheckpoint(true) // ≤ evalCap + 200·199/2 rows
+    val ev = materialize(test.withColumn("_pos", lit(true)) // ≤ evalCap + 200·199/2 rows
+      .unionByName(negs.withColumn("_pos", lit(false))))
     val adj = train.select(col("a").as("u"), col("b").as("w"))
       .union(train.select(col("b").as("u"), col("a").as("w")))
     val evNodes = ev.select(col("a").as("u"))
       .union(ev.select(col("b"))).distinct()
     val adjP = adj.join(broadcast(evNodes), Seq("u"), "left_semi")
-    val scored = ev.select("a", "b")
+    val scored = materialize(ev.select("a", "b") // one row per eval pair
       .join(adjP.select(col("u").as("a"), col("w")), Seq("a"))
       .join(adjP.select(col("u").as("b"), col("w")), Seq("b", "w"))
       .groupBy("a", "b").agg(count(lit(1)).as("s"))
       .join(ev, Seq("a", "b"), "right")
-      .select(col("_pos"), coalesce(col("s"), lit(0L)).as("s"))
-      .localCheckpoint(true) // one row per eval pair
+      .select(col("_pos"), coalesce(col("s"), lit(0L)).as("s")))
     val ph = scored.where(col("_pos")).groupBy("s").agg(count(lit(1)).as("cp"))
     val nh = scored.where(!col("_pos")).groupBy("s").agg(count(lit(1)).as("cn"))
     val u2 = ph.crossJoin(nh.select(col("s").as("sn"), col("cn")))
@@ -1741,48 +1644,40 @@ object GraphAlgos {
     * safe (TPC-H-shaped incidence graphs by orders of magnitude).
     *
     * Scale shape: per depth ONE join of the persisted edge frame against
-    * the (seed-keyed, usually broadcastable) frontier + a map-side
-    * combinable σ/δ aggregate + an anti-join on the visited set — no
-    * driver data path; levels are checkpointed to keep lineage flat.
+    * the (seed-keyed, broadcast) frontier + a map-side combinable σ/δ
+    * aggregate + an anti-join on the visited set — no driver data path;
+    * levels are materialized.
     */
   def betweennessSampled(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], maxDepth: Int, undirected: Boolean = true,
-      deltaScale: Long = 1000000L,
-      broadcastFrontier: Boolean = true): DataFrame = {
+      deltaScale: Long = 1000000L): DataFrame = {
     require(seeds.nonEmpty && maxDepth >= 1, "need seeds and maxDepth >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dir = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
     val e = (if (undirected)
       dir.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
         .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      else dir).distinct().persist(lvl)
+      else dir).distinct().persist(lvlMemDisk)
     e.count(): Unit
     val spark = edges.sparkSession
     import spark.implicits._
     // frontier/visited/delta frames are |seeds|·|nodes| at worst — tiny
     // next to the edge frame, so broadcasting them keeps the persisted
-    // edges from ever re-exchanging; disable for seed sets × node counts
-    // beyond broadcast range
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
+    // edges from ever re-exchanging
     // forward: levels(d) = (s, v, sigma)
-    val l0 = seeds.map(s => (s, s, 1L)).toDF("s", "v", "sigma")
-      .localCheckpoint(true)
+    val l0 = materialize(seeds.map(s => (s, s, 1L)).toDF("s", "v", "sigma"))
     val levels = scala.collection.mutable.ArrayBuffer(l0)
-    var visited = l0.select("s", "v").localCheckpoint(true)
+    var visited = materialize(l0.select("s", "v"))
     for (_ <- 1 to maxDepth) {
-      val next = e.withColumnRenamed("src", "v")
-        .join(bc(levels.last), Seq("v"))
+      val next = materialize(e.withColumnRenamed("src", "v")
+        .join(broadcast(levels.last), Seq("v"))
         .groupBy(col("s"), col("dst").as("v"))
         .agg(sum("sigma").as("sigma"))
-        .join(bc(visited), Seq("s", "v"), "left_anti")
-        .localCheckpoint(true)
+        .join(broadcast(visited), Seq("s", "v"), "left_anti"))
       levels += next
-      visited = visited.union(next.select("s", "v")).localCheckpoint(true)
+      visited = materialize(visited.union(next.select("s", "v")))
     }
     // backward: delta(d) over levels(d), deepest = 0
     var delta = levels(maxDepth).select(col("s"), col("v"), lit(0L).as("delta"))
@@ -1795,12 +1690,11 @@ object GraphAlgos {
         .join(delta, Seq("s", "v"), "left")
         .select(col("s"), col("v").as("w"), col("sigma").as("sw"),
           coalesce(col("delta"), lit(0L)).as("dw"))
-      delta = e.withColumnRenamed("src", "v").withColumnRenamed("dst", "w")
-        .join(bc(levels(d)), Seq("v"))
-        .join(bc(wSide), Seq("s", "w"))
+      delta = materialize(e.withColumnRenamed("src", "v").withColumnRenamed("dst", "w")
+        .join(broadcast(levels(d)), Seq("v"))
+        .join(broadcast(wSide), Seq("s", "w"))
         .groupBy("s", "v")
-        .agg(sum(expr(s"(sigma * ($deltaScale + dw)) div sw")).as("delta"))
-        .localCheckpoint(true)
+        .agg(sum(expr(s"(sigma * ($deltaScale + dw)) div sw")).as("delta")))
       acc += delta
     }
     val out = acc.map(_.select(col("v"), col("delta"))).reduce(_ union _)
@@ -1858,28 +1752,22 @@ object GraphAlgos {
     * in `unit`-scaled longs, each half-step is ONE node-keyed join against
     * the persisted edge frame + a map-side-combinable sum, and the L1
     * normalization (total mass re-scaled to `unit`) is an exact integer
-    * floor-division against a broadcast 1-row total — no driver action
-    * inside the loop beyond the eager checkpoint that keeps lineage flat.
+    * floor-division by the half-step's L1 total — no driver action inside
+    * the loop beyond the per-half-step materialization that also observes
+    * that total.
     *
     * Caller contract: `n_nodes * unit^2` must fit a long (n ≤ ~9×10^6 at
     * the default unit) — the price of bit-exact replay. Edges are
-    * de-duplicated; dangling nodes keep score 0 on the side they lack
-    * edges for.
+    * de-duplicated and edges with a null endpoint dropped (the
+    * [[encodeGraph]] prelude it shares with the PageRank family); dangling
+    * nodes keep score 0 on the side they lack edges for.
     */
   def hitsFixed(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, unit: Long = 1000000L,
-      broadcastNodeLimit: Long = 1000000L): DataFrame = {
+      iterations: Int, unit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    require(n > 0, "HITS needs at least one edge") // n>0 ⟺ e nonempty
-    val bcOk = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bcOk).localCheckpoint(true)
+    val g = encodeGraph(edges, srcCol, dstCol)
+    require(g.n > 0, "HITS needs at least one edge") // n>0 ⟺ e nonempty
+    val e = g.e
     // score frames stay SPARSE inside the loop (only nodes that received
     // mass — a node absent from a frame has score 0, and joining it in
     // would only add per-half-step node-table traffic); the dense frame is
@@ -1887,23 +1775,17 @@ object GraphAlgos {
     // broadcast under the limit, so the big cached edge frame NEVER
     // re-shuffles — the only exchange per half-step is the map-side
     // combined (node, partial-sum) aggregate.
-    def bc(df: DataFrame): DataFrame = if (bcOk) broadcast(df) else df
-    var normIdx = 0
+    def bc(df: DataFrame): DataFrame = if (g.bc) broadcast(df) else df
     def normalize(raw: DataFrame, outCol: String): DataFrame = {
-      // ONE pass per half-step: the raw sums are materialized by the eager
-      // localCheckpoint, with the L1 total captured IN THE SAME JOB via
-      // observe (an exact integer — identical to the old separate
-      // total-aggregate job + broadcast, at half the job count); the
-      // scaled projection is then a cheap map over the checkpointed n-row
-      // frame with the total as a literal
-      normIdx += 1
-      val obs = org.apache.spark.sql.Observation(s"hits_norm_$normIdx")
-      val r = raw.observe(obs, sum(col("v")).as("t")).localCheckpoint(true)
-      val t = obs.get("t").asInstanceOf[Long]
-      r.select(col("node"), expr(s"(v * ${unit}L) div ${t}L").as(outCol))
+      // ONE pass per half-step: the raw sums are materialized with the L1
+      // total counted IN THE SAME JOB (an exact integer); the scaled
+      // projection is then a cheap map over the materialized n-row frame
+      // with the total as a literal
+      val (r, c) = materialize(raw, sum(col("v")).as("t"))
+      r.select(col("node"), expr(s"(v * ${unit}L) div ${c.getLong(0)}L").as(outCol))
     }
-    var hubs = e.select(col("src").as("node")).distinct()
-      .withColumn("hub", lit(unit)).localCheckpoint(true)
+    var hubs = materialize(e.select(col("src").as("node")).distinct()
+      .withColumn("hub", lit(unit)))
     var auths: DataFrame = null
     for (_ <- 1 to iterations) {
       val araw = e.join(bc(hubs.withColumnRenamed("node", "src")), Seq("src"))
@@ -1913,12 +1795,11 @@ object GraphAlgos {
         .groupBy(col("src").as("node")).agg(sum("authority").as("v"))
       hubs = normalize(hraw, "hub")
     }
-    val out = dict.select(col("nid").as("node"), col("node").as("_str"))
+    g.dict.select(col("nid").as("node"), col("node").as("_str"))
       .join(auths, Seq("node"), "left").join(hubs, Seq("node"), "left")
       .select(col("_str").as("node"),
         coalesce(col("authority"), lit(0L)).as("authority"),
         coalesce(col("hub"), lit(0L)).as("hub"))
-    out
   }
 
   /** DuckDB replay of [[hitsFixed]] — iterations unrolled, one
@@ -2015,17 +1896,13 @@ object GraphAlgos {
     */
   def communityQuality(edges: DataFrame, srcCol: String, dstCol: String,
       communities: DataFrame, nodeCol: String, commCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
+    val e = undirectedPairs(edges, srcCol, dstCol)
     val cm = communities.select(col(nodeCol).cast("string").as("node"),
       col(commCol).cast("string").as("community")).distinct()
     val tagged = e
       .join(cm.withColumnRenamed("node", "a").withColumnRenamed("community", "ca"), Seq("a"))
       .join(cm.withColumnRenamed("node", "b").withColumnRenamed("community", "cb"), Seq("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val m = tagged.count()
     require(m > 0, "graph has no edges after canonicalization")
     // per-community: intra edges (both endpoints inside) and cut edges
@@ -2133,16 +2010,12 @@ object GraphAlgos {
   def sccFixed(edges: DataFrame, srcCol: String, dstCol: String,
       peelRounds: Int, propRounds: Int): DataFrame = {
     require(peelRounds >= 1 && propRounds >= 1, "rounds must be >= 1")
-    val persistL = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // SCC would additionally need the order-preserving dictionary, since
-    // min-label agreement compares keys)
     val e0 = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
-      .persist(persistL)
+      .persist(lvlMemDisk)
     val allNodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst"))).distinct().persist(persistL)
+      .union(e0.select(col("dst"))).distinct().persist(lvlMemDisk)
     var rem = allNodes
     var assigned: DataFrame = null
     var done = false
@@ -2151,23 +2024,21 @@ object GraphAlgos {
       val re0 = e0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(persistL)
+        .persist(lvlMemDisk)
       // trim: a multi-node SCC needs in AND out edges inside the remaining
       // subgraph (SCCs are always removed whole), so any node missing
       // either side is a singleton SCC — this collapses DAG tails/chains
       // that pure FW-BW peeling would burn one round per node on
       val core = re0.select(col("src").as("node"))
         .intersect(re0.select(col("dst").as("node")))
-      val singles = rem.join(core, Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("scc"))
-        .localCheckpoint(true)
+      val singles = materialize(rem.join(core, Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("scc")))
       assigned = if (assigned == null) singles else assigned.union(singles)
-      rem = rem.join(singles, Seq("node"), "left_anti")
-        .localCheckpoint(true)
+      rem = materialize(rem.join(singles, Seq("node"), "left_anti"))
       val re = re0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(persistL)
+        .persist(lvlMemDisk)
       re0.unpersist(blocking = false)
       // fmin: min id reachable FROM u — labels flow AGAINST edge direction
       var f = rem.withColumn("lbl", col("node"))
@@ -2175,16 +2046,14 @@ object GraphAlgos {
       for (_ <- 1 to propRounds) {
         val fIn = re.join(f.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy(col("src").as("node")).agg(min("lbl").as("_in"))
-        f = f.join(fIn, Seq("node"), "left")
+        f = materialize(f.join(fIn, Seq("node"), "left")
           .select(col("node"), least(col("lbl"),
-            coalesce(col("_in"), col("lbl"))).as("lbl"))
-          .localCheckpoint(true)
+            coalesce(col("_in"), col("lbl"))).as("lbl")))
         val bIn = re.join(b.withColumnRenamed("node", "src"), Seq("src"))
           .groupBy(col("dst").as("node")).agg(min("lbl").as("_in"))
-        b = b.join(bIn, Seq("node"), "left")
+        b = materialize(b.join(bIn, Seq("node"), "left")
           .select(col("node"), least(col("lbl"),
-            coalesce(col("_in"), col("lbl"))).as("lbl"))
-          .localCheckpoint(true)
+            coalesce(col("_in"), col("lbl"))).as("lbl")))
       }
       // convergence probe: one extra half-step per direction. If any label
       // can still improve, this peel's agreement may cover only PART of an
@@ -2204,19 +2073,20 @@ object GraphAlgos {
         .where(col("_in") < col("lbl")).select(lit(1).as("_x"))
       // one job probes both directions
       val converged = fProbe.unionAll(bProbe).limit(1).count() == 0
-      val agree = f.withColumnRenamed("lbl", "_f")
+      val agree = materialize(f.withColumnRenamed("lbl", "_f")
         .join(b.withColumnRenamed("lbl", "_b"), Seq("node"))
         .where(col("_f") === col("_b"))
-        .select(col("node"), col("_f").as("scc"))
-        .localCheckpoint(true)
+        .select(col("node"), col("_f").as("scc")))
       assigned = if (assigned == null) agree else assigned.union(agree)
-      rem = rem.join(agree, Seq("node"), "left_anti").localCheckpoint(true)
+      val (left, c) = materialize(rem.join(agree, Seq("node"), "left_anti"),
+        count(lit(1)).as("remaining"))
+      rem = left
       re.unpersist(blocking = false)
       // early exit once everything is assigned — the oracle unrolls every
       // peel regardless, but its remaining rounds run on empty frames, so
       // skipping them here cannot change the output. The unconverged stop
       // IS replayed by the oracle (per-peel conv/act flag CTEs).
-      done = rem.limit(1).count() == 0 || !converged
+      done = c.getLong(0) == 0L || !converged
     }
     val out = assigned.union(
       rem.select(col("node"), concat(lit("?"), col("node")).as("scc")))

@@ -91,12 +91,60 @@ class PlanAssertSpec extends SparkSpec {
         col("l_quantity").cast("long").as("w"))
     val dist = Seq(("1", 0L)).toDF("node", "dist")
     val under = graft.graph.GraphAlgos
-      .relaxRound(e, dist, distRows = 1L, broadcastNodeLimit = 1000000L)
+      .relaxRound(e, dist, distRows = 1L)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(under.contains("BroadcastHashJoin"),
       s"relax round lost the distance-side broadcast:\n$under")
     assert(!under.contains("SortMergeJoin") && !under.contains("ShuffledHashJoin"),
       s"relax round shuffles the edge frame under the broadcast limit:\n$under")
+  }
+
+  test("every PageRank variant's iteration broadcasts its share table, never re-exchanges the edges") {
+    // the plan graph_analytics runs per PageRank iteration: the n-row share
+    // table is the broadcast side, and the materialized encoded edge frame
+    // reaches its first exchange only through that join and the partial
+    // (map-side) sum per dst — its rows are never shuffled themselves
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.graph.GraphAlgos
+    val e = Seq(("a", "b", 2L), ("a", "c", 1L), ("b", "c", 3L), ("c", "a", 1L))
+      .toDF("s", "t", "w")
+    def pathTo(p: SparkPlan, hit: SparkPlan => Boolean): Option[List[SparkPlan]] =
+      if (hit(p)) Some(List(p))
+      else p.children.iterator.map(pathTo(_, hit)).collectFirst { case Some(q) => p :: q }
+    val variants = Seq(
+      ("pageRankFixed", None, lit(15L)),
+      ("weightedPageRankFixed", Some("w"), lit(15L)),
+      ("personalizedPageRankFixed", None,
+        when(col("node").isin(0L), lit(15L)).otherwise(lit(0L))))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      variants.foreach { case (name, weight, teleport) =>
+        val g = GraphAlgos.encodeGraph(e, "s", "t", weight)
+        val ranks = g.dict.select(col("nid").as("node")).withColumn("rank", lit(100L))
+        val step = GraphAlgos.rankStep(g, GraphAlgos.rankOut(g), ranks, teleport, 85)
+        val edgeRdd = g.e.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+        val plan = step.queryExecution.executedPlan
+        val up = pathTo(plan, {
+          case s: RDDScanExec => s.rdd eq edgeRdd
+          case _ => false
+        }).getOrElse(fail(s"$name: no scan of the encoded edges:\n$plan")).reverse
+        val beforeExchange = up.tail.takeWhile(!_.isInstanceOf[Exchange])
+        assert(beforeExchange.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+          s"$name: the share table is not broadcast to the edges:\n$plan")
+        assert(beforeExchange.exists(_.isInstanceOf[HashAggregateExec]),
+          s"$name: the edges reach an exchange before the partial sum:\n$plan")
+        assert(up.tail.find(_.isInstanceOf[Exchange])
+          .forall(_.isInstanceOf[ShuffleExchangeExec]),
+          s"$name: the edge frame is broadcast instead of streamed:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("wedge orientation is degree-ordered: a hub never fans out wedges") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,5 +28,29 @@ trait SparkSpec extends AnyFunSuite {
     }
     del(new java.io.File(path))
     path
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a marker job run after `body` is seen, every job
+    * `body` started has been counted.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val marker = s"graft-spec-barrier-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(d => { assert(d != null, "listener saw no marker job"); d })
+        .takeWhile(_ != marker).size
+    } finally sc.removeSparkListener(l)
   }
 }

@@ -40,6 +40,38 @@ class GraphAlgosSpec extends SparkSpec {
     assert(r1.values.toSet.size == 1)
   }
 
+  private def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+
+  private def rankFixture = {
+    import spark.implicits._
+    Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"), ("c", "e"))
+      .toDF("s", "t")
+  }
+
+  test("PageRank drops an edge with a null endpoint instead of counting a null node") {
+    import spark.implicits._
+    val e = rankFixture
+    val withNull = e.union(Seq(("a", null: String)).toDF("s", "t"))
+    assert(ranks(GraphAlgos.pageRankFixed(withNull, "s", "t", iterations = 4)) ==
+      ranks(GraphAlgos.pageRankFixed(e, "s", "t", iterations = 4)))
+  }
+
+  test("weighted PageRank with unit weights equals pageRankFixed") {
+    import org.apache.spark.sql.functions.lit
+    val e = rankFixture
+    assert(ranks(GraphAlgos.weightedPageRankFixed(e.withColumn("w", lit(1L)),
+        "s", "t", "w", iterations = 5)) ==
+      ranks(GraphAlgos.pageRankFixed(e, "s", "t", iterations = 5)))
+  }
+
+  test("personalized PageRank seeded at every node equals pageRankFixed") {
+    val e = rankFixture
+    assert(ranks(GraphAlgos.personalizedPageRankFixed(e, "s", "t",
+        Seq("a", "b", "c", "d", "e"), iterations = 5)) ==
+      ranks(GraphAlgos.pageRankFixed(e, "s", "t", iterations = 5)))
+  }
+
   test("shortestPathsFixed relaxes to known distances within the hop cap") {
     import spark.implicits._
     //     a →1→ b →1→ c

@@ -18,8 +18,9 @@ class NodeDictSpec extends SparkSpec {
     // "p10" < "p2" lexicographically — the order the string algorithms
     // actually used, NOT numeric order; the dict must reproduce it
     val nodes = Seq("s1", "p2", "p10", "a", "zz").toDF("node")
-    val d = GraphAlgos.nodeDict(nodes).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
+    val (dict, n) = GraphAlgos.nodeDict(nodes)
+    assert(n == 5L, "n comes from the dictionary's own materialize job")
+    val d = dict.collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(d.values.toSeq.sorted == Seq(0L, 1L, 2L, 3L, 4L), s"ids not dense: $d")
     val lex = Seq("a", "p10", "p2", "s1", "zz") // sorted lexicographically
     assert(lex.map(d) == Seq(0L, 1L, 2L, 3L, 4L),
@@ -29,7 +30,7 @@ class NodeDictSpec extends SparkSpec {
   test("encodeEdges/decodeNode round-trips an edge frame exactly") {
     import spark.implicits._
     val e = Seq(("s1", "p2", 7L), ("p10", "s1", 3L)).toDF("src", "dst", "w")
-    val dict = GraphAlgos.nodeDict(
+    val (dict, _) = GraphAlgos.nodeDict(
       e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
     val enc = GraphAlgos.encodeEdges(e, dict, bcDict = true)
     assert(enc.schema("src").dataType.typeName == "long")

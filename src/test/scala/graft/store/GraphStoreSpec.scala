@@ -3,7 +3,6 @@ package graft.store
 import graft.SparkSpec
 import graft.model._
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.Files
 
 class GraphStoreSpec extends SparkSpec {
@@ -131,30 +130,6 @@ class GraphStoreSpec extends SparkSpec {
   // ------------------------------------------------ current-version memo
 
   private val rel = EdgeKey("p", "q", "rel")
-
-  /** Spark jobs started while `body` runs. Listener events arrive in
-    * order, so once a marker job run after `body` is seen, every job
-    * `body` started has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val marker = s"graft-store-spec-barrier-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map(d => { assert(d != null, "listener saw no marker job"); d })
-        .takeWhile(_ != marker).size
-    } finally sc.removeSparkListener(l)
-  }
 
   /** The version dir every file of a read comes from. */
   private def versionOf(df: org.apache.spark.sql.DataFrame): Set[String] =
