@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every battery query at SPARK_GRAFT_SF_DIR and
@@ -34,42 +33,9 @@ import java.nio.file.{Files, Paths}
   * shared ingest cost and the per-query numbers are unusable.
   */
 object Bench {
-  /** Apply SPARK_EXTRA_CONF="k=v;k=v" to a session builder — shared with
-    * ProfileQuery. Segments without '=' fail with a clear message instead
-    * of an opaque MatchError; empty segments (trailing ';') are ignored.
-    */
-  private[graft] def applyExtraConf(builder: SparkSession.Builder): Unit =
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      if (kv.trim.nonEmpty) kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k, v): Unit
-        case _ => sys.error(s"SPARK_EXTRA_CONF segment without '=': '$kv'")
-      }
-    })
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Never take the bypass-merge shuffle write path: it opens one file
-      // per reduce partition per map task and merges them with per-file
-      // mmap+NIO copies, which costs ~ms per file on this filesystem —
-      // jstack-profiled as the dominant taskTime of every small exchange
-      // (q_bradley_terry round: 20 s taskTime for a 1 M-row cached scan;
-      // battery A/B: −11% on per-query minimums). The serialized sort
-      // writer emits ONE file per map task. Scale-neutral: bypass only
-      // engages when reduce partitions ≤ threshold (default 200), which a
-      // production shuffle exceeds anyway — still overridable per run via
-      // SPARK_EXTRA_CONF.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    // SPARK_EXTRA_CONF="k=v;k=v" — conf experiments (scale-dependent
-    // settings stay parameterised; defaults keep the bench comparable)
-    applyExtraConf(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build(defaultCpus = 4)
     // warm up codegen/session state so the first measured query isn't
     // charged for JVM/session initialization
     spark.range(1000).selectExpr("sum(id)").collect()

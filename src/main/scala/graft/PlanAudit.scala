@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for battery queries, to audit
   * pushdown (PushedFilters / ReadSchema), join strategies (broadcast vs
   * shuffle, no accidental nested-loop), and codegen spans before a round's
@@ -55,11 +53,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build(defaultCpus = 4)
     val names = if (args.nonEmpty) args.toSeq else flagships
     names.foreach { n =>
       println(s"\n===== $n =====")

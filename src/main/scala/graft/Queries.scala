@@ -58,12 +58,12 @@ object GraftQueries {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     val derived = inputBytes / (1L << 20) + 2
-    // prev may be non-numeric (e.g. "auto" injected via SPARK_EXTRA_CONF);
-    // fall back to the derived value rather than throwing mid-helper. The
-    // session setting is mutated for the duration of the stream — callers
-    // run streams sequentially (the bench/verify contract); a concurrent
-    // batch query on the same session would observe the temporary value.
-    val cap = prev.toLongOption.getOrElse(derived)
+    // The session setting is mutated for the duration of the stream —
+    // callers run streams sequentially (the bench/verify contract); a
+    // concurrent batch query on the same session would observe the
+    // temporary value.
+    val cap = prev.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be numeric to cap a stream's partitions, got '$prev'"))
     s.conf.set(key, math.max(1L, math.min(cap, derived)).toString)
     try body finally s.conf.set(key, prev)
   }

@@ -118,40 +118,6 @@ object GraftQueriesR11 {
             concat(lit("avg_edges="), col("n")).as("detail"))
       ).reduce(_.unionByName(_))
       meta.unionByName(data).orderBy("kind", "owner", "detail")
-    },
-
-    // Ogg Vorbis decode (ext/VorbisCodec + ext/VorbisEncoder): REAL
-    // streams per row — in-stream codebooks (the whole pipeline is
-    // offline-verifiable, unlike MP3/AAC), floor1 flat + ramp curves,
-    // residue formats 0/1/2, square-polar coupling in the quantized
-    // domain, mixed long/short block plans with transition windows,
-    // CRC-verified Ogg paging. Shapes cycle per id (doc_id % 4): mono
-    // long, mono mixed ramp+type-2-pass residue-0, stereo residue-2,
-    // stereo COUPLED mixed + subclass floor. Structural fields replay
-    // closed-form in the oracle; fidelity is the per-channel
-    // delay+gain-fitted PSNR band (psnr_ok, 20 dB like q_mp3_decode).
-    "q_vorbis_decode" -> { (s, d) =>
-      val ids = t(s, d)("documents").select(col("doc_id")).where(col("doc_id") < 48)
-      graft.ext.Multimodal.vorbisDecodeFrame(
-        graft.ext.Multimodal.synthesizeVorbisAudio(ids, "doc_id"), "doc_id")
-        .orderBy("doc_id")
-    },
-
-    // AAC-LC decode (ext/AacLc + ext/AacEncoder): the 13818-7 LC path
-    // end to end — ADTS walk, SCE/CPE, all four window sequences with
-    // EIGHT_SHORT grouping, section/DPCM-scalefactor/spectral decode
-    // across all 11 books incl. book-11 escapes, M/S, TNS all-pole,
-    // sine+KBD windows, IMDCT overlap-add. The normative Huffman bit
-    // patterns are offline-unobtainable (AacTables honesty note), so
-    // the DEFAULT decode refuses (`refused` column pins it) and the
-    // fidelity leg rides the in-repo canonical books via the explicit
-    // opt-in, exactly like q_mp3_decode's ESC face. Shapes cycle per id
-    // (doc_id % 4): mono long, mono transitions, stereo M/S, KBD+TNS.
-    "q_aac_decode" -> { (s, d) =>
-      val ids = t(s, d)("documents").select(col("doc_id")).where(col("doc_id") < 48)
-      graft.ext.Multimodal.aacDecodeFrame(
-        graft.ext.Multimodal.synthesizeAacAudio(ids, "doc_id"), "doc_id")
-        .orderBy("doc_id")
     }
   )
 
@@ -173,42 +139,6 @@ object GraftQueriesR11 {
         |    'segments=' || (SELECT count(DISTINCT c_mktsegment) FROM customer)
         |  UNION ALL SELECT 'data', 'edge',
         |    'avg_edges=' || (SELECT count(*) FROM customer)
-        |) ORDER BY kind, owner, detail""".stripMargin,
-
-    // structural replay: the block plans are fixed per shape, so block
-    // counts and the lapped output length are closed-form (sum of
-    // rightStart-leftStart over non-first windows); fidelity rides on
-    // psnr_ok
-    "q_vorbis_decode" ->
-      """SELECT doc_id, CAST(44100 AS BIGINT) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 4 IN (2, 3) THEN 2 ELSE 1 END AS BIGINT)
-        |    AS channels,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 6 WHEN 1 THEN 7 WHEN 2 THEN 5
-        |    ELSE 5 END AS BIGINT) AS n_blocks,
-        |  CAST(CASE doc_id % 4 WHEN 1 THEN 3 WHEN 3 THEN 2 ELSE 0 END
-        |    AS BIGINT) AS n_short_blocks,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 5120 WHEN 1 THEN 3456
-        |    WHEN 2 THEN 4096 ELSE 2304 END AS BIGINT) AS n_samples,
-        |  (doc_id % 4 = 3) AS coupled,
-        |  true AS psnr_ok
-        |FROM documents WHERE doc_id < 48 ORDER BY doc_id""".stripMargin,
-
-    // structural replay of the fixed per-shape frame plans; `refused`
-    // pins the honest default-refusal of the non-normative codebooks
-    "q_aac_decode" ->
-      """SELECT doc_id, CAST(44100 AS BIGINT) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 4 = 2 THEN 2 ELSE 1 END AS BIGINT)
-        |    AS channels,
-        |  CAST(CASE WHEN doc_id % 4 IN (0, 1) THEN 6 ELSE 5 END AS BIGINT)
-        |    AS n_frames,
-        |  CAST(CASE WHEN doc_id % 4 = 1 THEN 2 ELSE 0 END AS BIGINT)
-        |    AS n_short_frames,
-        |  CAST(CASE WHEN doc_id % 4 IN (0, 1) THEN 6144 ELSE 5120 END
-        |    AS BIGINT) AS n_samples,
-        |  (doc_id % 4 = 2) AS ms_used,
-        |  (doc_id % 4 = 3) AS tns_used,
-        |  true AS refused,
-        |  true AS psnr_ok
-        |FROM documents WHERE doc_id < 48 ORDER BY doc_id""".stripMargin
+        |) ORDER BY kind, owner, detail""".stripMargin
   )
 }

@@ -3,18 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-8 battery additions.
-  *
-  * q_mp3_decode — full MPEG-1 Layer III decode (ext/Mp3Layer3: bit
-  * reservoir, side info, table-15 Huffman spectrum, requantization,
-  * IMDCT, 32-band polyphase synthesis) over REAL frames produced by the
-  * in-repo encoder (ext/Mp3Encoder) from deterministic per-id tones. The
-  * fidelity leg is the delay+gain-fitted PSNR against the regenerated
-  * tone (`psnr_ok`, threshold 20 dB — single tones measure ~25-27 dB
-  * through the 4-bit table-15 quantizer); the structural fields replay in
-  * closed form in the oracle like the other codec queries
-  * (q_mjpeg_decode's `psnr_ok: true` pattern).
-  */
+/** Round-8 battery additions. */
 object GraftQueriesR8 {
 
   private def t(s: SparkSession, dir: String)(name: String): DataFrame =
@@ -23,14 +12,6 @@ object GraftQueriesR8 {
   type Q = (SparkSession, String) => DataFrame
 
   val all: Map[String, Q] = Map(
-    "q_mp3_decode" -> { (s, d) =>
-      val ids = t(s, d)("documents").select(col("doc_id")).where(col("doc_id") < 60)
-      graft.ext.Multimodal.mp3DecodeFrame(
-        graft.ext.Multimodal.synthesizeMp3Audio(ids, "doc_id", nGranules = 6),
-        "doc_id", nGranules = 6, minPsnrDb = 20.0)
-        .orderBy("doc_id")
-    },
-
     // §2.10 the reference's direction dialect, battery-pinned: OUT from a
     // raw-id anchor follows a directed CROSS-TYPE edge from EITHER side
     // (customer→nation outbound AND orders→customer served inbound,
@@ -122,16 +103,6 @@ object GraftQueriesR8 {
   )
 
   val oracles: Map[String, String] = Map(
-    "q_mp3_decode" ->
-      """SELECT doc_id, CAST(44100 AS BIGINT) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 5 = 4 THEN 2 ELSE 1 END AS BIGINT) AS channels,
-        |  CAST(6 AS BIGINT) AS n_granules,
-        |  CAST(CASE WHEN doc_id % 5 = 4 THEN 6912 ELSE 3456 END AS BIGINT)
-        |    AS n_samples,
-        |  true AS psnr_ok,
-        |  (doc_id % 3 = 0 AND doc_id % 5 <> 4) AS esc_table
-        |FROM documents WHERE doc_id < 60 ORDER BY doc_id""".stripMargin,
-
     "q_neighbor_out" ->
       """SELECT 'customer' AS vtype, CAST(0 AS BIGINT) AS cnt
         |UNION ALL SELECT 'nation', CAST(1 AS BIGINT)

@@ -99,20 +99,6 @@ object GraftQueriesR9 {
         hops = 2, direction = Direction.Out, edgeLimit = Some(Int.MaxValue))))
     },
 
-    // MPEG-2 LSF leg: one 576-sample granule per frame at 22.05 kHz,
-    // normative codebooks only (no opt-in), PSNR-oracled like
-    // q_mp3_decode. Shapes cycle per id (doc_id % 5): mono long, STEREO
-    // long, mono SHORT blocks, mono long on the sfc>=500 PREFLAG
-    // scalefactor row, SHORT-BLOCK INTENSITY stereo — the full decodable
-    // LSF face in one row.
-    "q_mp3_lsf_decode" -> { (s, d) =>
-      val ids = t(s, d)("documents").select(col("doc_id")).where(col("doc_id") < 40)
-      graft.ext.Multimodal.mp3DecodeFrame(
-        graft.ext.Multimodal.synthesizeMp3Audio(ids, "doc_id", nGranules = 6, lsf = true),
-        "doc_id", nGranules = 6, minPsnrDb = 20.0)
-        .orderBy("doc_id")
-    },
-
     "q_evolution_cascade" -> { (s, d) =>
       import graft.evolve._
       import graft.evolve.CascadeOp._
@@ -177,16 +163,6 @@ object GraftQueriesR9 {
   )
 
   val oracles: Map[String, String] = Map(
-    "q_mp3_lsf_decode" ->
-      """SELECT doc_id, CAST(22050 AS BIGINT) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 5 IN (1, 4) THEN 2 ELSE 1 END AS BIGINT)
-        |    AS channels,
-        |  CAST(6 AS BIGINT) AS n_granules,
-        |  CAST(CASE WHEN doc_id % 5 IN (1, 4) THEN 6912 ELSE 3456 END AS BIGINT)
-        |    AS n_samples,
-        |  true AS psnr_ok, false AS esc_table
-        |FROM documents WHERE doc_id < 40 ORDER BY doc_id""".stripMargin,
-
     "q_traverse_2hop_uncapped" ->
       """SELECT 'customer' AS vtype, count(*) AS cnt FROM customer WHERE c_nationkey = 0
         |UNION ALL SELECT 'nation', count(*) FROM nation

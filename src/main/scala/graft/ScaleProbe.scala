@@ -53,14 +53,7 @@ object ScaleProbe {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/sf1")
     val replicate = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build(defaultCpus = 32)
 
     generate(spark, srcDir, outDir, replicate)
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,17 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local dev loops)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: single-file serialized sort shuffle writes (see
-      // Bench.scala for the measured rationale)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     def deleteRecursively(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))

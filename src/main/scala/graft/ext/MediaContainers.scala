@@ -18,10 +18,10 @@ import org.apache.spark.sql.types._
   * (ISO/IEC 11172-3 header fields, bitrate/samplerate tables, Xing/Info
   * VBR headers, ID3v2 skip) and genuine ISO-BMFF box structure
   * (ftyp/mvhd/tkhd/mdhd/hdlr/stsd/stts/stsz/stss), so they produce correct
-  * metadata for real-world files. MPEG-1 Layer III decode is real since
-  * round 8 (`Mp3Layer3.scala`); only H.264/AAC (and the ESC-codebook MP3
-  * frames Mp3Layer3's doc bounds) remain behind `Multimodal.decodeStub` —
-  * see `Multimodal.scala` §stub.
+  * metadata for real-world files. Lossy audio (MP3, AAC, Vorbis) is
+  * parsed at this container level only — its samples are not decoded
+  * here; a deployment decodes them through a native library in a UDF —
+  * and the H.264 pixel kernel is stubbed (`Multimodal.decodeStub`).
   *
   * Everything is per-row byte walking inside `mapPartitions` — narrow,
   * embarrassingly parallel, no shuffle. Crafted/corrupt payloads must
@@ -813,56 +813,6 @@ object MediaContainers {
     }
     if (nPages == 0) None
     else finishOgg(nPages, nPackets, serial, lastGranule, firstPacket)
-  }
-
-  /** Reassemble every packet of (the first logical stream of) an OGG
-    * container — the same CRC-verified lacing walk as [[parseOgg]], but
-    * returning the packet payloads themselves (the [[VorbisCodec]]
-    * entry point). None on any malformed page.
-    */
-  def oggPackets(bytes: Array[Byte]): Option[Vector[Array[Byte]]] = {
-    try {
-      var off = 0
-      var serial = -1L
-      var sawEos = false
-      var nPages = 0
-      val out = Vector.newBuilder[Array[Byte]]
-      val pending = new scala.collection.mutable.ArrayBuffer[Byte]()
-      while (off + 27 <= bytes.length && !sawEos) {
-        if (!(bytes(off) == 'O' && bytes(off + 1) == 'g' &&
-            bytes(off + 2) == 'g' && bytes(off + 3) == 'S'))
-          return if (nPages > 0) Some(out.result()) else None
-        if (bytes(off + 4) != 0) return None
-        val headerType = bytes(off + 5) & 0xff
-        val pageSerial = le32(bytes, off + 14)
-        val crc = le32(bytes, off + 22)
-        val nSegs = bytes(off + 26) & 0xff
-        if (off + 27 + nSegs > bytes.length) return None
-        var payloadLen = 0
-        var s = 0
-        while (s < nSegs) { payloadLen += bytes(off + 27 + s) & 0xff; s += 1 }
-        val pageEnd = off + 27 + nSegs + payloadLen
-        if (pageEnd > bytes.length) return None
-        if (crc != oggCrc(bytes, off, pageEnd, off + 22)) return None
-        if (serial < 0) serial = pageSerial
-        if (pageSerial == serial) {
-          if ((headerType & 1) == 0 && pending.nonEmpty) return None
-          var p = off + 27 + nSegs
-          s = 0
-          while (s < nSegs) {
-            val lace = bytes(off + 27 + s) & 0xff
-            var i = 0
-            while (i < lace) { pending += bytes(p); p += 1; i += 1 }
-            if (lace < 255) { out += pending.toArray; pending.clear() }
-            s += 1
-          }
-          if ((headerType & 4) != 0) sawEos = true
-          nPages += 1
-        }
-        off = pageEnd
-      }
-      if (nPages == 0) None else Some(out.result())
-    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   private def finishOgg(nPages: Int, nPackets: Int, serial: Long,

@@ -19,20 +19,18 @@ import org.apache.spark.sql.types._
   *    [[encodePng]], [[encodeJpeg]]) — part of Java SE, no external
   *    library. PNG round-trips bit-exact (lossless); JPEG is gated by a
   *    PSNR band ([[psnrCheck]]).
-  *  - Compressed AUDIO/VIDEO (MP3/MP4): the CONTAINER level — framing,
-  *    duration, bitrate mode, codec ids, sample tables, keyframe counts —
-  *    parses for real in [[MediaContainers]] (MPEG audio frame walk +
-  *    ISO-BMFF box tree), which is the metadata pass a 100 TB pipeline
-  *    runs Spark-side. MPEG-1 Layer III decodes for REAL since round 8
-  *    ([[Mp3Layer3]]: full subband synthesis, validated-codebook subset —
-  *    see its doc). FLAC, Ogg Vorbis ([[VorbisCodec]] — codebooks ride
-  *    in the stream, fully offline-verifiable) and AAC-LC ([[AacLc]] —
-  *    in-repo canonical codebooks behind an honest default-refusal)
-  *    decode for real too. Only the remaining pixel kernel (H.264, plus
-  *    MP3 frames using the offline-unavailable ESC codebooks) needs
-  *    libraries this container lacks, so its kernel is `decodeStub` ???
-  *    — a deterministic fake signal from the bytes. Swapping it for a
-  *    real JNI/codec call changes no plan shape.
+  *  - LOSSLESS compressed audio (FLAC) decodes natively ([[FlacCodec]])
+  *    and is checked by exact equality.
+  *  - LOSSY compressed audio (MP3, AAC, Vorbis) and video (MP4) are parsed
+  *    at the CONTAINER level only — framing, duration, bitrate mode, codec
+  *    ids, sample tables, keyframe counts — in [[MediaContainers]] (MPEG
+  *    audio frame walk, Ogg paging, ISO-BMFF box tree), which is the
+  *    metadata pass a large pipeline runs Spark-side. Their samples are not
+  *    decoded here: [[decodeAudio]] returns `None` for them, and a
+  *    deployment decodes them through a native library in a UDF. The
+  *    H.264 pixel kernel is stubbed (`decodeStub` ???) — a deterministic
+  *    fake signal from the bytes. Swapping it for a real JNI/codec call
+  *    changes no plan shape.
   * The Spark-side plumbing is real and tested: schema (binary + metadata
   * struct), partition-wise batched processing via `mapPartitions` (the Scala
   * analogue of `mapInPandas` — batch shape `(id, bytes) → (id, features)`),
@@ -332,20 +330,6 @@ object Multimodal {
     Raster(w, h, rgb, 255)
   }
 
-  /** Spread a narrow id frame across the session's parallelism before a
-    * CPU-heavy per-row codec kernel. A small filtered scan arrives as ONE
-    * input partition, so an expensive encode/decode (tens of ms per row)
-    * serializes on a single core while the rest of the machine idles
-    * (guide §2.6 — idle capacity; measured: the 48-stream AAC row ran as
-    * one 1.2 s task on local[32]). The shuffled column set is just the
-    * long id (8 bytes/row), negligible next to the kernel at any scale;
-    * skipped when the scan already carries enough partitions.
-    */
-  private def spreadIds(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
-  }
-
   private def synthesize(df: DataFrame, idCol: String, w: Int, h: Int,
       pack: Raster => Array[Byte]): DataFrame = {
     val schema = StructType(Seq(
@@ -630,7 +614,8 @@ object Multimodal {
   /** Format sniff + decode for the supported audio containers: RIFF/WAVE
     * ([[decodeWav]]: PCM + G.711 + IMA-ADPCM) and FLAC ([[FlacCodec]],
     * channels interleaved into the shared [[PcmAudio]] shape) — the one
-    * entry point a mixed-corpus feature pipeline calls per row.
+    * entry point a mixed-corpus feature pipeline calls per row. Anything
+    * else, lossy MP3/AAC/Vorbis included, is not decodable here: None.
     */
   def decodeAudio(bytes: Array[Byte]): Option[PcmAudio] =
     if (bytes.length >= 4 && bytes(0) == 'f' && bytes(1) == 'L' &&
@@ -1074,141 +1059,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Per-id test tone for the Layer III round trip — deterministic, so the
-    * decode side regenerates the reference signal from the id alone.
-    */
-  private def mp3TestTone(id: Long, nGranules: Int): Array[Double] = {
-    val sr = 44100
-    val freq = 300.0 + (id % 10).toDouble * 250.0
-    if (mp3UsesEsc(id))
-      // high-crest shape: near-full-scale fundamental + a whisper-level
-      // partial the 4-bit table-15 quantizer would zero out — the signal
-      // that makes the encoder reach for an ESC escape table
-      Array.tabulate(nGranules * 576)(i =>
-        0.95 * math.sin(2 * math.Pi * freq * i / sr) +
-          0.002 * math.sin(2 * math.Pi * (freq * 3.7) * i / sr))
-    else
-      Array.tabulate(nGranules * 576)(i =>
-        0.5 * math.sin(2 * math.Pi * freq * i / sr))
-  }
-
-  /** ids on the ESC leg of the MP3 battery row (every third doc, except
-    * the short-intensity ids, whose encoder leg is normative-only)
-    */
-  private def mp3UsesEsc(id: Long): Boolean = id % 3 == 0 && id % 5 != 4
-
-  /** ids on the SHORT-BLOCK INTENSITY leg (both MPEG-1 and LSF cycles):
-    * joint stereo, all-short blocks, per-window position rendering
-    */
-  def mp3IntensityShape(id: Long): Boolean = id % 5 == 4
-
-  /** LSF leg shape per id: 0 mono long, 1 STEREO long, 2 mono SHORT
-    * blocks, 3 mono long on the sfc>=500 PREFLAG scalefactor row,
-    * 4 SHORT-BLOCK INTENSITY stereo — the full decodable LSF face, one
-    * battery row.
-    */
-  private def lsfShape(id: Long): Int = (id % 5).toInt
-
-  /** right-channel tone for the stereo LSF leg (distinct frequency so
-    * channel bleed would fail the per-channel PSNR)
-    */
-  private def mp3TestToneRight(id: Long, nGranules: Int): Array[Double] = {
-    val sr = 44100
-    val freq = (300.0 + (id % 10).toDouble * 250.0) * 1.5
-    Array.tabulate(nGranules * 576)(i =>
-      0.4 * math.sin(2 * math.Pi * freq * i / sr))
-  }
-
-  /** Synthesize one REAL MPEG-1 Layer III stream per row ([[Mp3Encoder]]:
-    * valid headers, side info, table-15 Huffman spectrum) over a
-    * deterministic per-id tone. `nGranules` must be even (2 per frame).
-    */
-  def synthesizeMp3Audio(df: DataFrame, idCol: String,
-      nGranules: Int = 6, lsf: Boolean = false): DataFrame = {
-    require(lsf || nGranules % 2 == 0, "nGranules must be even (2 per frame)")
-    val schema = StructType(Seq(
-      StructField(idCol, LongType), StructField("media", BinaryType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    spreadIds(df.select(col(idCol).cast("long"))).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        // the LSF leg stays on normative codebooks (one granule per frame,
-        // 22.05 kHz) and cycles mono/stereo/short/preflag shapes; the
-        // MPEG-1 leg drives the ESC tables every third id
-        Row(id,
-          if (lsf) lsfShape(id) match {
-            case 1 => Mp3Encoder.encodeLsfStereo(
-              mp3TestTone(id, nGranules), mp3TestToneRight(id, nGranules))
-            case 2 => Mp3Encoder.encodeLsf(mp3TestTone(id, nGranules),
-              shortBlocks = true)
-            case 3 => Mp3Encoder.encodeLsf(mp3TestTone(id, nGranules),
-              scalefacCompress = 504)
-            case 4 => Mp3Encoder.encodeLsfIntensity(
-              mp3TestTone(id, nGranules), positions = _ => 1,
-              shortBlocks = true)
-            case _ => Mp3Encoder.encodeLsf(mp3TestTone(id, nGranules))
-          }
-          else if (mp3IntensityShape(id))
-            Mp3Encoder.encodeIntensity(mp3TestTone(id, nGranules),
-              positions = (_, _) => 3, shortBlocks = true)
-          else Mp3Encoder.encode(mp3TestTone(id, nGranules),
-            escTables = mp3UsesEsc(id)))
-      }
-    }(enc)
-  }
-
-  /** Full Layer III decode ([[Mp3Layer3]]) + fidelity check: per row,
-    * decode the media column and compare against the regenerated per-id
-    * tone with the standard delay+gain-fitted PSNR. Output:
-    * (id, sample_rate, channels, n_granules, n_samples, psnr_ok).
-    * Per-row kernel at the codec boundary, like every decoder here.
-    */
-  def mp3DecodeFrame(df: DataFrame, idCol: String, nGranules: Int = 6,
-      minPsnrDb: Double = 20.0): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("sample_rate", LongType),
-      StructField("channels", LongType),
-      StructField("n_granules", LongType),
-      StructField("n_samples", LongType),
-      StructField("psnr_ok", BooleanType),
-      StructField("esc_table", BooleanType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.select(col(idCol).cast("long"), col("media")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        // esc_table = the normative-only decode refuses the stream (an
-        // ESC codebook was genuinely selected); the opted-in decode then
-        // carries the fidelity leg
-        val normativeOnly = Mp3Layer3.decode(bytes)
-        Mp3Layer3.decode(bytes, allowNonNormative = true).map { d =>
-          val ref = mp3TestTone(id, nGranules)
-          val ok = if (d.channels == 2) {
-            // stereo: both channels must fit their OWN tone — except on
-            // the intensity leg, where BOTH decoded channels are
-            // position-scaled renditions of the left tone (the gain fit
-            // absorbs the kl/kr coefficients)
-            val half = d.samples.length / 2
-            val dl = Array.tabulate(half)(i => d.samples(2 * i))
-            val dr = Array.tabulate(half)(i => d.samples(2 * i + 1))
-            val (_, _, pl) = Mp3Layer3.fitPsnr(ref, dl, 1500)
-            val (_, _, pr) = Mp3Layer3.fitPsnr(
-              if (mp3IntensityShape(id)) ref
-              else mp3TestToneRight(id, nGranules), dr, 1500)
-            pl >= minPsnrDb && pr >= minPsnrDb
-          } else {
-            val (_, _, psnr) = Mp3Layer3.fitPsnr(ref, d.samples, 1500)
-            psnr >= minPsnrDb
-          }
-          Row(id, d.sampleRate.toLong, d.channels.toLong,
-            d.nGranules.toLong, d.samples.length.toLong, ok,
-            normativeOnly.isEmpty)
-        }
-      }
-    }(enc)
-  }
-
   // ------------------------------------------------------------- FLAC
 
   /** per-id deterministic 16-bit PCM for the FLAC battery row */
@@ -1297,189 +1147,6 @@ object Multimodal {
     }(enc)
   }
 
-  // ------------------------------------------------------------ VORBIS
-
-  /** Vorbis battery shapes per id: 0 mono all-long; 1 mono mixed
-    * long/short with ramp floor + type-2 third pass + residue format 0;
-    * 2 stereo long residue-2 interleave (uncoupled); 3 stereo COUPLED
-    * mixed plan with masterbook/subclass floor + third pass.
-    */
-  private def vorbisShape(id: Long): Int = (id % 4).toInt
-
-  private def vorbisPlan(shape: Int): Seq[Boolean] = shape match {
-    case 1 => Seq(true, true, false, false, false, true, true)
-    case 2 => Seq.fill(5)(true)
-    case 3 => Seq(true, true, false, false, true)
-    case _ => Seq.fill(6)(true)
-  }
-
-  private def vorbisTone(id: Long, n: Int, right: Boolean): Array[Double] = {
-    val sr = 44100
-    val freq = (300.0 + (id % 10).toDouble * 250.0) * (if (right) 1.5 else 1.0)
-    val amp = if (right) 0.3 else 0.45
-    Array.tabulate(n)(i => amp * math.sin(2 * math.Pi * freq * i / sr))
-  }
-
-  /** Synthesize one REAL Ogg Vorbis stream per row ([[VorbisEncoder]]:
-    * in-stream codebooks, floor1, residue 0/1/2, coupling, mixed block
-    * plans, Ogg paging).
-    */
-  def synthesizeVorbisAudio(df: DataFrame, idCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType), StructField("media", BinaryType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    spreadIds(df.select(col(idCol).cast("long"))).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val shape = vorbisShape(id)
-        val plan = vorbisPlan(shape)
-        val need = VorbisEncoder.leadOffset(plan) +
-          VorbisEncoder.decodedLength(plan) + 2048
-        val left = vorbisTone(id, need, right = false)
-        val bytes = shape match {
-          case 1 => VorbisEncoder.encode(Array(left), 44100, plan,
-            rampFloor = true, thirdPass = true, residueType = 0)
-          case 2 => VorbisEncoder.encode(
-            Array(left, vorbisTone(id, need, right = true)), 44100, plan)
-          case 3 => VorbisEncoder.encode(
-            Array(left, vorbisTone(id, need, right = true)), 44100, plan,
-            coupled = true, subclassFloor = true, thirdPass = true)
-          case _ => VorbisEncoder.encode(Array(left), 44100, plan)
-        }
-        Row(id, bytes)
-      }
-    }(enc)
-  }
-
-  /** Full Vorbis decode ([[VorbisCodec]]) + per-channel delay+gain
-    * fitted PSNR against the regenerated tones. Output: (id,
-    * sample_rate, channels, n_blocks, n_short_blocks, n_samples,
-    * coupled, psnr_ok).
-    */
-  def vorbisDecodeFrame(df: DataFrame, idCol: String,
-      minPsnrDb: Double = 20.0): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("sample_rate", LongType),
-      StructField("channels", LongType),
-      StructField("n_blocks", LongType),
-      StructField("n_short_blocks", LongType),
-      StructField("n_samples", LongType),
-      StructField("coupled", BooleanType),
-      StructField("psnr_ok", BooleanType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.select(col(idCol).cast("long"), col("media")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val shape = vorbisShape(id)
-        val plan = vorbisPlan(shape)
-        val offset = VorbisEncoder.leadOffset(plan)
-        VorbisCodec.decode(r.getAs[Array[Byte]](1)).map { d =>
-          val nCh = d.channels
-          val need = offset + VorbisEncoder.decodedLength(plan) + 2048
-          val ok = (0 until nCh).forall { ch =>
-            val ref = vorbisTone(id, need, right = ch == 1).drop(offset)
-            val dec = Array.tabulate(d.samples.length / nCh)(i =>
-              d.samples(i * nCh + ch))
-            val (_, _, p) = Mp3Layer3.fitPsnr(ref, dec, 4)
-            p >= minPsnrDb
-          }
-          Row(id, d.sampleRate.toLong, nCh.toLong, d.nBlocks.toLong,
-            d.nShortBlocks.toLong, (d.samples.length / nCh).toLong,
-            d.usedCoupling, ok)
-        }
-      }
-    }(enc)
-  }
-
-  // --------------------------------------------------------- AAC-LC
-
-  /** AAC battery shapes per id: 0 mono all-long; 1 mono transition plan
-    * (LONG_START → EIGHT_SHORT ×2 → LONG_STOP); 2 stereo CPE with M/S;
-    * 3 mono KBD windows + TNS.
-    */
-  private def aacShape(id: Long): Int = (id % 4).toInt
-
-  private def aacPlan(shape: Int): Seq[Int] = shape match {
-    case 1 => Seq(0, 1, 2, 2, 3, 0)
-    case 2 => Seq.fill(5)(0)
-    case 3 => Seq.fill(5)(0)
-    case _ => Seq.fill(6)(0)
-  }
-
-  /** Synthesize one REAL ADTS AAC-LC stream per row ([[AacEncoder]] —
-    * in-repo canonical codebooks, see [[AacTables]]'s honesty note).
-    */
-  def synthesizeAacAudio(df: DataFrame, idCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType), StructField("media", BinaryType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    spreadIds(df.select(col(idCol).cast("long"))).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val shape = aacShape(id)
-        val plan = aacPlan(shape)
-        val n = plan.length * 1024 + 1024
-        val left = vorbisTone(id, n, right = false)
-        val bytes = shape match {
-          case 2 => AacEncoder.encode(
-            Array(left, vorbisTone(id, n, right = true)), 44100, plan,
-            msStereo = true)
-          case 3 => AacEncoder.encode(Array(left), 44100, plan,
-            kbdShape = true, tnsLength = 12)
-          case _ => AacEncoder.encode(Array(left), 44100, plan)
-        }
-        Row(id, bytes)
-      }
-    }(enc)
-  }
-
-  /** Full AAC-LC decode + per-channel fitted PSNR. The default decode
-    * path must REFUSE (normative codebooks are offline-unobtainable —
-    * the `refused` column pins that, like q_mp3_decode's esc_table);
-    * the opted-in decode carries the fidelity leg. Output: (id,
-    * sample_rate, channels, n_frames, n_short_frames, n_samples,
-    * ms_used, tns_used, refused, psnr_ok).
-    */
-  def aacDecodeFrame(df: DataFrame, idCol: String,
-      minPsnrDb: Double = 20.0): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("sample_rate", LongType),
-      StructField("channels", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_short_frames", LongType),
-      StructField("n_samples", LongType),
-      StructField("ms_used", BooleanType),
-      StructField("tns_used", BooleanType),
-      StructField("refused", BooleanType),
-      StructField("psnr_ok", BooleanType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.select(col(idCol).cast("long"), col("media")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        val refused = AacLc.decode(bytes).isEmpty
-        AacLc.decode(bytes, allowNonNormative = true).map { d =>
-          val shape = aacShape(id)
-          val plan = aacPlan(shape)
-          val n = plan.length * 1024 + 1024
-          val nCh = d.channels
-          val ok = (0 until nCh).forall { ch =>
-            val ref = vorbisTone(id, n, right = ch == 1)
-            val dec = Array.tabulate(d.samples.length / nCh)(i =>
-              d.samples(i * nCh + ch)).drop(1024)
-            val (_, _, p) = Mp3Layer3.fitPsnr(ref, dec, 4)
-            p >= minPsnrDb
-          }
-          Row(id, d.sampleRate.toLong, nCh.toLong, d.nFrames.toLong,
-            d.nShortFrames.toLong, (d.samples.length / nCh).toLong,
-            d.msUsed, d.tnsUsed, refused, ok)
-        }
-      }
-    }(enc)
-  }
-
   val MetaSchema: StructType = StructType(Seq(
     StructField("media_type", StringType),
     StructField("n_bytes", LongType),
@@ -1497,19 +1164,14 @@ object Multimodal {
         octet_length(col(payloadCol)).cast("long").as("n_bytes"),
         md5(col(payloadCol)).as("checksum")).as("meta"))
 
-  /** STUB ??? — reached only for the pixel/PCM KERNELS still outside the
-    * pure-JVM boundary: H.264, and MP3 frames whose Huffman codebook
-    * is in the offline-unavailable set (tables 11, 13, 16-31 — see
-    * [[Mp3Tables.big]]); a real implementation calls ffmpeg via JNI here.
-    * Everything else decodes for REAL: images via [[decode]] (PPM/BMP/QOI
-    * native; JPEG/PNG via the JDK codec since round 6), audio via
-    * [[decodeWav]] (PCM native; G.711 μ-law/A-law and IMA-ADPCM through
-    * the closed-form [[AudioCodecs]] kernels since round 7), MPEG-1
-    * Layer III through the full [[Mp3Layer3]] pipeline (round 8: bit
-    * reservoir, Huffman, requantize, stereo, IMDCT, polyphase synthesis),
-    * video via [[MediaContainers.aviFrameCheck]] (MJPEG-in-AVI through
-    * the JDK JPEG codec), and MP3/MP4 CONTAINER metadata (duration,
-    * codec, sample tables) in [[MediaContainers]]. The stub derives `dim`
+  /** STUB ??? — the feature vector for payloads with no native pixel
+    * kernel here: H.264 video, lossy audio (MP3, AAC, Vorbis — parsed at
+    * the container level only, in [[MediaContainers]]) and any other
+    * non-raster bytes; a real implementation calls a native codec via JNI
+    * here. Rasters decode for REAL through [[decode]] (PPM/BMP/QOI native;
+    * JPEG/PNG via the JDK codec), PCM/G.711/IMA-ADPCM/FLAC audio through
+    * [[decodeAudio]], and MJPEG-in-AVI video through
+    * [[MediaContainers.aviFrameCheck]]. The stub derives `dim`
     * deterministic floats from a rolling view of the bytes so downstream
     * ops (similarity, dedup) are exercisable end-to-end.
     */

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,18 +17,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val qname = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: single-file serialized sort shuffle writes
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    // SPARK_EXTRA_CONF="k=v;k=v" for conf experiments (shared parser)
-    graft.Bench.applyExtraConf(b)
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession.build(defaultCpus = 32)
     case class Job(id: Int, t0: Long, var t1: Long = 0L,
       var nTasks: Int = 0, var taskTimeMs: Long = 0L, var nStages: Int = 0)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]

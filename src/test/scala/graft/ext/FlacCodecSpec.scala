@@ -118,6 +118,18 @@ class FlacCodecSpec extends graft.SparkSpec {
       FlacCodec.encode(Array(x, r), 44100, midSide = true)).get
     assert(st.channels == 2 && st.samples.length == x.length * 2)
     assert(st.samples(0) == x(0) && st.samples(1) == r(0))
+    // lossy formats are parsed at the container level only: the container
+    // walk recognises each stream, and decodeAudio says "not decodable"
+    // instead of returning fake PCM
+    val mp3 = MediaContainers.mp3Pack(versionId = 3, layer = 3, srIdx = 0,
+      mono = true, frames = Seq.fill(8)((9, 0)))
+    assert(MediaContainers.parseMp3(mp3).exists(_.nFrames == 8))
+    assert(Multimodal.decodeAudio(mp3).isEmpty)
+    val vorbis = MediaContainers.oggPack(
+      Seq(MediaContainers.vorbisIdPacket(channels = 2, rate = 44100),
+        Array.fill[Byte](300)(5)), serial = 5, Seq(0L, 1024L))
+    assert(MediaContainers.parseOgg(vorbis).exists(_.codec == "vorbis"))
+    assert(Multimodal.decodeAudio(vorbis).isEmpty)
   }
 
   test("8-bit and 24-bit sample sizes round trip") {
