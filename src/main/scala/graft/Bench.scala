@@ -41,7 +41,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val tFix0 = System.nanoTime()
-    GraftQueries.prewarmFixtures(spark, sfDir)
+    battery.BatteryFixtures.prewarmFixtures(spark, sfDir)
     val fixturesSec = (System.nanoTime() - tFix0) / 1e9
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b limits the run (local profiling loop)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -117,12 +117,22 @@ object Bench {
       else s"""{"p50":${fmt(median(ratios))},"max":${fmt(ratios.max)}}"""
     val total = medians.map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val minsByName = mins.toMap
+    // per operator family: the sum of its queries' medians and minimums
+    val familyOf = battery.Battery.familyOf
+    val familiesJson = medians.groupBy { case (n, _) => familyOf(n) }.toSeq.sortBy(_._1)
+      .map { case (f, ms) =>
+        s""""$f":{"median_sum":${fmt(ms.map(_._2).sum)},"min_sum":${fmt(ms.map(m => minsByName(m._1)).sum)}}"""
+      }.mkString("{", ",", "}")
     // full per-query detail goes to the results file …
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qJson(medians)},"queries_min":${qJson(mins)},"repeat":$repeat,"noise":$noiseJson,"fixtures_sec":${fmt(fixturesSec)},"n_queries":${medians.size},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qJson(medians)},"queries_min":${qJson(mins)},"repeat":$repeat,"noise":$noiseJson,"fixtures_sec":${fmt(fixturesSec)},"n_queries":${medians.size},"failed":$failedJson,"families":$familiesJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     try Files.writeString(Paths.get(outPath), fullLine + "\n")
-    catch { case _: Throwable => () }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        Console.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+    }
     // … while the stdout line keeps only the slowest queries: the driver
     // captures a bounded tail of the process output and a full 338-query
     // map (~10 KB) overflows it — round 2's line was truncated and
@@ -130,7 +140,6 @@ object Bench {
     val top = medians.sortBy(-_._2).take(20)
     // the same slowest-by-median queries' MINIMUMS: the noise-robust
     // number a reader should trust when median and min disagree
-    val minsByName = mins.toMap
     val topMin = top.map { case (n, _) => n -> minsByName(n) }
     val stdoutLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qJson(top)},"queries_min":${qJson(topMin)},"repeat":$repeat,"noise":$noiseJson,"fixtures_sec":${fmt(fixturesSec)},"n_queries":${medians.size},"failed":$failedJson,"full":"$outPath","sf":"$sfDir"}"""

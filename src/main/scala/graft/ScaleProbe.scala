@@ -67,7 +67,7 @@ object ScaleProbe {
 
     def runPass(dir: String): (Double, Map[String, Double]) = {
       val tFix0 = System.nanoTime()
-      GraftQueries.prewarmFixtures(spark, dir)
+      battery.BatteryFixtures.prewarmFixtures(spark, dir)
       val fixturesSec = (System.nanoTime() - tFix0) / 1e9
       val times = probe.map { name =>
         val fn = SparkEntry.queries(name)

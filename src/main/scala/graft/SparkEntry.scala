@@ -1,15 +1,17 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import graft.battery.Battery
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    GraftQueries.all("q_revenue_by_nation")(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
+    queries("q_revenue_by_nation")(spark, "/root/testdata/sf0.001")
+  /** One entry per implemented operator from SURVEY.md §2, from the
+    * battery's records (`graft.battery`, one module per operator family). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    GraftQueries.all ++ GraftQueriesR4.all ++ GraftQueriesR5.all ++ GraftQueriesR5b.all ++ GraftQueriesR6.all ++ GraftQueriesR7.all ++ GraftQueriesR8.all ++ GraftQueriesR9.all ++ GraftQueriesR10.all ++ GraftQueriesR11.all
+    Battery.byName(Battery.specs)(_.run)
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables, from the same records. */
   def oracleSql: Map[String, String] =
-    GraftQueries.oracles ++ GraftQueriesR4.oracles ++ GraftQueriesR5.oracles ++ GraftQueriesR5b.oracles ++ GraftQueriesR6.oracles ++ GraftQueriesR7.oracles ++ GraftQueriesR8.oracles ++ GraftQueriesR9.oracles ++ GraftQueriesR10.oracles ++ GraftQueriesR11.oracles
+    Battery.byName(Battery.specs)(_.oracleSql)
 }

@@ -9,10 +9,6 @@ object Verify {
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val spark = HarnessSession.build(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
-    def deleteRecursively(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-      f.delete(): Unit
-    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -22,7 +18,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not leave a PREVIOUS dump in place — a stale
         // parquet would compare clean and hide the failure as a green row
-        deleteRecursively(new java.io.File(s"$outDir/$name"))
+        battery.BatteryFixtures.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -40,7 +40,7 @@ object ProfileQuery {
     }
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    graft.GraftQueries.prewarmFixtures(spark, sfDir)
+    graft.battery.BatteryFixtures.prewarmFixtures(spark, sfDir)
     val fn = graft.SparkEntry.queries(qname)
     (1 to repeats).foreach { rep =>
       jobs.synchronized(jobs.clear())
