@@ -36,6 +36,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = HarnessSession.build(defaultCpus = 4)
+    try run(spark, sfDir)
+    finally { battery.BatteryFixtures.cleanup(spark); spark.stop() }
+  }
+
+  private def run(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     // warm up codegen/session state so the first measured query isn't
     // charged for JVM/session initialization
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -64,13 +69,13 @@ object Bench {
     while (pass < repeat) {
       order.foreach { case (name, fn) =>
         if (!failed(name)) {
-          // operators persist their multi-consumer index frames (postings,
-          // adjacency, candidate sets) and cannot unpersist them — the result
-          // is lazy. Left in place, 300+ queries' worth of cached blocks pile
-          // up in the block manager and the whole battery degrades (~2 s/query
-          // of eviction + GC drag, measured). Release each run's NEW
-          // caches after timing so every run starts cold and the
-          // prewarmed shared fixtures stay alive (set diff).
+          // operators checkpoint their multi-consumer frames (postings,
+          // adjacency, candidate sets); the context cleaner frees those
+          // blocks only once a driver GC finds the frames unreferenced, so
+          // 300+ queries' worth would pile up in the block manager between
+          // GCs. Release each run's NEW blocks after timing so every run
+          // starts cold and the prewarmed shared fixtures stay alive (set
+          // diff) — the sweep earlier rounds' numbers were measured with.
           val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count(): Unit } catch {
@@ -147,6 +152,5 @@ object Bench {
     // LAST so a bounded tail capture always contains one complete JSON line
     println(fullLine)
     println(stdoutLine)
-    spark.stop()
   }
 }

@@ -54,7 +54,12 @@ object ScaleProbe {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/sf1")
     val replicate = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val spark = HarnessSession.build(defaultCpus = 32)
+    try run(spark, srcDir, outDir, replicate)
+    finally { battery.BatteryFixtures.cleanup(spark); spark.stop() }
+  }
 
+  private def run(spark: SparkSession, srcDir: String, outDir: String,
+      replicate: Int): Unit = {
     generate(spark, srcDir, outDir, replicate)
 
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
@@ -75,7 +80,8 @@ object ScaleProbe {
         val t0 = System.nanoTime()
         fn(spark, dir).count(): Unit
         val sec = (System.nanoTime() - t0) / 1e9
-        // release the run's new caches so queries don't degrade each other
+        // release the run's new checkpoint blocks now, not at the next
+        // driver GC, so queries don't degrade each other
         spark.sparkContext.getPersistentRDDs
           .filterNot { case (id, _) => cachedBefore(id) }
           .values.foreach(_.unpersist(blocking = false))
@@ -99,7 +105,6 @@ object ScaleProbe {
       s"""{"replicate":$replicate,"src":"$srcDir","scaled":"$outDir","fixtures_sec":{"sf01":${fmt(fixSmall)},"sf1":${fmt(fixBig)}},"queries":$rows}"""
     Files.writeString(Paths.get(sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALEPROBE.json")), line + "\n")
     println(line)
-    spark.stop()
   }
 
   /** Replicate every table of `srcDir` into `outDir`, `replicate`× with

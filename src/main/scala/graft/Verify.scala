@@ -8,6 +8,12 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local dev loops)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val spark = HarnessSession.build(defaultCpus = 4)
+    try run(spark, sfDir, outDir, only)
+    finally { battery.BatteryFixtures.cleanup(spark); spark.stop() }
+  }
+
+  private def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      outDir: String, only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -36,6 +42,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -118,6 +118,27 @@ object BatteryFixtures {
     (if (held == null) fresh else held).value.asInstanceOf[T]
   }
 
+  /** Remove what this session's fixtures wrote under the target
+    * directory: every `graft-…-<applicationId>` scratch directory and Derby
+    * database (Derby is shut down first — a booted database holds its
+    * files), and forget the session's memo cells. Directories of other
+    * applicationIds, a concurrent run's live fixtures, are left alone.
+    * Called from the `finally` of every main that runs battery queries.
+    */
+  def cleanup(s: SparkSession): Unit = {
+    val appId = s.sparkContext.applicationId
+    val suffix = "-" + appId.replaceAll("[^0-9A-Za-z]", "")
+    cells.keySet.removeIf(_._1 == appId)
+    Option(new java.io.File(targetDir).listFiles).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("graft-") && f.getName.endsWith(suffix))
+      .foreach { f =>
+        if (f.getName.startsWith("graft-derby-"))
+          try java.sql.DriverManager.getConnection(s"jdbc:derby:${f.getPath};shutdown=true")
+          catch { case _: java.sql.SQLException => () } // shutdown always throws
+        deleteRecursively(f)
+      }
+  }
+
   /** Embedded-Derby database built from the sf-dir parquet (live-JDBC
     * battery fixture): region + nation with real PK/FK constraints plus an
     * `adjacency` M:N link table (composite PK over its two FKs — the 3NF
@@ -287,7 +308,7 @@ object BatteryFixtures {
     */
   private[graft] def ingestCore(s: SparkSession, d: String) = memo(s, d, "core") {
     // compile the five resources CONCURRENTLY: each compile() eagerly
-    // persists+counts its shuffled base, and those independent Spark jobs
+    // checkpoints an order-unstable base, and those independent Spark jobs
     // interleave across the cores instead of serializing on the driver
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration

@@ -6,6 +6,7 @@ import graft.fixtures.TpchGraph
 import graft.ext.{Corpus, Dedup, Similarity, TextAnalysis, Url}
 
 import BatteryFixtures._
+import graft.graph.Rounds.materialize
 
 /** Dedup and similarity: exact and near-duplicate detection, record
   * linkage, vector/lexical retrieval and the sketches behind them.
@@ -1696,12 +1697,10 @@ object DedupQueries extends Family("dedup") {
     // not guessed)
     QuerySpec("q_lsh_quality", { (s, d) =>
       val docs = t(s, d)("documents").where(col("doc_id") < 200)
-      val cand = Dedup.minhashCandidates(docs, "doc_id", "text",
-        n = 3, bands = 4, rowsPerBand = 4)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exact = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minSim = 0.2)
-        .withColumnsRenamed(Map("doc_id" -> "id_a")).select("id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cand = materialize(Dedup.minhashCandidates(docs, "doc_id", "text",
+        n = 3, bands = 4, rowsPerBand = 4))
+      val exact = materialize(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, minSim = 0.2)
+        .withColumnsRenamed(Map("doc_id" -> "id_a")).select("id_a", "id_b"))
       val hit = cand.join(exact, Seq("id_a", "id_b"), "left_semi")
       cand.agg(count(lit(1)).as("n_candidates"))
         .crossJoin(exact.agg(count(lit(1)).as("n_exact")))

@@ -8,6 +8,7 @@ import graft.fixtures.TpchGraph
 import graft.ext.{Clustering, Corpus, Events, Factorize, Privacy, Regression, Similarity, Stats}
 
 import BatteryFixtures._
+import graft.graph.Rounds.materialize
 
 /** Statistics and ML: event analytics, time series, tests, profiling
   * and model fitting, each with a closed-form DuckDB twin.
@@ -1791,11 +1792,10 @@ object StatsQueries extends Family("stats") {
     // so mean |φᵢ| = |b_q|·Σ|n·xᵢ − Sᵢ| / (n²·1e6) is exact-integer up
     // to one division; per-feature attribution share
     QuerySpec("q_shapley_ols", { (s, d) =>
-      val li = t(s, d)("lineitem").select(
+      val li = materialize(t(s, d)("lineitem").select(
         round(col("l_quantity")).cast("long").as("x1"),
         round(col("l_discount") * 100).cast("long").as("x2"),
-        round(col("l_extendedprice")).cast("long").as("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(col("l_extendedprice")).cast("long").as("y")))
       val g = Regression.gram2(li, "x1", "x2", "y")
       val (_, b1, b2, _) = Regression.solve2(g)
       def q6(v: Double) = BigDecimal(v * 1e6)
@@ -1805,7 +1805,6 @@ object StatsQueries extends Family("stats") {
         sum(abs(lit(g.n.toLong) * col("x1") - lit(g.sx1.toLong))).as("d1"),
         sum(abs(lit(g.n.toLong) * col("x2") - lit(g.sx2.toLong))).as("d2"))
         .head()
-      li.unpersist(blocking = false)
       val c1 = b1q.abs * BigInt(absRow.getAs[Long]("d1"))
       val c2 = b2q.abs * BigInt(absRow.getAs[Long]("d2"))
       val den = g.n * g.n * BigInt(1000000)

@@ -7,6 +7,7 @@ import graft.model.EdgeKey
 import graft.query._
 import graft.store.{GraphStore, GraphMigration}
 import graft.expr.FilterExpr
+import graft.graph.Rounds
 
 /** CLI entry points mirroring the reference's console scripts
   * (pyproject.toml [project.scripts]: ingest, migrate_schema, ...) as one
@@ -126,29 +127,29 @@ object Main {
       // export shards. Expects (doc_id, text) columns.
       import org.apache.spark.sql.functions._
       import graft.ext.{Corpus, Dedup, TextAnalysis}
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      // each stage's frame is materialized once with its row count
+      def counted(df: org.apache.spark.sql.DataFrame) = {
+        val (m, c) = Rounds.materialize(df, count(lit(1)).as("rows"))
+        (m, c.getLong(0))
+      }
       val docs = spark.read.parquet(docsPath)
       val nInput = docs.count()
-      val passed = docs
-        .where(TextAnalysis.gopherRules(col("text")).getField("pass"))
-        .persist(lvl)
-      val nRules = passed.count()
-      val exactD = Dedup.dropExactDuplicates(passed, "doc_id", "text").persist(lvl)
-      val nExact = exactD.count()
-      val exact = rest match {
+      val (passed, nRules) = counted(docs
+        .where(TextAnalysis.gopherRules(col("text")).getField("pass")))
+      val (exactD, nExact) = counted(Dedup.dropExactDuplicates(passed, "doc_id", "text"))
+      val (exact, nSpan) = rest match {
         case "--span-dedup" :: n :: Nil if n.toIntOption.exists(_ >= 1) =>
           // rewrite docs to their globally-first spans; docs whose every
           // span already appeared elsewhere drop out entirely
-          Corpus.spanDedup(exactD.select(col("doc_id"), col("text")),
+          counted(Corpus.spanDedup(exactD.select(col("doc_id"), col("text")),
             "doc_id", "text", n.toInt)
             .where(col("n_kept") > 0)
-            .select(col("doc_id"), col("dedup_text").as("text")).persist(lvl)
-        case Nil => exactD
+            .select(col("doc_id"), col("dedup_text").as("text")))
+        case Nil => (exactD, nExact)
         case other =>
           System.err.println(s"unknown curate options: ${other.mkString(" ")}")
           sys.exit(2)
       }
-      val nSpan = exact.count()
       val pairs = Dedup.minhashNearDups(exact, "doc_id", "text",
         n = 3, bands = 8, rowsPerBand = 4, minSim = 0.7)
       val clusters = Dedup.connectedComponents(
@@ -176,9 +177,9 @@ object Main {
       // from single-pass aggregates over the ext operators
       import org.apache.spark.sql.functions._
       import graft.ext.{Corpus, Dedup, TextAnalysis}
-      val docs = spark.read.parquet(docsPath)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = docs.count()
+      val (docs, c) = Rounds.materialize(spark.read.parquet(docsPath),
+        count(lit(1)).as("docs"))
+      val n = c.getLong(0)
       val stats = docs.agg(
         sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("tokens"),
         round(avg(TextAnalysis.qualityScore(col("text"))), 4).as("avg_quality"),
@@ -191,7 +192,6 @@ object Main {
         .where(col("n_dups") > 1).count()
       val q = Corpus.tokenQuantiles(docs, "text", Seq(0.5, 0.9, 0.99))
         .collect().map(r => s""""p${(r.getDouble(0) * 100).toInt}": ${r.getDouble(1)}""")
-      docs.unpersist(blocking = false)
       println(s"""{"docs": $n, "tokens": ${stats.getLong(0)}, """ +
         s""""avg_quality": ${stats.getDouble(1)}, """ +
         s""""gopher_pass_rate": ${math.round(stats.getLong(2) * 10000.0 / n) / 10000.0}, """ +

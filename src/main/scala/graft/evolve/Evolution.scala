@@ -1060,9 +1060,9 @@ object Evolution {
             val newOnly = newIdCols.filterNot(shared.contains)
             val withOld = oldOnly.foldLeft(df)((d, c) =>
               d.withColumnRenamed(c, s"__old_$c"))
-            val reKeyedBoth = graft.expr.IdentityDigest.withIdentity(vdefNew)(withOld)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            reKeyedBoth.count(): Unit // freeze row-ordinal-derived ids
+            // a checkpoint freezes row-ordinal-derived ids (a cache would not)
+            val reKeyedBoth = graft.graph.Rounds.materialize(
+              graft.expr.IdentityDigest.withIdentity(vdefNew)(withOld))
             // vertices: restore non-synthetic old-only columns as plain
             // properties; a replaced synthetic _id is dropped
             val vertexOut = oldOnly.foldLeft(reKeyedBoth) { (d, c) =>

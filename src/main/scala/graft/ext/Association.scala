@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Association mining over basket-shaped data (orders × items, sessions ×
   * pages, documents × entities): pairwise co-occurrence support with
@@ -28,11 +29,10 @@ object Association {
     require(minSupport >= 1, "minSupport must be positive")
     require(topK >= 1, "topK must be positive")
     // the distinct basket-item table feeds an EAGER count (nBaskets), the
-    // item-support aggregate, and the bounded self-join — persist it; the
+    // item-support aggregate, and the bounded self-join — materialize it; the
     // eager count alone would otherwise pay the full distinct again
-    val items = df.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
-      .where(col("_i").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val items = materialize(df.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
+      .where(col("_i").isNotNull).distinct())
     val bounded = items
       .withColumn("_sz", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("_b"))))
@@ -67,9 +67,8 @@ object Association {
   def itemNeighbors(df: DataFrame, basketCol: String, itemCol: String,
       k: Int, minPairSup: Long = 1, maxBasketSize: Int = 1000): DataFrame = {
     require(k >= 1, "k must be positive")
-    val items = df.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
-      .where(col("_i").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val items = materialize(df.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
+      .where(col("_i").isNotNull).distinct())
     val bounded = items
       .withColumn("_sz", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("_b"))))

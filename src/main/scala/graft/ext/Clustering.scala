@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Distributed Lloyd k-means over embedding columns — the canonical
   * "cluster 100 TB of vectors" primitive under corpus domain discovery,
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     compute the identical IEEE quotient). Empty clusters keep their
   *     previous centroid.
   *
-  * Scale shape: `rounds` full passes over a persisted quantized projection
+  * Scale shape: `rounds` full passes over a materialized quantized projection
   * of the corpus — the same pass count any k-means does — with per-round
   * shuffle bounded at k·(dim+1) longs per partition. At 100 TB the
   * projection (id + dim longs) is the only thing re-read; centroids travel
@@ -70,8 +71,7 @@ object Clustering {
       k: Int, dim: Int, rounds: Int): DataFrame = {
     require(k >= 2, "k must be >= 2")
     require(dim >= 1 && rounds >= 1, "dim and rounds must be >= 1")
-    val pts = quantize(df, idCol, vecCol, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pts = materialize(quantize(df, idCol, vecCol, dim))
     // seed: k smallest md5(id) — a driver-small collect, not a fit pass
     var cents: Array[Array[Long]] = pts
       .select(col("qv"), md5(col("id").cast("string")).as("h"))
@@ -90,10 +90,8 @@ object Clustering {
         }.toMap
       cents = Array.tabulate(k)(c => upd.getOrElse(c, cents(c)))
     }
-    val out = assign(pts, cents).select(col("id").as(idCol),
+    assign(pts, cents).select(col("id").as(idCol),
       col("cluster"), col("dist_q"))
-    pts.unpersist()
-    out
   }
 
   /** DuckDB replay of [[kmeansFixed]] — rounds unrolled as CTE pairs
@@ -231,7 +229,7 @@ object Clustering {
     * ids uses the `(v − pmod(v, eps)) / eps` identity (exact for negatives
     * too). `eps` is in quantized units (50_000 = 0.05 raw).
     *
-    * Scale shape: one narrow projection persisted, one cell-keyed shuffle
+    * Scale shape: one narrow projection materialized, one cell-keyed shuffle
     * join (9 probe keys/point), one degree aggregate, then CC over the
     * (much smaller) core-core edge list. Skew guard: cells above
     * `hotCellThreshold` occupancy are salted into sub-buckets on both join
@@ -241,15 +239,13 @@ object Clustering {
   def dbscanGrid(df: DataFrame, idCol: String, vecCol: String,
       eps: Long, minPts: Int, hotCellThreshold: Int = 4096): DataFrame = {
     require(eps > 0 && minPts >= 1, "eps and minPts must be positive")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pts = df.select(col(idCol).as("id"),
+    val pts = materialize(df.select(col(idCol).as("id"),
         round(element_at(col(vecCol), 1).cast("double") * Scale, 0)
           .cast("long").as("x"),
         round(element_at(col(vecCol), 2).cast("double") * Scale, 0)
-          .cast("long").as("y"))
-      .persist(lvl)
-    val nbr = epsPairs(pts, eps, hotCellThreshold)
-      .select("ia", "ib").persist(lvl)
+          .cast("long").as("y")))
+    val nbr = materialize(epsPairs(pts, eps, hotCellThreshold)
+      .select("ia", "ib"))
     val cores = nbr.groupBy("ia").agg(count(lit(1)).as("dg"))
       .where(col("dg") >= minPts).select(col("ia").as("id"))
     val coreEdges = nbr
@@ -293,20 +289,17 @@ object Clustering {
   def lofGrid(df: DataFrame, idCol: String, vecCol: String,
       eps: Long, minNbrs: Int, hotCellThreshold: Int = 4096): DataFrame = {
     require(eps > 0 && minNbrs >= 1, "eps and minNbrs must be positive")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pts = df.select(col(idCol).as("id"),
+    val pts = materialize(df.select(col(idCol).as("id"),
         round(element_at(col(vecCol), 1).cast("double") * Scale, 0)
           .cast("long").as("x"),
         round(element_at(col(vecCol), 2).cast("double") * Scale, 0)
-          .cast("long").as("y"))
-      .persist(lvl)
+          .cast("long").as("y")))
     // strict pairs (no self), milli-unit distance; candidates via the same
     // hot-cell-salted eps-cell join as dbscanGrid
-    val nbr = epsPairs(pts, eps, hotCellThreshold)
+    val nbr = materialize(epsPairs(pts, eps, hotCellThreshold)
       .where(col("ia") =!= col("ib"))
       .select(col("ia"), col("ib"),
-        floor(sqrt(col("d2").cast("double")) * 1000.0).cast("long").as("dq"))
-      .persist(lvl)
+        floor(sqrt(col("d2").cast("double")) * 1000.0).cast("long").as("dq")))
     // k-distance surrogate: max eps-neighbor distance per point
     val kdist = nbr.groupBy(col("ib").as("id")).agg(max("dq").as("kd"))
     // reach-dist(a→b) = max(dist, kdist(b)); lrd in 10¹²-units

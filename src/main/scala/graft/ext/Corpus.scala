@@ -684,10 +684,9 @@ object Corpus {
   def classTfidf(df: DataFrame, textCol: String, classCol: String,
       k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val toks = df.select(col(classCol).as("class"),
+    val toks = materialize(df.select(col(classCol).as("class"),
       explode(filter(split(Dedup.normalize(col(textCol)), " "),
-        t => length(t) > 0)).as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        t => length(t) > 0)).as("term")))
     val tf = toks.groupBy("class", "term").agg(count(lit(1)).as("_tf"))
     val f = toks.groupBy("term").agg(count(lit(1)).as("_f"))
     val stats = toks.agg(count(lit(1)).as("_total"),
@@ -777,8 +776,7 @@ object Corpus {
     // join, and (via wd) the norm and dot aggregates — materialize it once,
     // the "inverted index is built once, scanned many times" shape of a
     // real sparse-retrieval pass
-    val cp = postings(corpus, idCol, textCol, "_did")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cp = materialize(postings(corpus, idCol, textCol, "_did"))
     // N as a driver scalar (one parquet-metadata-cheap count job, the same
     // driver-scalar pattern as bpeTrain's argmax): folding it in as a
     // literal keeps the idf table free of the 1-row crossJoin, which the
@@ -794,8 +792,7 @@ object Corpus {
       .select(col("term"), col("_q"))
     // weighted postings feed both the norm aggregate and the dot-product
     // join — one more single-build/multi-scan index frame
-    val wd = cp.join(idfQ, "term")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wd = materialize(cp.join(idfQ, "term"))
     val wq = postings(queries, qIdCol, qTextCol, "_qid").join(idfQ, "term")
     val normD = wd.groupBy(col("_did"))
       .agg(sum(col("tf") * col("tf") * col("_q")).as("_n2d"))
@@ -876,18 +873,17 @@ object Corpus {
     * one partial-aggregating pair count, a 1-row argmax collect (the pair
     * parameterizes the next plan, the same driver-scalar pattern as a
     * KMeans centroid update), and a narrow per-row fold. The evolving
-    * word table is persisted per round with flat lineage.
+    * word table is materialized per round with flat lineage.
     */
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
       localVocabLimit: Long = 500000L): Seq[(String, String, Long)] = {
     require(nMerges >= 1, "nMerges must be positive")
     val toks = filter(split(Dedup.normalize(col(textCol)), " "), t => length(t) > 0)
-    var words = df.select(explode(toks).as("word"))
+    val (words0, c) = materialize(df.select(explode(toks).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .select(filter(split(col("word"), ""), s => length(s) > 0).as("syms"),
-        col("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocabRows = words.count()
+        col("freq")), count(lit(1)).as("vocab_rows"))
+    val vocabRows = c.getLong(0)
     // Zipf compresses the corpus into this distinct-word table, and every
     // merge round touches ONLY the table — so when the vocabulary is
     // driver-small (the common case even for huge corpora; vocab grows
@@ -899,11 +895,11 @@ object Corpus {
     // silently; tests pass 0 to force the distributed loop and assert both
     // branches produce identical merge tables
     if (vocabRows <= localVocabLimit) {
-      val local = words.collect()
+      val local = words0.collect()
         .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-      words.unpersist(blocking = false)
       return bpeTrainLocal(local, nMerges)
     }
+    var words = words0
     val merges = scala.collection.mutable.Buffer[(String, String, Long)]()
     var r = 0
     var exhausted = false
@@ -922,16 +918,11 @@ object Corpus {
         val (a, b, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((a, b, cnt))
-        val next = words
-          .select(bpeMergeOnce(col("syms"), a, b).as("syms"), col("freq"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count(): Unit
-        words.unpersist(blocking = false)
-        words = next
+        words = materialize(words
+          .select(bpeMergeOnce(col("syms"), a, b).as("syms"), col("freq")))
         r += 1
       }
     }
-    words.unpersist(blocking = false)
     merges.toSeq
   }
 
@@ -1378,7 +1369,7 @@ object Corpus {
     * in DuckDB exactly, unrolled round by round.
     *
     * Scale shape: the token explode + count groupBy runs ONCE into a
-    * persisted feature table (≤ dim+1 rows per doc). Each round is a
+    * materialized feature table (≤ dim+1 rows per doc). Each round is a
     * single job: margins are a map-side-combinable groupBy with the weight
     * vector folded in as a broadcast literal map (the model is driver-small
     * like any trained model — the corpus never leaves the cluster), the
@@ -1394,8 +1385,7 @@ object Corpus {
       labelCol: String, dim: Int = 32, rounds: Int = 3): (Map[Long, Long], Int) = {
     require(dim >= 2, "dim must be >= 2")
     require(rounds >= 1, "rounds must be >= 1")
-    val feats = hashedCounts(df, idCol, textCol, labelCol, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = materialize(hashedCounts(df, idCol, textCol, labelCol, dim))
     var w = Map.empty[Long, Long]
     var r = 0
     var converged = false
@@ -1413,7 +1403,6 @@ object Corpus {
         r += 1
       }
     }
-    feats.unpersist()
     (w, r)
   }
 
@@ -1769,9 +1758,8 @@ object Corpus {
       textCol: String, n: Int, k: Int): org.apache.spark.sql.DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = df.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = graft.ext.Dedup.explodeShingles(df, idCol, textCol, n)
-      .select(col(idCol).as("_id"), col("shingle")).distinct().persist(lvl)
+    val sh = materialize(graft.ext.Dedup.explodeShingles(df, idCol, textCol, n)
+      .select(col(idCol).as("_id"), col("shingle")).distinct())
     var covered = materialize(sh.select(col("shingle")).limit(0))
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long, Long)]
     var round = 1
@@ -1792,7 +1780,6 @@ object Corpus {
         round += 1
       }
     }
-    sh.unpersist()
     import org.apache.spark.sql.types._
     val idField = df.schema(idCol)
     spark.createDataFrame(
@@ -1862,9 +1849,8 @@ object Corpus {
     val terms = queryTerms.map(_.toLowerCase).distinct.sorted
     val toks = filter(split(Dedup.normalize(col(textCol)), " "),
       t => length(t) > 0)
-    val docs = df.select(col(idCol), toks.as("_t"))
-      .withColumn("dl", size(col("_t")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = materialize(df.select(col(idCol), toks.as("_t"))
+      .withColumn("dl", size(col("_t")).cast("long")))
     val coll = docs.agg(sum("dl").as("c_len"))
     val tf = docs
       .select(col(idCol), explode(filter(col("_t"), t => t.isin(terms: _*)))

@@ -69,13 +69,11 @@ object Dedup {
       minSim: Double,
       maxShingleFreq: Long = 10000L
   ): DataFrame = {
-    val sh = explodeShingles(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = materialize(explodeShingles(df, idCol, textCol, n))
     val filtered = {
       val freq = sh.groupBy("shingle").agg(count(lit(1)).as("_f"))
         .where(col("_f") <= maxShingleFreq)
-      sh.join(filtered_hint(freq.select("shingle")), Seq("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      materialize(sh.join(filtered_hint(freq.select("shingle")), Seq("shingle")))
     }
     val sizes = filtered.groupBy(idCol).agg(count(lit(1)).as("_sz"))
     val a = filtered.withColumnsRenamed(Map(idCol -> "id_a"))
@@ -113,11 +111,10 @@ object Dedup {
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       minSim: Double): DataFrame = {
     require(minSim > 0 && minSim <= 1, "minSim in (0,1]")
-    val toks = df.select(col(idCol).as("_id"),
+    val toks = materialize(df.select(col(idCol).as("_id"),
       explode(filter(split(normalize(col(textCol)), " "),
         t => length(t) > 0)).as("tok"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val dfs = toks.groupBy("tok").agg(count(lit(1)).as("_df"))
     val sz = toks.groupBy("_id").agg(count(lit(1)).as("_sz"))
     val wDoc = Window.partitionBy(col("_id"))
@@ -164,8 +161,7 @@ object Dedup {
     val filtered = {
       val freq = sh.groupBy("shingle").agg(count(lit(1)).as("_f"))
         .where(col("_f") <= maxShingleFreq)
-      sh.join(filtered_hint(freq.select("shingle")), Seq("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      materialize(sh.join(filtered_hint(freq.select("shingle")), Seq("shingle")))
     }
     val sizes = filtered.groupBy(idCol).agg(count(lit(1)).as("_sz"))
     val a = filtered.withColumnsRenamed(Map(idCol -> "id_a"))
@@ -247,12 +243,10 @@ object Dedup {
       .select(col(idCol).as("id_new"), col("band"), col("bsig"))
     val cand = l.join(r, Seq("band", "bsig"))
       .select("id_old", "id_new").distinct()
-    val shO = explodeShingles(existing, idCol, textCol, n)
-      .withColumnsRenamed(Map(idCol -> "id_old"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shN = explodeShingles(incoming, idCol, textCol, n)
-      .withColumnsRenamed(Map(idCol -> "id_new"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shO = materialize(explodeShingles(existing, idCol, textCol, n)
+      .withColumnsRenamed(Map(idCol -> "id_old")))
+    val shN = materialize(explodeShingles(incoming, idCol, textCol, n)
+      .withColumnsRenamed(Map(idCol -> "id_new")))
     val szO = shO.groupBy("id_old").agg(count(lit(1)).as("_sza"))
     val szN = shN.groupBy("id_new").agg(count(lit(1)).as("_szb"))
     val inter = cand.join(shO, Seq("id_old"))
@@ -271,8 +265,7 @@ object Dedup {
       n: Int, bands: Int, rowsPerBand: Int, minSim: Double
   ): DataFrame = {
     val cand = minhashCandidates(df, idCol, textCol, n, bands, rowsPerBand)
-    val sh = explodeShingles(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = materialize(explodeShingles(df, idCol, textCol, n))
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("_sz"))
     val inter = cand
       .join(sh.withColumnsRenamed(Map(idCol -> "id_a")), Seq("id_a"))
@@ -390,16 +383,15 @@ object Dedup {
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20
   ): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // undirected: both directions, derived from ONE evaluation of `pairs`
     // (a union of two selects would run the upstream candidate pipeline —
-    // typically a full MinHash/LSH pass — twice on first materialization)
-    val edges = pairs
+    // typically a full MinHash/LSH pass — twice)
+    val edges = materialize(pairs
       .select(explode(array(
         struct(col(aCol).as("_src"), col(bCol).as("_dst")),
         struct(col(bCol).as("_src"), col(aCol).as("_dst")))).as("_e"))
       .select(col("_e._src").as("_src"), col("_e._dst").as("_dst"))
-      .distinct().persist(lvl)
+      .distinct())
     var labels = materialize(nodes.select(col(idCol).as("_id"))
       .distinct().withColumn("component", col("_id")))
     var converged = false
@@ -433,7 +425,6 @@ object Dedup {
       converged = c.getLong(0) == 0L
       it += 1
     }
-    edges.unpersist()
     // silent partial propagation would split clusters (duplicate canonical
     // survivors) — fail loudly instead; hash-min + pointer jumping needs
     // ~log2(diameter) rounds

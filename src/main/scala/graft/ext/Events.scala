@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Event-stream analytics over (user, timestamp, event-type) data — the
   * funnel/cohort layer a product-analytics deployment runs at 100 TB.
@@ -307,10 +308,9 @@ object Events {
     require(maxLag >= 1 && maxLag <= 24, "maxLag in [1, 24]")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("_k").orderBy("_t")
-    val base = df.select(col(keyCol).as("_k"), col(tsCol).as("_t"),
+    val base = materialize(df.select(col(keyCol).as("_k"), col(tsCol).as("_t"),
         col(valueCol).cast("long").as("_x"))
-      .withColumn("_i", row_number().over(w).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_i", row_number().over(w).cast("long")))
     val tot = base.groupBy("_k").agg(count(lit(1)).as("n"),
       sum("_x").as("s"), sum(col("_x") * col("_x")).as("sxx"))
     val a = base.withColumn("_l", explode(sequence(lit(1), lit(maxLag))))
@@ -331,7 +331,6 @@ object Events {
         BigInt(r.getAs[Long]("sp")), BigInt(r.getAs[Long]("sh")),
         BigInt(r.getAs[Long]("st")))
     }
-    base.unpersist(blocking = false)
     val spark = df.sparkSession
     import spark.implicits._
     val out = rows.groupBy(_._1).toSeq.flatMap { case (k, ls) =>
@@ -498,10 +497,9 @@ object Events {
       .partitionBy("_k").orderBy("_t")
     val wDesc = org.apache.spark.sql.expressions.Window
       .partitionBy("_k").orderBy(col("_t").desc)
-    val base = df.select(col(keyCol).as("_k"), col(tsCol).as("_t"),
+    val base = materialize(df.select(col(keyCol).as("_k"), col(tsCol).as("_t"),
         col(valueCol).cast("long").as("_x"))
-      .withColumn("_i", row_number().over(w).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_i", row_number().over(w).cast("long")))
     val tot = base.groupBy("_k").agg(count(lit(1)).as("n"),
       sum("_x").as("s"), sum(col("_x") * col("_x")).as("sxx"))
     val a = base.withColumn("_l", explode(sequence(lit(1), lit(2))))
@@ -529,7 +527,6 @@ object Events {
           BigInt(r.getAs[Long]("st")), r.getAs[Long]("xn"),
           r.getAs[Long]("xn1"))
       }
-    base.unpersist(blocking = false)
     val spark = df.sparkSession
     import spark.implicits._
     val out = rows.groupBy(_._1).toSeq.map { case (k, ls) =>

@@ -33,10 +33,9 @@ object Factorize {
       ratingCol: String, rounds: Int, scale: Long = 1000L,
       broadcastLimit: Long = 10000000L): (DataFrame, DataFrame) = {
     require(rounds >= 1, "need at least one round")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val r = ratings.select(col(userCol).as("u"), col(itemCol).as("i"),
-      col(ratingCol).cast("long").as("r")).persist(lvl)
-    val nR = r.count()
+    val (r, c) = materialize(ratings.select(col(userCol).as("u"), col(itemCol).as("i"),
+      col(ratingCol).cast("long").as("r")), count(lit(1)).as("n_ratings"))
+    val nR = c.getLong(0)
     def bc(df: DataFrame): DataFrame =
       if (nR <= broadcastLimit) broadcast(df) else df
     val s2 = scale * scale
@@ -52,7 +51,6 @@ object Factorize {
           sum(col("x") * col("x")).as("_xx"))
         .select(col("i"), expr(s"($s2 * _rx) div _xx").as("y")))
     }
-    r.unpersist(blocking = false)
     (x.withColumnRenamed("u", userCol), y.withColumnRenamed("i", itemCol))
   }
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Data-layout operators for scan efficiency at 100 TB: multi-dimensional
   * clustering (Z-order) so parquet row-group min/max statistics prune
@@ -150,13 +151,12 @@ object Layout {
     require(rowsPerFile > 0, "rowsPerFile must be positive")
     val spark = df.sparkSession
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
+    val sorted = materialize(df
       .select(col(layoutCol).as("_key"), col(idCol).as("_id"),
         col(predCol).cast("double").as("_p"))
       .repartitionByRange(nParts, col("_key"), col("_id"))
       .sortWithinPartitions("_key", "_id")
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_pid", spark_partition_id()))
     val counts = sorted.groupBy("_pid").agg(count(lit(1)).as("_c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var running = 0L
@@ -181,11 +181,10 @@ object Layout {
         col("n_rows"), col("rows_scanned"),
         round(lit(1.0) - col("files_scanned").cast("double") / col("n_files"), 4)
           .as("skip_ratio"))
-    // `sorted` stays persisted until the caller's action completes: the
-    // frozen spark_partition_id and the collected offsets describe THAT
-    // evaluation — unpersisting early would let a re-evaluated exchange
-    // reassign pids under the broadcast offset map (the documented
-    // monotonically_increasing_id failure mode).
+    // `sorted` is a checkpoint, not a cache: the frozen spark_partition_id
+    // and the collected offsets describe THAT evaluation, and a lost block
+    // fails the caller's action instead of letting a re-evaluated exchange
+    // reassign pids under the broadcast offset map.
     out
   }
 }

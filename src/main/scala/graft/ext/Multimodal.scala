@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.graph.Rounds.materialize
 
 /** Multimodal-column operators: image/audio/video as opaque `binary` columns
   * with typed metadata, plus decode / feature-extract / resize / frame-sample
@@ -975,29 +976,23 @@ object Multimodal {
     */
   def audioNearDups(df: DataFrame, idCol: String, mediaCol: String,
       minJaccard: Double, maxDf: Long = 10000L): DataFrame = {
-    val grams = audioFingerprint(df, idCol, mediaCol)
-      .select(col(idCol).as("id"), col("gram")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = grams.join(
+    val grams = materialize(audioFingerprint(df, idCol, mediaCol)
+      .select(col(idCol).as("id"), col("gram")).distinct())
+    val kept = materialize(grams.join(
       grams.groupBy("gram").agg(count(lit(1)).as("df_"))
-        .where(col("df_") <= maxDf).select("gram"), Seq("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("df_") <= maxDf).select("gram"), Seq("gram")))
     val sizes = kept.groupBy("id").agg(count(lit(1)).as("n"))
     val inter = kept.select(col("id").as("id_a"), col("gram"))
       .join(kept.select(col("id").as("id_b"), col("gram")), Seq("gram"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    val out = inter
+    inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("na")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), Seq("id_b"))
       .withColumn("jaccard",
         col("inter") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-    // grams/kept stay persisted: the result is lazy and reads them four
-    // ways (df-cap, both join sides, sizes) — the battery harness releases
-    // run-scoped caches after each timing (Bench.scala)
-    out
   }
 
   /** Decode the WAV binary column and emit EXACT integer sample

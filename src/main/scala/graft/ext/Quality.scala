@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Declarative data-quality checks — the Deequ / dbt-tests layer: a rule
   * list compiles to counting aggregates and the result is one row per
@@ -93,9 +94,8 @@ object Quality {
     * driver-tiny next to the ids.
     */
   def gapRanges(df: DataFrame, idCol: String): DataFrame = {
-    val ids = df.select(col(idCol).cast("long").as("_i"))
-      .where(col("_i").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ids = materialize(df.select(col(idCol).cast("long").as("_i"))
+      .where(col("_i").isNotNull).distinct())
     val mm = ids.agg(min("_i").as("_lo"), max("_i").as("_hi"))
     val starts = ids.select((col("_i") + 1).as("gs"))
       .join(ids.select(col("_i").as("gs")), Seq("gs"), "left_anti")

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Distributed linear regression the way a 100 TB pipeline has to do it:
   * ONE partial-aggregated pass over the data accumulating the integer
@@ -317,11 +318,10 @@ object Regression {
   def cvFoldOls(df: DataFrame, keyCol: String, xCol: String, yCol: String,
       k: Int = 5): DataFrame = {
     require(k >= 2, "need at least 2 folds")
-    val rows = df.select(
+    val rows = materialize(df.select(
       (conv(substring(md5(concat(lit("cv:"), col(keyCol).cast("string"))),
         1, 8), 16, 10).cast("long") % k).as("fold"),
-      col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y")))
     val fs = rows.groupBy("fold")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("x")).as("sxx"),
@@ -351,7 +351,7 @@ object Regression {
     import spark.implicits._
     val mdf = models.toSeq
       .toDF("fold", "n_train", "b0q", "b1q", "b0", "b1")
-    val out = rows.join(broadcast(mdf), Seq("fold"))
+    rows.join(broadcast(mdf), Seq("fold"))
       .withColumn("_r", (lit(1000000L) * col("y") - col("b0q") -
         col("b1q") * col("x")).cast("decimal(38,0)"))
       .groupBy("fold")
@@ -362,8 +362,6 @@ object Regression {
         col("b0"), col("b1"),
         round(sqrt(col("_sse").cast("double") / lit(1e12) / col("n_test")), 4)
           .as("test_rmse"))
-    rows.unpersist(blocking = false)
-    out
   }
 
   /** DuckDB replay of [[cvFoldOls]]; `srcSql` must produce

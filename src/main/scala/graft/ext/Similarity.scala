@@ -221,7 +221,7 @@ object Similarity {
         }
         cands.reduce(_ unionByName _).dropDuplicates("src_id", "tgt_id")
       }
-    val tk = scored.select(explode(array(
+    val tk = materialize(scored.select(explode(array(
         struct(lit("s").as("side"), col("src_id").as("g"),
           col("tgt_id").as("o"), col("c")),
         struct(lit("t").as("side"), col("tgt_id").as("g"),
@@ -229,8 +229,7 @@ object Similarity {
       .select(col("e.side").as("side"), col("e.g").as("g"),
         col("e.o").as("o"), col("e.c").as("c"))
       .groupBy("side", "g")
-      .agg(graft.expr.BoundedTopK.topKPairs(k, col("c"), col("o")).as("_tk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(graft.expr.BoundedTopK.topKPairs(k, col("c"), col("o")).as("_tk")))
     def sideK(side: String, gName: String, oName: String): DataFrame =
       tk.where(col("side") === side)
         .select(col("g").as(gName),
@@ -258,14 +257,8 @@ object Similarity {
       .groupBy("tgt_id")
       .agg(min(struct(negate(col("margin")).as("nm"), col("src_id").as("s"))).as("_b"))
       .select(col("tgt_id"), col("_b.s").as("src_id"))
-    // eager-materialize the mined pairs (≤ min(|src|,|tgt|) rows — bounded
-    // by the broadcast side) so the tk heap frame can be released NOW;
-    // returning a lazy frame would pin tk's cached partitions for the
-    // session lifetime across repeated invocations
-    val mined = materialize(bestA.join(bestB, Seq("src_id", "tgt_id"))
-      .select(col("src_id"), col("tgt_id"), round(col("margin"), 4).as("margin")))
-    tk.unpersist(blocking = false)
-    mined
+    bestA.join(bestB, Seq("src_id", "tgt_id"))
+      .select(col("src_id"), col("tgt_id"), round(col("margin"), 4).as("margin"))
   }
 
   /** Deterministic random hyperplanes: `planes(b)(d)` from a seeded RNG.

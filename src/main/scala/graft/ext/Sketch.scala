@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Bounded-memory probabilistic sketches for corpus-scale profiling —
   * extension surface alongside [[Dedup]]/[[Corpus]] (BASELINE.json north
@@ -344,10 +345,9 @@ object Sketch {
     * groups×groups self-join; all array math is per-row codegen.
     */
   def kmvJaccard(sketches: DataFrame, k: Int): DataFrame = {
-    // both sides of the pair join read the sketch frame — persist it, or
+    // both sides of the pair join read the sketch frame — materialize it, or
     // the full shingle-explode + top-k sketch build runs once per side
-    val s = sketches
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val s = materialize(sketches)
     val a = s.select(col("grp").as("grp_a"), col("sketch").as("_sa"))
     val b = s.select(col("grp").as("grp_b"), col("sketch").as("_sb"))
     a.join(b, col("grp_a") < col("grp_b"))

@@ -90,10 +90,9 @@ object Stats {
     * broadcast back; cells scale with the category product, not rows.
     */
   def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.where(col(aCol).isNotNull && col(bCol).isNotNull)
+    val cells = materialize(df.where(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
-      .agg(count(lit(1)).as("_o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("_o")))
     val rowM = cells.groupBy("_a").agg(sum(col("_o")).as("_ra"))
     val colM = cells.groupBy("_b").agg(sum(col("_o")).as("_cb"))
     val tot = cells.agg(sum(col("_o")).as("_n"),
@@ -131,11 +130,11 @@ object Stats {
     * driver-resident model is gated on a MEASURED item count
     * (`localItemLimit`, the [[Corpus.bpeTrain]] dual-path discipline).
     * Under the gate the ratings live on the driver and ride each round's
-    * plan as a broadcast literal: per round ONE job over the persisted
+    * plan as a broadcast literal: per round ONE job over the materialized
     * pair frame (two broadcast joins + a keyed partial sum), the
     * items-many denominator vector collected back, and the MM update +
     * renormalization done in exact driver-side long arithmetic. Over the
-    * gate the ratings stay a persisted DataFrame: the same per-round job
+    * gate the ratings stay a materialized DataFrame: the same per-round job
     * with shuffle joins instead of broadcast literals, the round total a
     * 1-row scalar collect, the update pure column arithmetic — nothing
     * items-many ever lands on the driver. Both paths run the identical
@@ -150,26 +149,24 @@ object Stats {
     require(rounds >= 1, "rounds must be >= 1")
     val spark = matches.sparkSession
     val big = scale * scale // numerator boost so terms keep 6 digits
-    val dir = matches.select(col("item_a").as("i"), col("item_b").as("j"),
+    val dir = materialize(matches.select(col("item_a").as("i"), col("item_b").as("j"),
         (col("wins_a") + col("wins_b")).cast("long").as("n"),
         col("wins_a").cast("long").as("w"))
       .unionByName(matches.select(col("item_b").as("i"), col("item_a").as("j"),
         (col("wins_a") + col("wins_b")).cast("long").as("n"),
-        col("wins_b").cast("long").as("w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val items = dir.groupBy(col("i").as("item"))
-      .agg(sum("w").as("wins"), sum("n").as("n_matches"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("wins_b").cast("long").as("w"))))
+    val (items, c) = materialize(dir.groupBy(col("i").as("item"))
+      .agg(sum("w").as("wins"), sum("n").as("n_matches")), count(lit(1)).as("n_items"))
+    val nI = c.getLong(0)
     // measured-count gate BEFORE any items-many collect; tests pass 0 to
     // force the distributed branch and assert both produce identical
     // ratings
-    if (items.count() > localItemLimit)
-      return bradleyTerryDistributed(dir, items, rounds, scale)
+    if (nI > localItemLimit)
+      return bradleyTerryDistributed(dir, items, nI, rounds, scale)
     val itemField = items.schema("item")
     val itemRows = items.collect() // items-many — gated above
     val wins: Map[Any, Long] =
       itemRows.map(r => r.get(0) -> r.getLong(1)).toMap
-    val nI = itemRows.length.toLong
     def literal(p: Map[Any, Long], iCol: String, pCol: String): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(p.toSeq.map { case (it, v) =>
@@ -198,7 +195,7 @@ object Stats {
   }
 
   /** Unbounded-item-count branch of [[bradleyTerry]]: the ratings vector
-    * is a persisted DataFrame joined (shuffle, item-keyed) into each MM
+    * is a materialized DataFrame joined (shuffle, item-keyed) into each MM
     * round; only two true scalars ever reach the driver (the item count
     * once, the renormalization total per round). The recurrence is the
     * same truncating positive-long arithmetic as the local branch —
@@ -206,12 +203,9 @@ object Stats {
     * non-negative operands — so the two branches are bit-identical.
     */
   private def bradleyTerryDistributed(dir: DataFrame, items: DataFrame,
-      rounds: Int, scale: Long): DataFrame = {
+      nI: Long, rounds: Int, scale: Long): DataFrame = {
     val big = scale * scale
-    val nI = items.count()
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var p = items.select(col("item"), lit(scale).as("_p")).persist(lvl)
-    p.count(): Unit
+    var p = materialize(items.select(col("item"), lit(scale).as("_p")))
     for (_ <- 1 to rounds) {
       val denom = dir
         .join(p.select(col("item").as("i"), col("_p").as("_pi")), Seq("i"))
@@ -224,13 +218,9 @@ object Stats {
             .otherwise(expr(s"wins * ${big}L div _den")).as("_p"))
       val tot = raw.agg(coalesce(sum("_p"), lit(0L)))
         .collect()(0).getLong(0) // 1-row scalar, not the model
-      val next = (if (tot == 0L) raw
+      p = materialize(if (tot == 0L) raw
         else raw.select(col("item"),
           expr(s"_p * ${nI}L * ${scale}L div ${tot}L").as("_p")))
-        .persist(lvl)
-      next.count(): Unit
-      p.unpersist(blocking = false)
-      p = next
     }
     items.join(p, Seq("item"))
       .select(col("item"), col("_p").as("rating_micro"), col("wins"),
@@ -484,10 +474,9 @@ object Stats {
     * that, compute pₑ in decimal.
     */
   def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.where(col(aCol).isNotNull && col(bCol).isNotNull)
+    val cells = materialize(df.where(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
-      .agg(count(lit(1)).as("_o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("_o")))
     val tot = cells.agg(sum(col("_o")).as("n_obs"),
       sum(when(col("_a") === col("_b"), col("_o")).otherwise(lit(0L)))
         .as("n_agree"))
@@ -1027,10 +1016,9 @@ object Stats {
     * (6 dp each).
     */
   def mutualInfo(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.groupBy(col(aCol).cast("string").as("a"),
+    val cells = materialize(df.groupBy(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))
-      .agg(count(lit(1)).as("nab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("nab")))
     val ma = cells.groupBy("a").agg(sum("nab").as("na"))
     val mb = cells.groupBy("b").agg(sum("nab").as("nb"))
     val nn = cells.agg(sum("nab").as("nn"), count(lit(1)).as("n_cells"))
@@ -1161,10 +1149,9 @@ object Stats {
   def ipfRake(df: DataFrame, rowCol: String, colCol: String,
       rounds: Int = 2, scale: Long = 1000L): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
-    val cells = df.groupBy(col(rowCol).cast("string").as("r"),
+    val cells = materialize(df.groupBy(col(rowCol).cast("string").as("r"),
         col(colCol).cast("string").as("c"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("n")))
     val tot = cells.agg(sum("n").as("nn"),
       count_distinct(col("r")).as("nr"))
     // uniform row target (scale units); observed column totals
@@ -1183,7 +1170,6 @@ object Stats {
         .select(col("r"), col("c"), col("n"),
           expr("w * t_c div cs").as("w")))
     }
-    cells.unpersist(blocking = false)
     w.select(col("r").as(rowCol), col("c").as(colCol), col("n"),
       (col("w") / lit(scale.toDouble)).as("weight"))
   }

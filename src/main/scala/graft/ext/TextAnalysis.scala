@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Rounds.materialize
 
 /** Text-analysis operators for training-data pipelines (extension surface):
   * language-ID, quality scoring, token counting, document fingerprinting.
@@ -359,15 +360,14 @@ object TextAnalysis {
     val runs = pos
       .withColumn("_run", sum(when(isStop, 1).otherwise(0)).over(w))
       .where(!isStop)
-    val phrases = runs.groupBy(col("_id"), col("_run"))
+    val phrases = materialize(runs.groupBy(col("_id"), col("_run"))
       .agg(sort_array(collect_list(struct(col("_pos"), col("_tok"))))
         .as("_pt"))
       .select(col("_id"), col("_run"),
         transform(col("_pt"), p => p.getField("_tok")).as("_words"))
       .where(size(col("_words")) <= maxLen)
       .withColumn("phrase", array_join(col("_words"), " "))
-      .withColumn("_plen", size(col("_words")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_plen", size(col("_words"))))
     val words = phrases.select(col("_id"), col("_run"), col("_plen"),
       explode(col("_words")).as("_w"))
     val scores = words.groupBy("_w")

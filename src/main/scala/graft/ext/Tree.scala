@@ -157,7 +157,6 @@ object Tree {
   def depth2Tree(df: DataFrame, featureCols: Seq[String],
       labelExpr: Column, nBins: Int = 16): DataFrame = {
     require(featureCols.nonEmpty && nBins >= 2, "need features and bins")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def melt(src: DataFrame, ndCol: Column): DataFrame = src.select(
         ndCol.as("nd"), col("_y").as("y"),
         explode(array(featureCols.map(c =>
@@ -167,18 +166,17 @@ object Tree {
     // chosen-feature value on the wide frame: CASE over the broadcast best
     def chosenV = coalesce(featureCols.map(c =>
       when(col("_bf") === c, col(c).cast("double"))): _*)
-    // persist ONLY what the two melt passes read: features + label
-    val base = df.select(featureCols.map(col) :+
-      labelExpr.cast("long").as("_y"): _*).persist(lvl)
+    // materialize ONLY what the two melt passes read: features + label
+    val base = materialize(df.select(featureCols.map(col) :+
+      labelExpr.cast("long").as("_y"): _*))
     val rootBest = materialize(nodeBest(melt(base, lit("~")), nBins)) // 1 row
-    val sided = base
+    val sided = materialize(base
       .crossJoin(broadcast(rootBest.select(col("b.f").as("_bf"),
         col("b.bin").as("_sb"), col("b.mn").as("_mn"), col("b.mx").as("_mx"))))
       .withColumn("_nd",
         when(binOf(chosenV, col("_mn"), col("_mx"), nBins) <= col("_sb"), "L")
           .otherwise("R"))
-      .drop("_bf", "_sb", "_mn", "_mx")
-      .persist(lvl)
+      .drop("_bf", "_sb", "_mn", "_mx"))
     val childBest = materialize(nodeBest(melt(sided, col("_nd")), nBins)) // 2 rows
     val leaves = sided
       .join(broadcast(childBest.select(col("nd").as("_nd"),
@@ -228,9 +226,8 @@ object Tree {
       nBins: Int = 16, rounds: Int = 3, lrPct: Int = 50): DataFrame = {
     require(featureCols.nonEmpty && nBins >= 2 && rounds >= 1, "bad params")
     require(lrPct >= 1 && lrPct <= 100, "lrPct in [1, 100]")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = df.select(featureCols.map(c => col(c).cast("double").as(c)) :+
-      round(targetExpr * 100).cast("long").as("_y"): _*).persist(lvl)
+    val base = materialize(df.select(featureCols.map(c => col(c).cast("double").as(c)) :+
+      round(targetExpr * 100).cast("long").as("_y"): _*))
     // per-feature range (fixed across rounds — residuals don't move x)
     val statCols = Seq(count(lit(1)).as("n"), sum("_y").as("sy")) ++
       featureCols.flatMap(c =>
@@ -319,9 +316,8 @@ object Tree {
   def adaBoost2(df: DataFrame, featureCols: Seq[String], labelExpr: Column,
       nBins: Int = 16): DataFrame = {
     require(featureCols.nonEmpty && nBins >= 2, "bad params")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = df.select(featureCols.map(c => col(c).cast("double").as(c)) :+
-      when(labelExpr, 1).otherwise(-1).as("_y"): _*).persist(lvl)
+    val base = materialize(df.select(featureCols.map(c => col(c).cast("double").as(c)) :+
+      when(labelExpr, 1).otherwise(-1).as("_y"): _*))
     val statCols = Seq(count(lit(1)).as("n")) ++ featureCols.flatMap(c =>
       Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c")))
     val statRow = base.agg(statCols.head, statCols.tail: _*).head()
@@ -392,7 +388,6 @@ object Tree {
       .agg(sum("_e").as("e")).head().getLong(0)
     val ensErr = BigDecimal(wrong.toDouble / n)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    base.unpersist(blocking = false)
     def splitValue(f: String, bin: Int): Double = {
       val (mn, mx) = mnmx(f)
       BigDecimal(mn + (bin + 1).toDouble * ((mx - mn) / nBins))

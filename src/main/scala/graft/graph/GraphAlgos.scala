@@ -18,24 +18,10 @@ import graft.graph.Rounds.materialize
   * deliberate cost: each division floors away < 1 unit of mass per edge
   * (bounded drift, identical in every engine).
   *
-  * Materialize policy: every iterative loop here (and in `graft.ext`)
-  * materializes its per-round frames through [[Rounds.materialize]] — an
-  * eager `localCheckpoint`, NOT `persist`:
-  *   - a cache keeps the symbolic plan of every earlier round inside the
-  *     new frame, so a cache miss (or any post-loop aggregate after
-  *     unpersist) replays the whole iteration history, and the
-  *     broadcast-subquery plans defeat fragment reuse — measured
-  *     superlinear per-round cost on the k-core loop; the checkpoint
-  *     materializes AND severs lineage;
-  *   - the checkpoint runs through AQE, so small exchanges coalesce
-  *     instead of pinning the session's shuffle-partition count the way a
-  *     cache does (measured 16x task-count inflation per round when the
-  *     PageRank frames were persisted), and it exposes REAL size
-  *     statistics to downstream join planning;
-  *   - superseded blocks are freed by the context cleaner once
-  *     unreferenced — no explicit unpersist.
-  * A round's probes (rows, removed, changed, totals) ride the same
-  * checkpoint job as counters instead of separate `count`/`isEmpty` jobs.
+  * Materialize policy: every frame a loop or operator here reads more
+  * than once goes through [[Rounds.materialize]] (the policy and its
+  * reasons are stated there). A round's probes (rows, removed, changed,
+  * totals) ride that checkpoint job as counters.
   *
   * Node keys: the PageRank family and HITS iterate on dense long ids from
   * [[nodeDict]]; the other loops stay string-keyed — encoding them was
@@ -44,8 +30,6 @@ import graft.graph.Rounds.materialize
   * see OPTIMIZATION_r12.md).
   */
 object GraphAlgos {
-
-  private val lvlMemDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** Size gate for the loops' broadcast choices: a node- or row-keyed
     * state frame is broadcast to the edge join while its observed size is
@@ -319,37 +303,65 @@ object GraphAlgos {
     */
   def shortestPathsFixed(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, source: String, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w")) // parallel edges: keep lightest
-      .persist(lvlMemDisk)
-    var dist = Seq((source, 0L)).toDF("node", "dist")
-    var distRows = 1L // the seed row; later rounds count on their checkpoint
-    for (_ <- 1 to maxHops) {
-      val (next, c) = materialize(dist.unionByName(relaxRound(e, dist, distRows))
-        .groupBy("node").agg(min("dist").as("dist")), count(lit(1)).as("rows"))
-      dist = next
-      distRows = c.getLong(0)
-    }
-    e.unpersist(blocking = false)
-    dist
+    relaxLoop(lightestEdges(edges, srcCol, dstCol, weightCol),
+      Seq((source, 0L)).toDF("node", "dist"), 1L, Seq("node"), maxHops)(addWeight)
   }
 
-  /** One Bellman-Ford relaxation: the node-keyed distance table joins the
-    * edge frame, broadcast while `distRows` ≤ [[BroadcastRows]] — exposed
-    * package-private so `PlanAssertSpec` can assert the loop's plan
-    * invariants (distance side broadcast under the limit, no Exchange on
-    * the cached edge side) without executing the loop.
+  /** (src, dst, w) string/long edges, parallel edges reduced to the
+    * lightest — the edge frame of both shortest-path variants.
+    */
+  private def lightestEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    edges.select(col(srcCol).cast("string").as("src"),
+      col(dstCol).cast("string").as("dst"),
+      col(weightCol).cast("long").as("w"))
+      .groupBy("src", "dst").agg(min("w").as("w"))
+
+  /** [[shortestPathsFixed]]'s relax projection: the path to `dst` through
+    * the joined source costs its distance plus the edge weight.
+    */
+  private def addWeight(joined: DataFrame): DataFrame =
+    joined.select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+
+  /** The Bellman-Ford loop shared by [[shortestPathsFixed]],
+    * [[multiSourceShortestPaths]] and [[temporalReachability]]: the edge
+    * frame is materialized once; then `maxHops` rounds of [[relaxRound]]
+    * unioned with the state and reduced by `keys` to the minimum of the
+    * state's one value column, each round materialized with its row count
+    * observed for the next round's broadcast decision. `seedRows` is the
+    * seed state's row count.
+    */
+  private def relaxLoop(edges: DataFrame, seed: DataFrame, seedRows: Long,
+      keys: Seq[String], maxHops: Int)(relax: DataFrame => DataFrame): DataFrame = {
+    require(maxHops >= 1, "need at least one hop")
+    val e = materialize(edges)
+    val value = seed.columns.filterNot(keys.contains).head
+    var state = seed
+    var rows = seedRows
+    for (_ <- 1 to maxHops) {
+      val (next, c) = materialize(state.unionByName(relaxRound(e, state, rows, relax))
+        .groupBy(keys.map(col): _*).agg(min(value).as(value)),
+        count(lit(1)).as("rows"))
+      state = next
+      rows = c.getLong(0)
+    }
+    state
+  }
+
+  /** One Bellman-Ford relaxation: the node-keyed state `dist` joins the
+    * edge frame on `src`, broadcast while `distRows` ≤ [[BroadcastRows]], and
+    * `relax` projects the joined rows to new state candidates (by default
+    * [[shortestPathsFixed]]'s dist + w) — exposed package-private so
+    * `PlanAssertSpec` can assert the loop's plan invariants (state side
+    * broadcast under the limit, no Exchange on the materialized edge side)
+    * without executing the loop.
     */
   private[graft] def relaxRound(e: DataFrame, dist: DataFrame,
-      distRows: Long): DataFrame = {
+      distRows: Long, relax: DataFrame => DataFrame = addWeight): DataFrame = {
     val distSide = if (distRows <= BroadcastRows) broadcast(dist) else dist
-    e.join(distSide.withColumnRenamed("node", "src"), Seq("src"))
-      .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+    relax(e.join(distSide.withColumnRenamed("node", "src"), Seq("src")))
   }
 
   /** DuckDB-dialect oracle for [[shortestPathsFixed]]: rounds unrolled as
@@ -392,28 +404,15 @@ object GraphAlgos {
   def temporalReachability(edges: DataFrame, srcCol: String, dstCol: String,
       tsCol: String, source: String, startTime: Long,
       maxHops: Int): DataFrame = {
-    require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"),
       col(tsCol).cast("long").as("t"))
       .distinct()
-      .persist(lvlMemDisk)
-    var arr = Seq((source, startTime)).toDF("node", "arrival")
-    var arrRows = 1L
-    for (_ <- 1 to maxHops) {
-      val arrSide = if (arrRows <= BroadcastRows) broadcast(arr) else arr
-      val relaxed = e.join(arrSide.withColumnRenamed("node", "src"), Seq("src"))
-        .where(col("t") >= col("arrival"))
-        .select(col("dst").as("node"), col("t").as("arrival"))
-      val (next, c) = materialize(arr.unionByName(relaxed)
-        .groupBy("node").agg(min("arrival").as("arrival")), count(lit(1)).as("rows"))
-      arr = next
-      arrRows = c.getLong(0)
-    }
-    e.unpersist(blocking = false)
-    arr
+    relaxLoop(e, Seq((source, startTime)).toDF("node", "arrival"), 1L,
+      Seq("node"), maxHops)(_.where(col("t") >= col("arrival"))
+        .select(col("dst").as("node"), col("t").as("arrival")))
   }
 
   /** DuckDB replay of [[temporalReachability]], rounds unrolled. */
@@ -492,11 +491,10 @@ object GraphAlgos {
       col(dstCol).cast("string").as("_b"))
       .where(col("_a") =!= col("_b")).distinct()
     // sym feeds deg AND the paired join (deg twice more) — without a
-    // persist the upstream edge derivation re-runs per branch
-    val sym = und.unionAll(und.select(col("_b").as("_a"), col("_a").as("_b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("_a").as("_n")).agg(count(lit(1)).as("_d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialize the upstream edge derivation re-runs per branch
+    val sym = materialize(
+      und.unionAll(und.select(col("_b").as("_a"), col("_a").as("_b"))))
+    val deg = materialize(sym.groupBy(col("_a").as("_n")).agg(count(lit(1)).as("_d")))
     val paired = sym
       .join(deg.select(col("_n").as("_a"), col("_d").as("_x")), Seq("_a"))
       .join(deg.select(col("_n").as("_b"), col("_d").as("_y")), Seq("_b"))
@@ -592,14 +590,9 @@ object GraphAlgos {
   }
 
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val o = orientByDegree(undirectedPairs(edges, srcCol, dstCol))
-      .persist(lvlMemDisk)
-    val out = orientedTriangles(o).select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
+    val o = materialize(orientByDegree(undirectedPairs(edges, srcCol, dstCol)))
+    orientedTriangles(o).select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-      .persist(lvlMemDisk)
-    out.count(): Unit // materialize before dropping the oriented cache
-    o.unpersist(blocking = false)
-    out
   }
 
   /** Capped bipartite projection: from a bipartite edge list (left, right),
@@ -622,9 +615,8 @@ object GraphAlgos {
     val w = Window.partitionBy(col("r")).orderBy(col("l"))
     // both sides of the self-join scan the capped adjacency — materialize
     // it once instead of re-running the distinct + per-r rank twice
-    val capped = d.withColumn("_rk", row_number().over(w))
-      .where(col("_rk") <= maxPerRight).drop("_rk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val capped = materialize(d.withColumn("_rk", row_number().over(w))
+      .where(col("_rk") <= maxPerRight).drop("_rk"))
     capped.as("x").join(capped.as("y"),
       col("x.r") === col("y.r") && col("x.l") < col("y.l"))
       .groupBy(col("x.l").as("a"), col("y.l").as("b"))
@@ -642,27 +634,12 @@ object GraphAlgos {
       dstCol: String, weightCol: String, seeds: Seq[String],
       maxHops: Int): DataFrame = {
     require(seeds.nonEmpty, "need at least one seed")
-    require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .persist(lvlMemDisk)
-    var dist = seeds.distinct.map(s => (s, s, 0L)).toDF("seed", "node", "dist")
-    var distRows = seeds.distinct.size.toLong
-    for (_ <- 1 to maxHops) {
-      val side = if (distRows <= BroadcastRows) broadcast(dist) else dist
-      val relaxed = e.join(side.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("seed"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val (next, c) = materialize(dist.unionByName(relaxed)
-        .groupBy("seed", "node").agg(min("dist").as("dist")), count(lit(1)).as("rows"))
-      dist = next
-      distRows = c.getLong(0)
-    }
-    e.unpersist(blocking = false)
-    dist
+    relaxLoop(lightestEdges(edges, srcCol, dstCol, weightCol),
+      seeds.distinct.map(s => (s, s, 0L)).toDF("seed", "node", "dist"),
+      seeds.distinct.size.toLong, Seq("seed", "node"), maxHops)(
+      _.select(col("seed"), col("dst").as("node"), (col("dist") + col("w")).as("dist")))
   }
 
   /** Harmonic centrality from a seed sample: `Σ_seeds 1/d(seed, v)` over
@@ -785,12 +762,14 @@ object GraphAlgos {
       maxRounds: Int): DataFrame = {
     require(k >= 3, "k must be >= 3")
     require(maxRounds >= 1, "need at least one round")
-    var e = materialize(undirectedPairs(edges, srcCol, dstCol))
-    // returns (support frame, oriented-edge cache): the caller unpersists
-    // the cache once the support consumer is materialized
-    def support(cur: DataFrame): (DataFrame, DataFrame) = {
-      val o = orientByDegree(cur).persist(lvlMemDisk)
-      val sup = orientedTriangles(o).select(explode(array(
+    // the loop state is the degree-oriented edge set: each round's
+    // checkpoint holds (lo, hi), which the wedge join reads four ways, and
+    // the canonical (a, b) pairs are a narrow projection of it
+    var o = materialize(orientByDegree(undirectedPairs(edges, srcCol, dstCol)))
+    def canonical(o: DataFrame): DataFrame =
+      o.select(least(col("lo"), col("hi")).as("a"), greatest(col("lo"), col("hi")).as("b"))
+    def support(o: DataFrame): DataFrame =
+      orientedTriangles(o).select(explode(array(
         struct(least(col("lo"), col("u")).as("a"),
           greatest(col("lo"), col("u")).as("b")),
         struct(least(col("lo"), col("v")).as("a"),
@@ -799,28 +778,21 @@ object GraphAlgos {
           greatest(col("u"), col("v")).as("b")))).as("_e"))
         .select(col("_e.a").as("a"), col("_e.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-      (sup, o)
-    }
     var round = 0
     var stable = false
     while (round < maxRounds && !stable) {
-      val (sup, oCache) = support(e)
-      val (weak, c) = materialize(e.join(sup, Seq("a", "b"), "left")
+      val e = canonical(o)
+      val (weak, c) = materialize(e.join(support(o), Seq("a", "b"), "left")
         .where(coalesce(col("support"), lit(0L)) < k - 2)
         .select("a", "b"), count(lit(1)).as("weak"))
-      oCache.unpersist(blocking = false)
       if (c.getLong(0) == 0L) stable = true
       else {
-        e = materialize(e.join(weak, Seq("a", "b"), "left_anti"))
+        o = materialize(orientByDegree(e.join(weak, Seq("a", "b"), "left_anti")))
         round += 1
       }
     }
-    val (supF, oF) = support(e)
-    // materialized so the oriented cache can drop
-    val out = materialize(e.join(supF, Seq("a", "b"), "left")
-      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support")))
-    oF.unpersist(blocking = false)
-    out
+    canonical(o).join(support(o), Seq("a", "b"), "left")
+      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
   }
 
   /** DuckDB replay of [[kTruss]], rounds unrolled (a converged round
@@ -1037,18 +1009,17 @@ object GraphAlgos {
     // anti-join) — materialize the distinct edge set once, the same
     // "adjacency list is an index you build once" shape a real link-
     // prediction pass uses at scale
-    val und = undirectedPairs(edges, srcCol, dstCol).persist(lvlMemDisk)
+    val und = materialize(undirectedPairs(edges, srcCol, dstCol))
     val adj = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     val deg = adj.groupBy(col("a").as("w")).agg(count(lit(1)).as("deg"))
     // centers with deg ∈ [2, maxDegree]; quantized contribution per center
     val centers = deg.where(col("deg") >= 2 && col("deg") <= maxDegree)
       .withColumn("_q", round(lit(1e6) / log(col("deg"))).cast("long"))
-    // both sides of the wedge self-join scan this frame; persisting it
+    // both sides of the wedge self-join scan this frame; materializing it
     // halves the adj⋈centers work (exchange reuse alone can't — the two
     // aliases carry different projections)
-    val wedgeSide = adj.join(centers, adj("a") === centers("w"))
-      .select(col("w"), col("b").as("n"), col("_q"))
-      .persist(lvlMemDisk)
+    val wedgeSide = materialize(adj.join(centers, adj("a") === centers("w"))
+      .select(col("w"), col("b").as("n"), col("_q")))
     val pairs = wedgeSide.as("x").join(wedgeSide.as("y"),
       col("x.w") === col("y.w") && col("x.n") < col("y.n"))
       .select(col("x.n").as("a"), col("y.n").as("b"), col("x._q").as("_q"))
@@ -1075,7 +1046,7 @@ object GraphAlgos {
     * (hash, neighbor) struct, so no hop ever sorts or windows the
     * candidate set. The frontier is materialized per hop.
     */
-  /** Walk-kernel edge prep: project, drop self-loops, cache — NO global
+  /** Walk-kernel edge prep: project, drop self-loops, materialize — NO global
     * distinct. Duplicate (src, dst) rows cannot change any hop's outcome:
     * the next-hop choice is an argmin (plain `min` for [[randomWalks]],
     * min over the race-key struct in [[biasedWalks]]) and min is
@@ -1087,10 +1058,9 @@ object GraphAlgos {
     */
   private def walkEdges(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(col(srcCol).cast("string").as("src"),
+    materialize(edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("src") =!= col("dst")))
 
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], steps: Int, walksPerSeed: Int = 1): DataFrame = {
@@ -1116,7 +1086,6 @@ object GraphAlgos {
           col("m.d").as("node")))
       out = out.unionByName(frontier)
     }
-    e.unpersist(blocking = false)
     out
   }
 
@@ -1220,9 +1189,12 @@ object GraphAlgos {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // string-keyed: the registers are md5(node string)-derived either way
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+    val (e, ec) = materialize(edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct().persist(lvlMemDisk)
+      .distinct(), count(lit(1)).as("edges"))
+    // the checkpoint's plan statistics are estimates, so the size gate is
+    // taken from its counted rows, as the other loops do for their state
+    val eSide = if (ec.getLong(0) <= BroadcastRows) broadcast(e) else e
     val nodes = e.select(col("u").as("node")).distinct()
     // registers ride a 256-byte VECTOR per node aggregated by the native
     // map-side-combining HllRegisterMerge — each round's exchange carries
@@ -1246,13 +1218,12 @@ object GraphAlgos {
     }
     var out = roundRow(0, regs)
     for (r <- 1 to rounds) {
-      val fromNbr = e.join(regs.withColumnRenamed("node", "v"), Seq("v"))
+      val fromNbr = eSide.join(regs.withColumnRenamed("node", "v"), Seq("v"))
         .select(col("u").as("node"), col("regs"))
       regs = materialize(fromNbr.unionByName(regs)
         .groupBy("node").agg(hllMerge(col("regs")).as("regs")))
       out = out.unionByName(roundRow(r, regs))
     }
-    e.unpersist()
     out
   }
 
@@ -1370,7 +1341,6 @@ object GraphAlgos {
           col("m.dst").as("node"), col("m.src").as("prev")))
       out = out.unionByName(frontier.select("walk_id", "step", "node"))
     }
-    e.unpersist(blocking = false)
     out
   }
 
@@ -1466,7 +1436,7 @@ object GraphAlgos {
     val test = e.withColumn("_h", h).where(tag < "1a")
       .orderBy("_h", "a", "b").limit(evalCap)
       .select("a", "b") // ≤ evalCap rows; checkpointed via ev below
-    val train = e.where(!(tag < "1a")).persist(lvlMemDisk)
+    val train = e.where(!(tag < "1a")) // a filter over the checkpoint, read by the scorer
     // negative sample: non-edges among the 200 smallest-md5 nodes. The
     // anti-join only needs edges whose BOTH endpoints fall in that node
     // set — two broadcast semi-joins shrink the full edge frame to the
@@ -1572,17 +1542,14 @@ object GraphAlgos {
   def richClub(edges: DataFrame, srcCol: String, dstCol: String,
       ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty, "need at least one threshold")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dir = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-    val e = dir.select(explode(array(
+    val e = materialize(dir.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
       .select(col("_e.src").as("a"), col("_e.dst").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(lvl) // both directions: degree = row count per node
-    val deg = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .persist(lvl)
+      .where(col("a") =!= col("b")).distinct()) // both directions: degree = row count per node
+    val deg = materialize(e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg")))
     val kDf = broadcast(e.sparkSession.createDataFrame(
       ks.map(Tuple1(_))).toDF("k"))
     val nRich = deg.crossJoin(kDf).where(col("deg") > col("k"))
@@ -1643,7 +1610,7 @@ object GraphAlgos {
     * at scale 10⁶, graphs with σ ≤ ~10⁹ and per-node degrees ≤ ~10⁴ are
     * safe (TPC-H-shaped incidence graphs by orders of magnitude).
     *
-    * Scale shape: per depth ONE join of the persisted edge frame against
+    * Scale shape: per depth ONE join of the materialized edge frame against
     * the (seed-keyed, broadcast) frontier + a map-side combinable σ/δ
     * aggregate + an anti-join on the visited set — no driver data path;
     * levels are materialized.
@@ -1654,17 +1621,16 @@ object GraphAlgos {
     require(seeds.nonEmpty && maxDepth >= 1, "need seeds and maxDepth >= 1")
     val dir = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-    val e = (if (undirected)
+    val e = materialize((if (undirected)
       dir.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
         .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      else dir).distinct().persist(lvlMemDisk)
-    e.count(): Unit
+      else dir).distinct())
     val spark = edges.sparkSession
     import spark.implicits._
     // frontier/visited/delta frames are |seeds|·|nodes| at worst — tiny
-    // next to the edge frame, so broadcasting them keeps the persisted
+    // next to the edge frame, so broadcasting them keeps the materialized
     // edges from ever re-exchanging
     // forward: levels(d) = (s, v, sigma)
     val l0 = materialize(seeds.map(s => (s, s, 1L)).toDF("s", "v", "sigma"))
@@ -1697,11 +1663,9 @@ object GraphAlgos {
         .agg(sum(expr(s"(sigma * ($deltaScale + dw)) div sw")).as("delta")))
       acc += delta
     }
-    val out = acc.map(_.select(col("v"), col("delta"))).reduce(_ union _)
+    acc.map(_.select(col("v"), col("delta"))).reduce(_ union _)
       .groupBy(col("v").as("node"))
       .agg(sum("delta").as("bc_q"))
-    e.unpersist(blocking = false)
-    out
   }
 
   /** DuckDB replay of [[betweennessSampled]] — forward levels and backward
@@ -1750,7 +1714,7 @@ object GraphAlgos {
   /** HITS hubs & authorities — the second classic link-analysis fixed
     * point next to [[pageRankFixed]], same integer discipline: scores live
     * in `unit`-scaled longs, each half-step is ONE node-keyed join against
-    * the persisted edge frame + a map-side-combinable sum, and the L1
+    * the materialized edge frame + a map-side-combinable sum, and the L1
     * normalization (total mass re-scaled to `unit`) is an exact integer
     * floor-division by the half-step's L1 total — no driver action inside
     * the loop beyond the per-half-step materialization that also observes
@@ -1846,13 +1810,13 @@ object GraphAlgos {
     * max_copairs (the largest per-(b1,b2) shared-neighbor count).
     */
   def butterflyCensus(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges.select(col(aCol).as("_a"), col(bCol).as("_b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (e, c) = materialize(edges.select(col(aCol).as("_a"), col(bCol).as("_b")).distinct(),
+      count(lit(1)).as("n_edges"))
+    val nEdges = c.getLong(0)
     val wedges = e.as("x").join(e.as("y"),
         col("x._a") === col("y._a") && col("x._b") < col("y._b"))
       .select(col("x._b").as("b1"), col("y._b").as("b2"))
     val pairCounts = wedges.groupBy("b1", "b2").agg(count(lit(1)).as("c"))
-    val nEdges = e.count()
     pairCounts.agg(
       coalesce(sum(col("c")), lit(0L)).as("n_wedges"),
       coalesce(sum(col("c") * (col("c") - 1) / lit(2)), lit(0L))
@@ -1899,11 +1863,11 @@ object GraphAlgos {
     val e = undirectedPairs(edges, srcCol, dstCol)
     val cm = communities.select(col(nodeCol).cast("string").as("node"),
       col(commCol).cast("string").as("community")).distinct()
-    val tagged = e
+    val (tagged, c) = materialize(e
       .join(cm.withColumnRenamed("node", "a").withColumnRenamed("community", "ca"), Seq("a"))
-      .join(cm.withColumnRenamed("node", "b").withColumnRenamed("community", "cb"), Seq("b"))
-      .persist(lvlMemDisk)
-    val m = tagged.count()
+      .join(cm.withColumnRenamed("node", "b").withColumnRenamed("community", "cb"), Seq("b")),
+      count(lit(1)).as("m"))
+    val m = c.getLong(0)
     require(m > 0, "graph has no edges after canonicalization")
     // per-community: intra edges (both endpoints inside) and cut edges
     // (exactly one endpoint inside — each cut edge counts for BOTH sides)
@@ -1925,7 +1889,6 @@ object GraphAlgos {
         lit(2L) * col("intra_edges") + col("cut_edges"))
       .withColumn("contrib_q",
         lit(4L) * lit(m) * col("intra_edges") - col("volume") * col("volume"))
-    tagged.unpersist(blocking = false)
     val q = perC.agg(sum(col("contrib_q")).as("_qnum"))
       .select(round(col("_qnum").cast("double") /
         (lit(4.0) * lit(m.toDouble) * lit(m.toDouble)), 6).as("modularity"))
@@ -2010,21 +1973,18 @@ object GraphAlgos {
   def sccFixed(edges: DataFrame, srcCol: String, dstCol: String,
       peelRounds: Int, propRounds: Int): DataFrame = {
     require(peelRounds >= 1 && propRounds >= 1, "rounds must be >= 1")
-    val e0 = edges.select(col(srcCol).cast("string").as("src"),
+    val e0 = materialize(edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .persist(lvlMemDisk)
-    val allNodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst"))).distinct().persist(lvlMemDisk)
-    var rem = allNodes
+      .where(col("src") =!= col("dst")).distinct())
+    var rem = materialize(e0.select(col("src").as("node"))
+      .union(e0.select(col("dst"))).distinct())
     var assigned: DataFrame = null
     var done = false
     for (_ <- 1 to peelRounds if !done) {
-      // edges with both endpoints still unassigned
+      // edges with both endpoints still unassigned (read only by the trim)
       val re0 = e0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(lvlMemDisk)
       // trim: a multi-node SCC needs in AND out edges inside the remaining
       // subgraph (SCCs are always removed whole), so any node missing
       // either side is a singleton SCC — this collapses DAG tails/chains
@@ -2034,12 +1994,12 @@ object GraphAlgos {
       val singles = materialize(rem.join(core, Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc")))
       assigned = if (assigned == null) singles else assigned.union(singles)
-      rem = materialize(rem.join(singles, Seq("node"), "left_anti"))
-      val re = re0
+      // the trimmed node set is a cheap anti-join of two checkpoints; the
+      // subgraph it induces is what every propagation step reads
+      rem = rem.join(singles, Seq("node"), "left_anti")
+      val re = materialize(e0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-        .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(lvlMemDisk)
-      re0.unpersist(blocking = false)
+        .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
       // fmin: min id reachable FROM u — labels flow AGAINST edge direction
       var f = rem.withColumn("lbl", col("node"))
       var b = rem.withColumn("lbl", col("node"))
@@ -2081,18 +2041,14 @@ object GraphAlgos {
       val (left, c) = materialize(rem.join(agree, Seq("node"), "left_anti"),
         count(lit(1)).as("remaining"))
       rem = left
-      re.unpersist(blocking = false)
       // early exit once everything is assigned — the oracle unrolls every
       // peel regardless, but its remaining rounds run on empty frames, so
       // skipping them here cannot change the output. The unconverged stop
       // IS replayed by the oracle (per-peel conv/act flag CTEs).
       done = c.getLong(0) == 0L || !converged
     }
-    val out = assigned.union(
+    assigned.union(
       rem.select(col("node"), concat(lit("?"), col("node")).as("scc")))
-    e0.unpersist(blocking = false)
-    allNodes.unpersist(blocking = false)
-    out
   }
 
   /** DuckDB replay of [[sccFixed]] — peel × propagation rounds unrolled;
@@ -2179,9 +2135,10 @@ object GraphAlgos {
 
   def skipGramPairs(walks: DataFrame, window: Int): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    // the walk corpus feeds BOTH sides of the self-join — persist it, or
-    // an expensive upstream walk generation re-runs per branch
-    val w = walks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the walk corpus feeds BOTH sides of the self-join — materialize it
+    // (a copy: the caller's frame is left as it was), or an expensive
+    // upstream walk generation re-runs per branch
+    val w = materialize(walks)
     val a = w.select(col("walk_id"), col("step").as("_sa"),
       col("node").as("center"))
     val b = w.select(col("walk_id"), col("step").as("_sb"),

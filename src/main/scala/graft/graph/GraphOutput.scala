@@ -90,10 +90,10 @@ final case class GraphOutput(
     * job per collection; a single union lets the independent collection
     * plans run their stages concurrently across the executor cores, and
     * populates every [[cache]]d collection in one pass. Returns the total
-    * element count. Safe only when shared sub-plans are either persisted
-    * already (the compiler eagerly persists order-unstable bases) or cheap
-    * to recompute (parquet scans) — racing branches would otherwise
-    * duplicate heavy shared work.
+    * element count. Safe only when shared sub-plans are either
+    * materialized already (the compiler checkpoints order-unstable bases
+    * through [[Rounds.materialize]]) or cheap to recompute (parquet scans)
+    * — racing branches would otherwise duplicate heavy shared work.
     */
   def materialize(): Long =
     (vertices.values ++ edges.values)

@@ -5,11 +5,39 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
-/** The round primitive every iterative loop materializes through (the
-  * policy — eager `localCheckpoint`, not `persist` — is stated once in
-  * [[GraphAlgos]]' scaladoc). A loop keeps its own step logic; what it
-  * needs to know about a round (rows, changes, totals) rides the round's
-  * own checkpoint job as counters, so no round pays a separate probe job.
+/** The one materialization primitive of graft's operators. Every frame an
+  * operator computes once and reads more than once goes through
+  * [[materialize]]: a loop's per-round state, a loop's edge frame, an
+  * index (postings, adjacency, candidate and shingle sets) and an
+  * id-stamped base. It is an eager `localCheckpoint`, never `persist`. The
+  * only `persist` sites left in `src/main` are the query plane's hop frames
+  * (filled by one union job), the public `GraphOutput.cache` and the
+  * battery's session-lifetime fixture memo; `MaterializePolicySpec` keeps
+  * it that way, so a reliable-checkpoint switch has this one site to
+  * change.
+  *
+  * Why a checkpoint and not a cache:
+  *   - it materializes AND severs lineage. A cache keeps the symbolic plan
+  *     of every earlier round inside the new frame, so a cache miss (or any
+  *     post-loop aggregate after unpersist) replays the whole iteration
+  *     history, and the broadcast-subquery plans defeat fragment reuse —
+  *     measured superlinear per-round cost on the k-core loop;
+  *   - it runs through AQE, so small exchanges coalesce instead of pinning
+  *     the session's shuffle-partition count the way a cache does (measured
+  *     16x task-count inflation per round when the PageRank frames were
+  *     persisted);
+  *   - it has no lifetime to get wrong. Superseded blocks are freed by the
+  *     context cleaner once the frame is unreferenced, so there is no
+  *     unpersist to forget (operators return lazy frames that read their
+  *     indexes after the operator returned) and none to call too early;
+  *   - it freezes values. A frame stamped with `monotonically_increasing_id`
+  *     (or `spark_partition_id`, or row ordinals over a shuffle) keeps the
+  *     ids it was checkpointed with. A cache is only a hint: an evicted
+  *     block or `spark.catalog.clearCache()` silently recomputes the frame
+  *     and mints NEW ids, where a lost checkpoint block fails the job.
+  * Eager means one job at the call. What a caller needs to know about the
+  * frame (rows, changes, totals) rides that job as counters, so no round
+  * pays a separate probe job.
   */
 private[graft] object Rounds {
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model._
+import graft.graph.Rounds.materialize
 
 /** Identity & schema inference — the reference's §2.12 surface re-expressed
   * as DataFrame aggregations (all of it is sampling + ratio heuristics).
@@ -298,8 +299,8 @@ object CrossResourceIdentity {
     * range-exchange on (key, id), per-partition row_number, plus
     * per-partition base offsets from an nParts-row count collect,
     * broadcast back as a map literal. The partition id is frozen by a
-    * persist before use (spark_partition_id is evaluation-dependent on
-    * an unpersisted plan). Pair generation is an equi-join on the
+    * checkpoint before use (spark_partition_id is evaluation-dependent on
+    * a plan that is not materialized). Pair generation is an equi-join on the
     * ordinal — keyed and uniform at any scale.
     *
     * Output: (id_a, id_b, key_a, key_b), rank(a) < rank(b) ≤ rank(a)+w−1.
@@ -310,11 +311,10 @@ object CrossResourceIdentity {
     val spark = df.sparkSession
     val nParts = if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.select(col(idCol).as("_id"), col(keyCol).as("_key"))
+    val sorted = materialize(df.select(col(idCol).as("_id"), col(keyCol).as("_key"))
       .repartitionByRange(nParts, col("_key"), col("_id"))
       .sortWithinPartitions("_key", "_id")
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_pid", spark_partition_id()))
     val counts = sorted.groupBy("_pid").agg(count(lit(1)).as("_c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var running = 0L

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType, StringType}
 import graft.model._
 import graft.expr.{FilterExpr, IdentityDigest}
 import graft.functions.TransformRegistry
-import graft.graph.GraphOutput
+import graft.graph.{GraphOutput, Rounds}
 
 /** Compiles a [[ResourceDef]] (the actor pipeline) against a [[GraphSchema]]
   * into a pure DataFrame program producing a [[GraphOutput]].
@@ -141,12 +141,12 @@ object PipelineCompiler {
     // chain over a file/local scan re-evaluates deterministically (fixed
     // splits, fixed order) and can skip the materialization; anything with a
     // shuffle (aggregate/join/repartition/window) is stamped once and
-    // persisted (one extra pass — the reference's caster also materializes
-    // each batch, ingestion_parameters.py:129-133).
-    if (!base.isStreaming && !isOrderStable(input)) {
-      base = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      base.count(): Unit
-    }
+    // checkpointed (one extra pass — the reference's caster also
+    // materializes each batch, ingestion_parameters.py:129-133). A
+    // checkpoint, not a cache: a lost block fails loudly where a recomputed
+    // cache would silently mint new ids (see graph.Rounds).
+    if (!base.isStreaming && !isOrderStable(input))
+      base = Rounds.materialize(base)
     val ctx = new Ctx(schema)
     ctx.idSalt = s"${resource.name}\u0000$idSalt"
     walk(resource.steps, base, Nil, ctx)

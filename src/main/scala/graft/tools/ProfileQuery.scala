@@ -18,6 +18,12 @@ object ProfileQuery {
     val qname = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 2
     val spark = graft.HarnessSession.build(defaultCpus = 32)
+    try run(spark, sfDir, qname, repeats)
+    finally { graft.battery.BatteryFixtures.cleanup(spark); spark.stop() }
+  }
+
+  private def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      qname: String, repeats: Int): Unit = {
     case class Job(id: Int, t0: Long, var t1: Long = 0L,
       var nTasks: Int = 0, var taskTimeMs: Long = 0L, var nStages: Int = 0)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
@@ -61,11 +67,12 @@ object ProfileQuery {
       }
       val jobMs = snap.map(j => j.t1 - j.t0).sum
       println(f"  jobs total ${jobMs}%d ms; outside-jobs ${wall - jobMs}%.0f ms")
+      // free the repeat's checkpoint blocks now rather than at a driver
+      // GC, so every repeat starts from the same block-manager state
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => cachedBefore(id) }
         .values.foreach(_.unpersist(blocking = false))
       System.gc()
     }
-    spark.stop()
   }
 }

@@ -14,7 +14,9 @@ class JdbcSpec extends SparkSpec {
 
   private lazy val url: String = {
     System.setProperty("derby.system.home", "target")
-    val dir = freshDir("target/jdbc-spec-db")
+    // absolute: Derby resolves a relative name against the home of whichever
+    // suite booted it first in this JVM, which freshDir would not clean
+    val dir = freshDir(new java.io.File("target/jdbc-spec-db").getAbsolutePath)
     val u = s"jdbc:derby:$dir"
     val conn = java.sql.DriverManager.getConnection(u + ";create=true")
     try {
