@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.model._
 import graft.pipeline._
 import graft.fixtures.TpchGraph
+import graft.graph.{GraphOutput, Rounds}
 
 /** Shared battery fixtures: the table reader, per-process scratch
   * directories, stream helpers, and the graphs, frames and Derby database
@@ -200,9 +201,9 @@ object BatteryFixtures {
       url
     }
 
-  /** Build (and cache-populate) the shared fixture pipelines so a bench
+  /** Build (and freeze) the shared fixture pipelines so a bench
     * run can pay their cost outside the timed region. Safe to call more
-    * than once — the memo returns the cached graphs.
+    * than once — the memo returns the frozen graphs.
     */
   def prewarmFixtures(s: SparkSession, d: String): Unit = {
     import scala.concurrent.{Await, Future}
@@ -210,14 +211,14 @@ object BatteryFixtures {
     import scala.concurrent.ExecutionContext.Implicits.global
     // the two fixture pipelines are independent — overlap their jobs
     val warm = Seq(
-      Future { nestedOrders(s, d).materialize(): Unit },
-      Future { ingestCore(s, d): Unit }, // ingestCore materializes itself
+      Future { nestedOrders(s, d): Unit },
+      Future { ingestCore(s, d): Unit },
       Future { spBiasedWalks(s, d): Unit }) // builds supplierPartEdges too
     warm.foreach(Await.result(_, Duration.Inf))
   }
 
   /** Shared supplier↔part bipartite graph (both directions, deduped,
-    * persisted): many battery queries derive this same frame from
+    * frozen): many battery queries derive this same frame from
     * lineitem. A real deployment materializes the graph once and serves
     * every analytics query from it, so the battery builds it once as a
     * fixture instead of paying the union + distinct in each query's
@@ -225,20 +226,17 @@ object BatteryFixtures {
     */
   private[graft] def supplierPartFwd(s: SparkSession, d: String): DataFrame =
     memo(s, d, "sp_fwd") {
-      val e = t(s, d)("lineitem")
+      Rounds.materialize(t(s, d)("lineitem")
         .select(concat(lit("s"), col("l_suppkey")).as("src"),
           concat(lit("p"), col("l_partkey")).as("dst"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(): Unit
-      e
+        .distinct())
     }
 
   private[graft] def supplierPartEdges(s: SparkSession, d: String): DataFrame =
     memo(s, d, "sp_edges") {
       // the "s"/"p" prefixes make forward and reversed edge sets disjoint,
       // so the union of the deduped forward frame and its flip is already
-      // distinct — derived from the cached fwd fixture, no extra shuffle
+      // distinct — derived from the frozen fwd fixture, no extra shuffle
       val fwd = supplierPartFwd(s, d)
       fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
     }
@@ -263,20 +261,17 @@ object BatteryFixtures {
 
   /** Shared nested input frame (orders with their lineitems collected into a
     * sorted array column): the most expensive fixture sub-plan, reused by
-    * BOTH the nestedOrders fixture and the bare-descend query. Persisted +
-    * materialized here so each consumer's compile() pays a cache read, not
-    * the 600 k-row join + collect_list.
+    * BOTH the nestedOrders fixture and the bare-descend query. Frozen here
+    * so each consumer's compile() pays a checkpoint read, not the 600 k-row
+    * join + collect_list.
     */
   private[graft] def nestedInput(s: SparkSession, d: String): DataFrame =
     memo(s, d, "nested_input") {
       val o = t(s, d)("orders"); val li = t(s, d)("lineitem")
-      val built = o.join(li, o("o_orderkey") === li("l_orderkey"))
+      Rounds.materialize(o.join(li, o("o_orderkey") === li("l_orderkey"))
         .groupBy(col("o_orderkey"), col("o_custkey"))
         .agg(sort_array(collect_list(struct(col("l_linenumber"), col("l_partkey"))))
-          .as("items"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      built.count(): Unit
-      built
+          .as("items")))
     }
 
   /** Shared nested-orders pipeline for PRODUCT/COMBINATIONS edge tests:
@@ -299,7 +294,7 @@ object BatteryFixtures {
       EdgeStep(source = "customer", target = "part", relation = "bought"),
       EdgeStep(source = "part", target = "part", relation = "co_occurs")
     ), inferEdges = false)
-    PipelineCompiler.compile(sch, res, nested).cache()
+    freeze(PipelineCompiler.compile(sch, res, nested))
   }
 
   /** Core graph ingest (region/nation/customer/supplier/orders) for the
@@ -321,14 +316,15 @@ object BatteryFixtures {
       () => PipelineCompiler.compile(TpchGraph.schema, TpchGraph.ordersResource, t(s, d)("orders"))
     ).map(f => Future(f()))
     val parts = futures.map(Await.result(_, Duration.Inf))
-    val g = parts.reduceLeft(_.unionWith(_)).cache()
-    // one union job materializes every collection's cache: the per-resource
-    // bases are parquet scans (cheap to recompute if branches race), so the
-    // single job's cross-collection stage parallelism wins over serial
-    // per-collection counts. (An earlier 5× race was a multi-branch job
-    // over an UN-persisted shuffled base; compile() now eagerly persists
-    // those, so the race surface is gone.)
-    g.materialize(): Unit
-    g
+    freeze(parts.reduceLeft(_.unionWith(_)))
   }
+
+  /** A fixture graph with every vertex and edge collection frozen by
+    * [[Rounds.materialize]]: the harness sweeps clear the session's cache
+    * after each timed query, and a checkpoint is not a cache entry, so the
+    * fixture survives them with its values (and its minted ids) intact.
+    */
+  private def freeze(g: GraphOutput): GraphOutput = GraphOutput(
+    g.vertices.map { case (k, v) => k -> Rounds.materialize(v) },
+    g.edges.map { case (k, e) => k -> Rounds.materialize(e) }, g.errors)
 }

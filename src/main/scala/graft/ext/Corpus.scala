@@ -190,26 +190,6 @@ object Corpus {
         count_distinct(col("_eval_id")).as("n_eval_docs"))
   }
 
-  /** Skew-safe two-phase top-k per group: a dominant group (one language
-    * covering most of a corpus) funnels through a single window partition
-    * in [[topKPerGroup]]; here each (group, salt) shard keeps a LOCAL top-k
-    * first, so no partition ever holds more than its shard, and the global
-    * pass ranks only `salts × k` candidates per group. Results are
-    * identical to the direct path (top-k is a per-group max — salting
-    * loses nothing as long as every shard keeps k).
-    */
-  def topKPerGroupSalted(df: DataFrame, groupCol: String, scoreCol: String,
-      idCol: String, k: Int, salts: Int = 32): DataFrame = {
-    val salted = df.withColumn("_salt", pmod(hash(col(idCol)), lit(salts)))
-    val wLocal = Window.partitionBy(col(groupCol), col("_salt"))
-      .orderBy(col(scoreCol).desc, col(idCol))
-    val local = salted.withColumn("_lr", row_number().over(wLocal))
-      .where(col("_lr") <= k).drop("_lr", "_salt")
-    val wGlobal = Window.partitionBy(col(groupCol))
-      .orderBy(col(scoreCol).desc, col(idCol))
-    local.withColumn("rank", row_number().over(wGlobal)).where(col("rank") <= k)
-  }
-
   /** Approximate token-count quantiles — the 100 TB path: a mergeable
     * sketch (bounded memory per partition) instead of [[tokenQuantiles]]'s
     * exact value multiset. `accuracy` trades memory for error ≤ 1/accuracy

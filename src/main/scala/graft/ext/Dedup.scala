@@ -280,52 +280,11 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** 64-bit SimHash over token hashes (xxhash64 — the fast path when no
-    * oracle is needed): sum ±1 per bit weighted by token frequency, sign →
-    * bit.
-    */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol), explode(
-      filter(split(normalize(col(textCol)), " "), t => length(t) > 0)).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val bits = toks.select(col(idCol),
-      explode(sequence(lit(0), lit(63))).as("bit"), col("h"))
-      .withColumn("v", when(expr("(h >> bit) & 1") === 1, 1).otherwise(-1))
-    bits.groupBy(col(idCol), col("bit")).agg(sum(col("v")).as("s"))
-      .withColumn("bitval", when(col("s") > 0, lit(1L)).otherwise(lit(0L)))
-      .groupBy(col(idCol))
-      .agg(sum(expr("shiftleft(bitval, cast(bit as int))")).as("simhash"))
-  }
-
-  /** SimHash near-dups on the 64-bit fast signature. Banding is recall-
-    * correct by pigeonhole: `maxHamming + 1` bands of ⌊64/nb⌋..⌈64/nb⌉ bits,
-    * so any pair within `maxHamming` agrees on at least one full band (the
-    * previous fixed 4×16-bit split silently missed pairs at Hamming 4+).
-    */
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
-    val nb = math.min(maxHamming + 1, 64)
-    val sig = simhash(df, idCol, textCol)
-    val banded = sig.select(col(idCol), col("simhash"),
-      explode(sequence(lit(0), lit(nb - 1))).as("band"))
-      // band i covers bits [⌊i·64/nb⌋, ⌊(i+1)·64/nb⌋); widths differ by ≤1
-      .withColumn("_lo", (col("band") * 64 / nb).cast("int"))
-      .withColumn("_hi", ((col("band") + 1) * 64 / nb).cast("int"))
-      .withColumn("bandval",
-        expr("(simhash >> _lo) & (CASE WHEN _hi - _lo >= 64 THEN -1L ELSE shiftleft(1L, _hi - _lo) - 1 END)"))
-    val l = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"), col("band"), col("bandval"))
-    val r = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"), col("band"), col("bandval"))
-    l.join(r, Seq("band", "bandval")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
-
   /** SimHash with an md5-derived 60-bit signature rendered as a '0'/'1'
     * string — bit j comes from hex digit j/4 of md5(token) (MSB-first within
     * the digit), so a SQL engine with md5 (the DuckDB oracle) reproduces the
     * signature bit-for-bit; 60 bits = 15 hex digits keeps every intermediate
-    * integral and exact. Same token-frequency ±1 voting as [[simhash]].
+    * integral and exact. Each bit is a token-frequency-weighted ±1 vote.
     */
   val SimhashMd5Bits = 60
 
@@ -358,10 +317,6 @@ object Dedup {
         .as("sig"))
   }
 
-  /** Near-dup pairs on the md5 signature: `maxHamming + 1` substring bands
-    * (pigeonhole-complete), candidates verified with the true Hamming
-    * distance. Fully replicable in the DuckDB oracle.
-    */
   /** Connected components over a near-dup pair list — the dedup-cluster
     * step every pipeline runs AFTER candidate generation (pairs → clusters
     * → one canonical survivor per cluster). Hash-min label propagation:
@@ -434,6 +389,10 @@ object Dedup {
     labels.withColumnRenamed("_id", idCol)
   }
 
+  /** Near-dup pairs on the md5 signature: `maxHamming + 1` substring bands
+    * (pigeonhole-complete), candidates verified with the true Hamming
+    * distance. Fully replicable in the DuckDB oracle.
+    */
   def simhashMd5NearDups(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val n = SimhashMd5Bits

@@ -15,10 +15,11 @@ import graft.graph.Rounds.materialize
   * `scale`-scaled units (y₀ = scale = 1.0).
   *
   * Scale shape: per half-step ONE join of the ratings frame against the
-  * (broadcastable) opposite factor table + a map-side-combinable keyed
-  * aggregate — the classic ALS data flow; no driver data path at all (the
-  * factor tables stay distributed; only checkpoint jobs run). Rank-k is
-  * the same flow with k-vectors; rank-1 keeps the arithmetic long-exact.
+  * frozen opposite factor table (the broadcast side while small) + a
+  * map-side-combinable keyed aggregate — the classic ALS data flow; no
+  * driver data path at all (the factor tables stay distributed; only
+  * checkpoint jobs run). Rank-k is the same flow with k-vectors; rank-1
+  * keeps the arithmetic long-exact.
   *
   * Caller contract: ratings deduplicated per (user, item);
   * `max_deg · (maxRating·scale)² · scale` within a long — at the default
@@ -30,23 +31,19 @@ object Factorize {
     * `rounds` full alternations (x-update then y-update per round).
     */
   def als1(ratings: DataFrame, userCol: String, itemCol: String,
-      ratingCol: String, rounds: Int, scale: Long = 1000L,
-      broadcastLimit: Long = 10000000L): (DataFrame, DataFrame) = {
+      ratingCol: String, rounds: Int, scale: Long = 1000L): (DataFrame, DataFrame) = {
     require(rounds >= 1, "need at least one round")
-    val (r, c) = materialize(ratings.select(col(userCol).as("u"), col(itemCol).as("i"),
-      col(ratingCol).cast("long").as("r")), count(lit(1)).as("n_ratings"))
-    val nR = c.getLong(0)
-    def bc(df: DataFrame): DataFrame =
-      if (nR <= broadcastLimit) broadcast(df) else df
+    val r = materialize(ratings.select(col(userCol).as("u"), col(itemCol).as("i"),
+      col(ratingCol).cast("long").as("r")))
     val s2 = scale * scale
     var y = materialize(r.select(col("i")).distinct().withColumn("y", lit(scale)))
     var x: DataFrame = null
     for (_ <- 1 to rounds) {
-      x = materialize(r.join(bc(y), Seq("i"))
+      x = materialize(r.join(y, Seq("i"))
         .groupBy("u").agg(sum(col("r") * col("y")).as("_ry"),
           sum(col("y") * col("y")).as("_yy"))
         .select(col("u"), expr(s"($s2 * _ry) div _yy").as("x")))
-      y = materialize(r.join(bc(x), Seq("u"))
+      y = materialize(r.join(x, Seq("u"))
         .groupBy("i").agg(sum(col("r") * col("x")).as("_rx"),
           sum(col("x") * col("x")).as("_xx"))
         .select(col("i"), expr(s"($s2 * _rx) div _xx").as("y")))

@@ -31,12 +31,6 @@ import graft.graph.Rounds.materialize
   */
 object GraphAlgos {
 
-  /** Size gate for the loops' broadcast choices: a node- or row-keyed
-    * state frame is broadcast to the edge join while its observed size is
-    * at most this many rows; above it the join shuffles instead.
-    */
-  private[graft] val BroadcastRows = 1000000L
-
   /** Order-preserving dense-long dictionary over a distinct single-column
     * `node` frame: node → nid ∈ [0, n) assigned in LEXICOGRAPHIC node
     * order, so `nid_x < nid_y ⟺ node_x < node_y` and every key
@@ -69,32 +63,27 @@ object GraphAlgos {
   }
 
   /** Re-key a (src, dst[, payload…]) edge frame through the dictionary —
-    * both endpoints inner-joined against the n-row dict (broadcast under
-    * [[BroadcastRows]]; above it these two up-front hash joins are the
-    * price of removing the string width from EVERY later iteration).
-    * Payload columns pass through untouched.
+    * both endpoints inner-joined against the n-row dict (the price of
+    * removing the string width from EVERY later iteration). Payload
+    * columns pass through untouched.
     */
-  private[graft] def encodeEdges(e: DataFrame, dict: DataFrame,
-      bcDict: Boolean): DataFrame = {
-    val d = if (bcDict) broadcast(dict) else dict
+  private[graft] def encodeEdges(e: DataFrame, dict: DataFrame): DataFrame = {
     val others = e.columns.filterNot(c => c == "src" || c == "dst").map(col)
-    e.join(d.select(col("node").as("src"), col("nid").as("_sid")), Seq("src"))
-      .join(d.select(col("node").as("dst"), col("nid").as("_did")), Seq("dst"))
+    e.join(dict.select(col("node").as("src"), col("nid").as("_sid")), Seq("src"))
+      .join(dict.select(col("node").as("dst"), col("nid").as("_did")), Seq("dst"))
       .select(Seq(col("_sid").as("src"), col("_did").as("dst")) ++ others: _*)
   }
 
-  /** Decode an id column back to the node string via the dictionary
-    * (broadcast-joined when small): replaces `idCol` in place, preserving
-    * column order and all other columns.
+  /** Decode an id column back to the node string via the dictionary, in
+    * place: column order and all other columns are preserved.
     */
   private[graft] def decodeNode(df: DataFrame, dict: DataFrame,
-      idCol: String, bcDict: Boolean): DataFrame = {
-    val d = if (bcDict) broadcast(dict) else dict
+      idCol: String): DataFrame = {
     val outCols = df.columns.map {
       case c if c == idCol => col("_dec").as(idCol)
       case c => col(c)
     }
-    df.join(d.select(col("nid").as(idCol), col("node").as("_dec")), Seq(idCol))
+    df.join(dict.select(col("nid").as(idCol), col("node").as("_dec")), Seq(idCol))
       .select(outCols.toSeq: _*)
   }
 
@@ -117,15 +106,14 @@ object GraphAlgos {
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
 
   /** An edge frame on dictionary ids: `e` is (src, dst[, w]) longs, `dict`
-    * decodes them, `n` is the node count, `bc` the broadcast decision.
+    * decodes them, `n` is the node count.
     */
-  private[graft] final case class EncodedGraph(e: DataFrame, dict: DataFrame,
-      n: Long, bc: Boolean)
+  private[graft] final case class EncodedGraph(e: DataFrame, dict: DataFrame, n: Long)
 
   /** Shared prelude of the PageRank family and [[hitsFixed]]: string
     * edges (distinct, or with `weightCol` summed per (src, dst) and
     * non-positive totals dropped), materialized → [[nodeDict]] and n from
-    * its own job → broadcast decision → [[encodeEdges]], materialized.
+    * its own job → [[encodeEdges]], materialized.
     *
     * Precondition handled here: an edge with a null endpoint is dropped
     * before the dictionary and the degrees. Null is not a node — counting
@@ -143,8 +131,7 @@ object GraphAlgos {
       else s.groupBy("src", "dst").agg(sum(col("w")).as("w")).where(col("w") > 0))
     val (dict, n) = nodeDict(eStr.select(col("src").as("node"))
       .union(eStr.select(col("dst"))).distinct())
-    val bc = n <= BroadcastRows
-    EncodedGraph(materialize(encodeEdges(eStr, dict, bc)), dict, n, bc)
+    EncodedGraph(materialize(encodeEdges(eStr, dict)), dict, n)
   }
 
   private def requireRankArgs(iterations: Int, dampingPct: Int): Unit = {
@@ -166,7 +153,7 @@ object GraphAlgos {
       .withColumn("rank", atTeleport(init))
     for (_ <- 1 to iterations)
       ranks = materialize(rankStep(g, out, ranks, teleport, dampingPct))
-    decodeNode(ranks, g.dict, "node", g.bc)
+    decodeNode(ranks, g.dict, "node")
   }
 
   /** Per-source total outgoing weight `out`, materialized: the out-degree,
@@ -176,25 +163,20 @@ object GraphAlgos {
     materialize(g.e.groupBy("src").agg((
       if (g.e.columns.contains("w")) sum(col("w")) else count(lit(1))).as("out")))
 
-  /** One PageRank-family iteration: the n-row share table (rank ⋈ the
-    * per-source [[rankOut]] total, both node-keyed) joins the encoded
-    * edges ONCE — a broadcast under [[BroadcastRows]], so the big edge
-    * frame never re-exchanges — then one map-side-combined sum per dst.
-    * The unweighted share is (rank·damping÷100)÷outdeg per source; the
+  /** One PageRank-family iteration: the encoded edges join the node-keyed
+    * frozen `ranks` and per-source [[rankOut]] frames directly (each
+    * small one the broadcast side, so the big edge frame never
+    * re-exchanges), then one map-side-combined sum per dst. The
+    * unweighted share is (rank·damping÷100)÷outdeg per source; the
     * weighted one splits (rank·damping÷100) by w÷W per edge. Exposed so
     * `PlanAssertSpec` can pin that plan without running a loop.
     */
   private[graft] def rankStep(g: EncodedGraph, out: DataFrame,
       ranks: DataFrame, teleport: Column, dampingPct: Int): DataFrame = {
-    val (shareCols, mass) =
-      if (g.e.columns.contains("w"))
-        (Seq(col("src"), expr(s"(rank * $dampingPct) div 100").as("t"),
-          col("out")), expr("(t * w) div out"))
-      else (Seq(col("src"), expr(s"(rank * $dampingPct div 100) div out").as("m")),
-        col("m"))
-    val share = ranks.withColumnRenamed("node", "src").join(out, Seq("src"))
-      .select(shareCols: _*)
-    val contrib = g.e.join(if (g.bc) broadcast(share) else share, Seq("src"))
+    val mass = expr(if (g.e.columns.contains("w")) s"(((rank * $dampingPct) div 100) * w) div out"
+      else s"(rank * $dampingPct div 100) div out")
+    val contrib = g.e.join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+      .join(out, Seq("src"))
       .groupBy(col("dst").as("node")).agg(sum(mass).as("m"))
     g.dict.select(col("nid").as("node")).join(contrib, Seq("node"), "left")
       .select(col("node"), (teleport + coalesce(col("m"), lit(0L))).as("rank"))
@@ -215,6 +197,7 @@ object GraphAlgos {
       scale: Long = 1000000000000L): DataFrame = {
     requireRankArgs(iterations, dampingPct)
     val g = encodeGraph(edges, srcCol, dstCol)
+    require(g.n > 0, "PageRank needs at least one edge with two non-null endpoints")
     rankLoop(g, lit(true), scale / g.n, iterations, dampingPct)
   }
 
@@ -231,6 +214,7 @@ object GraphAlgos {
       scale: Long = 1000000000000L): DataFrame = {
     requireRankArgs(iterations, dampingPct)
     val g = encodeGraph(edges, srcCol, dstCol, Some(weightCol))
+    require(g.n > 0, "weighted PageRank needs at least one pair with a positive total weight")
     rankLoop(g, lit(true), scale / g.n, iterations, dampingPct)
   }
 
@@ -294,9 +278,8 @@ object GraphAlgos {
     *
     * Scale shape: per round ONE keyed join of the current frontier-
     * inclusive distance table against the edges plus a map-side-combinable
-    * min groupBy; the distance table is node-keyed (≤ n rows), broadcast
-    * while its observed row count is under [[BroadcastRows]], so the edge
-    * frame never re-shuffles; that count rides the round's checkpoint job.
+    * min groupBy; the distance table is node-keyed (≤ n rows), the
+    * broadcast side while it is small, so the edge frame never re-shuffles.
     * String-keyed (see the object scaladoc). Rounds are a hard cap (the reference's traversal
     * hop caps, query/caps.py) — at diameter convergence extra rounds are
     * no-ops but still cost a pass; choose maxHops accordingly.
@@ -306,7 +289,7 @@ object GraphAlgos {
     val spark = edges.sparkSession
     import spark.implicits._
     relaxLoop(lightestEdges(edges, srcCol, dstCol, weightCol),
-      Seq((source, 0L)).toDF("node", "dist"), 1L, Seq("node"), maxHops)(addWeight)
+      Seq((source, 0L)).toDF("node", "dist"), Seq("node"), maxHops)(addWeight)
   }
 
   /** (src, dst, w) string/long edges, parallel edges reduced to the
@@ -329,40 +312,29 @@ object GraphAlgos {
     * [[multiSourceShortestPaths]] and [[temporalReachability]]: the edge
     * frame is materialized once; then `maxHops` rounds of [[relaxRound]]
     * unioned with the state and reduced by `keys` to the minimum of the
-    * state's one value column, each round materialized with its row count
-    * observed for the next round's broadcast decision. `seedRows` is the
-    * seed state's row count.
+    * state's one value column, each round materialized.
     */
-  private def relaxLoop(edges: DataFrame, seed: DataFrame, seedRows: Long,
-      keys: Seq[String], maxHops: Int)(relax: DataFrame => DataFrame): DataFrame = {
+  private def relaxLoop(edges: DataFrame, seed: DataFrame, keys: Seq[String],
+      maxHops: Int)(relax: DataFrame => DataFrame): DataFrame = {
     require(maxHops >= 1, "need at least one hop")
     val e = materialize(edges)
     val value = seed.columns.filterNot(keys.contains).head
     var state = seed
-    var rows = seedRows
-    for (_ <- 1 to maxHops) {
-      val (next, c) = materialize(state.unionByName(relaxRound(e, state, rows, relax))
-        .groupBy(keys.map(col): _*).agg(min(value).as(value)),
-        count(lit(1)).as("rows"))
-      state = next
-      rows = c.getLong(0)
-    }
+    for (_ <- 1 to maxHops)
+      state = materialize(state.unionByName(relaxRound(e, state, relax))
+        .groupBy(keys.map(col): _*).agg(min(value).as(value)))
     state
   }
 
   /** One Bellman-Ford relaxation: the node-keyed state `dist` joins the
-    * edge frame on `src`, broadcast while `distRows` ≤ [[BroadcastRows]], and
-    * `relax` projects the joined rows to new state candidates (by default
-    * [[shortestPathsFixed]]'s dist + w) — exposed package-private so
-    * `PlanAssertSpec` can assert the loop's plan invariants (state side
-    * broadcast under the limit, no Exchange on the materialized edge side)
-    * without executing the loop.
+    * edge frame on `src`, and `relax` projects the joined rows to new
+    * state candidates (by default [[shortestPathsFixed]]'s dist + w).
+    * `PlanAssertSpec` pins its plan (small state side broadcast, no
+    * Exchange on the edge side) without executing the loop.
     */
   private[graft] def relaxRound(e: DataFrame, dist: DataFrame,
-      distRows: Long, relax: DataFrame => DataFrame = addWeight): DataFrame = {
-    val distSide = if (distRows <= BroadcastRows) broadcast(dist) else dist
-    relax(e.join(distSide.withColumnRenamed("node", "src"), Seq("src")))
-  }
+      relax: DataFrame => DataFrame = addWeight): DataFrame =
+    relax(e.join(dist.withColumnRenamed("node", "src"), Seq("src")))
 
   /** DuckDB-dialect oracle for [[shortestPathsFixed]]: rounds unrolled as
     * chained CTEs over the same integer arithmetic (kept beside the
@@ -398,8 +370,7 @@ object GraphAlgos {
     * (src, dst).
     *
     * Scale shape: per round one keyed join of the edge frame against the
-    * arrival table (broadcast while its observed row count is under
-    * [[BroadcastRows]]) + one min groupBy, materialized per round.
+    * arrival table + one min groupBy, materialized per round.
     */
   def temporalReachability(edges: DataFrame, srcCol: String, dstCol: String,
       tsCol: String, source: String, startTime: Long,
@@ -410,7 +381,7 @@ object GraphAlgos {
       col(dstCol).cast("string").as("dst"),
       col(tsCol).cast("long").as("t"))
       .distinct()
-    relaxLoop(e, Seq((source, startTime)).toDF("node", "arrival"), 1L,
+    relaxLoop(e, Seq((source, startTime)).toDF("node", "arrival"),
       Seq("node"), maxHops)(_.where(col("t") >= col("arrival"))
         .select(col("dst").as("node"), col("t").as("arrival")))
   }
@@ -638,7 +609,7 @@ object GraphAlgos {
     import spark.implicits._
     relaxLoop(lightestEdges(edges, srcCol, dstCol, weightCol),
       seeds.distinct.map(s => (s, s, 0L)).toDF("seed", "node", "dist"),
-      seeds.distinct.size.toLong, Seq("seed", "node"), maxHops)(
+      Seq("seed", "node"), maxHops)(
       _.select(col("seed"), col("dst").as("node"), (col("dist") + col("w")).as("dist")))
   }
 
@@ -710,8 +681,8 @@ object GraphAlgos {
         stable = true
       } else {
         e = materialize(e
-          .join(broadcast(removed).withColumnRenamed("node", "u"), Seq("u"), "left_anti")
-          .join(broadcast(removed).withColumnRenamed("node", "v"), Seq("v"), "left_anti")
+          .join(removed.withColumnRenamed("node", "u"), Seq("u"), "left_anti")
+          .join(removed.withColumnRenamed("node", "v"), Seq("v"), "left_anti")
           .select("u", "v"))
         round += 1
       }
@@ -1189,12 +1160,9 @@ object GraphAlgos {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // string-keyed: the registers are md5(node string)-derived either way
-    val (e, ec) = materialize(edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+    val e = materialize(edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct(), count(lit(1)).as("edges"))
-    // the checkpoint's plan statistics are estimates, so the size gate is
-    // taken from its counted rows, as the other loops do for their state
-    val eSide = if (ec.getLong(0) <= BroadcastRows) broadcast(e) else e
+      .distinct())
     val nodes = e.select(col("u").as("node")).distinct()
     // registers ride a 256-byte VECTOR per node aggregated by the native
     // map-side-combining HllRegisterMerge — each round's exchange carries
@@ -1218,7 +1186,7 @@ object GraphAlgos {
     }
     var out = roundRow(0, regs)
     for (r <- 1 to rounds) {
-      val fromNbr = eSide.join(regs.withColumnRenamed("node", "v"), Seq("v"))
+      val fromNbr = e.join(regs.withColumnRenamed("node", "v"), Seq("v"))
         .select(col("u").as("node"), col("regs"))
       regs = materialize(fromNbr.unionByName(regs)
         .groupBy("node").agg(hllMerge(col("regs")).as("regs")))
@@ -1446,8 +1414,8 @@ object GraphAlgos {
       .distinct().withColumn("_h", md5(concat(lit("n:"), col("n"))))
       .orderBy("_h", "n").limit(200).select("n"))
     val eSub = e
-      .join(broadcast(nodes.withColumnRenamed("n", "a")), Seq("a"), "left_semi")
-      .join(broadcast(nodes.withColumnRenamed("n", "b")), Seq("b"), "left_semi")
+      .join(nodes.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
+      .join(nodes.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
     val negs = nodes.select(col("n").as("a"))
       .join(nodes.select(col("n").as("b")), col("a") < col("b"))
       .join(broadcast(eSub), Seq("a", "b"), "left_anti") // ≤ 200·199/2 rows
@@ -1629,19 +1597,16 @@ object GraphAlgos {
       else dir).distinct())
     val spark = edges.sparkSession
     import spark.implicits._
-    // frontier/visited/delta frames are |seeds|·|nodes| at worst — tiny
-    // next to the edge frame, so broadcasting them keeps the materialized
-    // edges from ever re-exchanging
     // forward: levels(d) = (s, v, sigma)
     val l0 = materialize(seeds.map(s => (s, s, 1L)).toDF("s", "v", "sigma"))
     val levels = scala.collection.mutable.ArrayBuffer(l0)
     var visited = materialize(l0.select("s", "v"))
     for (_ <- 1 to maxDepth) {
       val next = materialize(e.withColumnRenamed("src", "v")
-        .join(broadcast(levels.last), Seq("v"))
+        .join(levels.last, Seq("v"))
         .groupBy(col("s"), col("dst").as("v"))
         .agg(sum("sigma").as("sigma"))
-        .join(broadcast(visited), Seq("s", "v"), "left_anti"))
+        .join(visited, Seq("s", "v"), "left_anti"))
       levels += next
       visited = materialize(visited.union(next.select("s", "v")))
     }
@@ -1657,7 +1622,7 @@ object GraphAlgos {
         .select(col("s"), col("v").as("w"), col("sigma").as("sw"),
           coalesce(col("delta"), lit(0L)).as("dw"))
       delta = materialize(e.withColumnRenamed("src", "v").withColumnRenamed("dst", "w")
-        .join(broadcast(levels(d)), Seq("v"))
+        .join(levels(d), Seq("v"))
         .join(broadcast(wSide), Seq("s", "w"))
         .groupBy("s", "v")
         .agg(sum(expr(s"(sigma * ($deltaScale + dw)) div sw")).as("delta")))
@@ -1735,11 +1700,9 @@ object GraphAlgos {
     // score frames stay SPARSE inside the loop (only nodes that received
     // mass — a node absent from a frame has score 0, and joining it in
     // would only add per-half-step node-table traffic); the dense frame is
-    // assembled once at the end. The score side of each edge join is
-    // broadcast under the limit, so the big cached edge frame NEVER
-    // re-shuffles — the only exchange per half-step is the map-side
+    // assembled once at the end. The frozen score side is the broadcast
+    // side while small: the only exchange per half-step is the map-side
     // combined (node, partial-sum) aggregate.
-    def bc(df: DataFrame): DataFrame = if (g.bc) broadcast(df) else df
     def normalize(raw: DataFrame, outCol: String): DataFrame = {
       // ONE pass per half-step: the raw sums are materialized with the L1
       // total counted IN THE SAME JOB (an exact integer); the scaled
@@ -1752,10 +1715,10 @@ object GraphAlgos {
       .withColumn("hub", lit(unit)))
     var auths: DataFrame = null
     for (_ <- 1 to iterations) {
-      val araw = e.join(bc(hubs.withColumnRenamed("node", "src")), Seq("src"))
+      val araw = e.join(hubs.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("hub").as("v"))
       auths = normalize(araw, "authority")
-      val hraw = e.join(bc(auths.withColumnRenamed("node", "dst")), Seq("dst"))
+      val hraw = e.join(auths.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum("authority").as("v"))
       hubs = normalize(hraw, "hub")
     }
@@ -1965,7 +1928,7 @@ object GraphAlgos {
     * (visibly unconverged, deterministic, oracle-replicable).
     *
     * Scale shape: node-cardinality label frames joined to the edge frame
-    * once per propagation step (broadcast under the node limit), min
+    * once per propagation step (the broadcast side while small), min
     * aggregates partial-combine map-side; the subgraph shrinks
     * monotonically across peels. Labels are strings; min is lexicographic
     * (callers wanting numeric order zero-pad).

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One materialization policy (see `graph.Rounds`): operators share and
   * freeze frames only through `Rounds.materialize`. `persist` is kept
-  * where a cache is the design — the query plane's hop frames, the public
-  * `GraphOutput.cache` and the battery's session-lifetime fixture memo.
+  * where a cache is the design — the query plane's hop frames and the
+  * public `GraphOutput.cache` — and no operator sizes a broadcast itself.
   */
 class MaterializePolicySpec extends AnyFunSuite {
 
@@ -36,8 +36,16 @@ class MaterializePolicySpec extends AnyFunSuite {
 
   test("persist and StorageLevel appear only where a cache is the design") {
     val bad = offenders("""\.persist\(|StorageLevel""", Set(
-      "graft/query/Query.scala", "graft/graph/GraphOutput.scala",
-      "graft/battery/BatteryFixtures.scala"))
+      "graft/query/Query.scala", "graft/graph/GraphOutput.scala"))
     assert(bad.isEmpty, "use graph.Rounds.materialize:\n" + bad.mkString("\n"))
+  }
+
+  test("no hand-written size gate on a broadcast") {
+    // frozen frames carry their stored size (Rounds.materialize), so
+    // spark.sql.autoBroadcastJoinThreshold makes the size decision
+    val gates = offenders("""if \(.*\) broadcast\(""", Set.empty)
+    assert(gates.isEmpty, "let the planner decide:\n" + gates.mkString("\n"))
+    val thresholds = offenders("BroadcastRows|broadcastLimit", Set.empty)
+    assert(thresholds.isEmpty, "no row threshold:\n" + thresholds.mkString("\n"))
   }
 }

@@ -80,9 +80,10 @@ class PlanAssertSpec extends SparkSpec {
   test("fixed-point relax round broadcasts the distance table under the limit") {
     // the loop invariant every iterative kernel (sssp, pagerank, temporal
     // reach) depends on: the node-keyed state table is the BROADCAST side
-    // while it fits, so the big cached edge frame joins with no Exchange
-    // of its own; over the limit the plan degrades to a shuffle join
-    // rather than an overflowing broadcast
+    // while it fits, so the big edge frame joins with no Exchange of its
+    // own; no hint asks for it — the planner's size threshold decides, and
+    // over it the plan degrades to a shuffle join rather than an
+    // overflowing broadcast
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -91,7 +92,7 @@ class PlanAssertSpec extends SparkSpec {
         col("l_quantity").cast("long").as("w"))
     val dist = Seq(("1", 0L)).toDF("node", "dist")
     val under = graft.graph.GraphAlgos
-      .relaxRound(e, dist, distRows = 1L)
+      .relaxRound(e, dist)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(under.contains("BroadcastHashJoin"),
       s"relax round lost the distance-side broadcast:\n$under")
@@ -100,10 +101,11 @@ class PlanAssertSpec extends SparkSpec {
   }
 
   test("every PageRank variant's iteration broadcasts its share table, never re-exchanges the edges") {
-    // the plan graph_analytics runs per PageRank iteration: the n-row share
-    // table is the broadcast side, and the materialized encoded edge frame
-    // reaches its first exchange only through that join and the partial
-    // (map-side) sum per dst — its rows are never shuffled themselves
+    // the plan graph_analytics runs per PageRank iteration: the n-row rank
+    // and out-degree frames are the broadcast sides (by their frozen sizes,
+    // no hint), and the materialized encoded edge frame reaches its first
+    // exchange only through those joins and the partial (map-side) sum per
+    // dst — its rows are never shuffled themselves
     import spark.implicits._
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec

@@ -118,17 +118,6 @@ class CorpusSpec extends SparkSpec {
     assert(got == Set(1L, 3L))
   }
 
-  test("topKPerGroupSalted equals the direct window path") {
-    import spark.implicits._
-    val df = (1L to 500L).map(i => (s"g${i % 3}", i, (i * 37 % 101).toDouble))
-      .toDF("g", "id", "score")
-    val direct = Corpus.topKPerGroup(df, "g", "score", "id", 5)
-      .select("g", "rank", "id").as[(String, Int, Long)].collect().toSet
-    val salted = Corpus.topKPerGroupSalted(df, "g", "score", "id", 5, salts = 7)
-      .select("g", "rank", "id").as[(String, Int, Long)].collect().toSet
-    assert(salted == direct)
-  }
-
   test("tokenQuantilesApprox tracks the exact quantiles") {
     import spark.implicits._
     val df = (1 to 1000).map(i => s"${"w " * (i % 50)}").toDF("text")

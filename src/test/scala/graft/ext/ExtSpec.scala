@@ -120,10 +120,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical docs get identical signatures, near-dups small hamming") {
-    val sig = Dedup.simhash(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sig = Dedup.simhashMd5Signatures(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(sig(1L) == sig(2L))
-    val nd = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3)
+    val nd = Dedup.simhashMd5NearDups(docs, "doc_id", "text", maxHamming = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd.contains((1L, 2L)))
   }

@@ -57,6 +57,21 @@ class GraphAlgosSpec extends SparkSpec {
       ranks(GraphAlgos.pageRankFixed(e, "s", "t", iterations = 4)))
   }
 
+  test("PageRank on a graph with no usable edge fails with a named precondition") {
+    import spark.implicits._
+    // every edge has a null endpoint, or (weighted) no pair has a positive
+    // total: n = 0, where scale / n would throw a bare division by zero
+    val nullOnly = Seq(("a", null: String), (null: String, "b")).toDF("s", "t")
+    val plain = intercept[IllegalArgumentException](
+      GraphAlgos.pageRankFixed(nullOnly, "s", "t", iterations = 2))
+    assert(plain.getMessage.contains("at least one edge"), plain.getMessage)
+    val nonPositive = Seq(("a", "b", 2L), ("a", "b", -2L), ("b", "c", 0L))
+      .toDF("s", "t", "w")
+    val weighted = intercept[IllegalArgumentException](
+      GraphAlgos.weightedPageRankFixed(nonPositive, "s", "t", "w", iterations = 2))
+    assert(weighted.getMessage.contains("positive total weight"), weighted.getMessage)
+  }
+
   test("weighted PageRank with unit weights equals pageRankFixed") {
     import org.apache.spark.sql.functions.lit
     val e = rankFixture

@@ -32,11 +32,10 @@ class NodeDictSpec extends SparkSpec {
     val e = Seq(("s1", "p2", 7L), ("p10", "s1", 3L)).toDF("src", "dst", "w")
     val (dict, _) = GraphAlgos.nodeDict(
       e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
-    val enc = GraphAlgos.encodeEdges(e, dict, bcDict = true)
+    val enc = GraphAlgos.encodeEdges(e, dict)
     assert(enc.schema("src").dataType.typeName == "long")
     val dec = GraphAlgos.decodeNode(
-      GraphAlgos.decodeNode(enc, dict, "src", bcDict = true),
-      dict, "dst", bcDict = true)
+      GraphAlgos.decodeNode(enc, dict, "src"), dict, "dst")
     assert(dec.orderBy("src", "dst").collect().map(r =>
         (r.getString(0), r.getString(1), r.getLong(2))).toSeq ==
       Seq(("p10", "s1", 3L), ("s1", "p2", 7L)))
