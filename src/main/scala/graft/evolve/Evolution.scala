@@ -267,9 +267,6 @@ object EvolutionOp {
     a.copy(properties = props.values.toSeq, directed = a.directed && b.directed)
   }
 
-  /** Fold duplicate edge keys via [[mergeEdgePair]] (first occurrence
-    * keeps its position) — the reference's post-rename merge loop.
-    */
   /** reject duplicate (source, target, relation) triples — the reference's
     * manifest re-validation contract for rename/retarget ops (merge is the
     * MergeVertices/MergeEdges privilege, merge_core.py)
@@ -281,6 +278,9 @@ object EvolutionOp {
         "(use MergeEdges/MergeVertices to collapse edges deliberately)")
   }
 
+  /** Fold duplicate edge keys via [[mergeEdgePair]] (first occurrence
+    * keeps its position) — the reference's post-rename merge loop.
+    */
   private def mergeDuplicateEdges(edges: Seq[EdgeDef]): Seq[EdgeDef] = {
     val byKey = scala.collection.mutable.LinkedHashMap.empty[EdgeKey, EdgeDef]
     edges.foreach { e =>

@@ -70,18 +70,6 @@ object Corpus {
     df.where(md5(col(idCol).cast("string")) < thr)
   }
 
-  /** Deterministic training-export sharding: a reproducible global shuffle.
-    * Every row gets a `shard` (uniform md5 draw mod `nShards`, independent
-    * of the input key distribution — so shards balance even when ids or
-    * sources are skewed) and a `pos` within its shard (rank of a SECOND,
-    * independent md5 ordering hash), decorrelating neighbors so training
-    * readers see an i.i.d.-looking stream without a random_shuffle pass.
-    *
-    * Scale shape: one hash exchange on `shard` + a per-shard sort — the
-    * same cost as writing the output partitioned; no skew, no driver
-    * state. Assignment is append-stable (a row's shard never changes as
-    * the corpus grows; only in-shard positions shift).
-    */
   /** The ONE definition of the deterministic global-shuffle layout shared
     * by [[exportShards]] and [[packSequences]] (their orderings — and the
     * oracles mirroring them — must never drift apart): `shard` is a
@@ -95,6 +83,18 @@ object Corpus {
   private def orderDraw(idCol: String): Column =
     md5(concat(lit("o:"), col(idCol).cast("string")))
 
+  /** Deterministic training-export sharding: a reproducible global shuffle.
+    * Every row gets a `shard` (uniform md5 draw mod `nShards`, independent
+    * of the input key distribution — so shards balance even when ids or
+    * sources are skewed) and a `pos` within its shard (rank of a SECOND,
+    * independent md5 ordering hash), decorrelating neighbors so training
+    * readers see an i.i.d.-looking stream without a random_shuffle pass.
+    *
+    * Scale shape: one hash exchange on `shard` + a per-shard sort — the
+    * same cost as writing the output partitioned; no skew, no driver
+    * state. Assignment is append-stable (a row's shard never changes as
+    * the corpus grows; only in-shard positions shift).
+    */
   def exportShards(df: DataFrame, idCol: String, nShards: Int): DataFrame = {
     require(nShards > 0, "nShards must be positive")
     val w = Window.partitionBy(col("shard")).orderBy(col("_ord"), col(idCol))
@@ -437,27 +437,6 @@ object Corpus {
           .as("lm2_score"))
   }
 
-  /** Epoch-capped data-mixture planning (the standard pretraining mixing
-    * computation — public practice in LLM corpus reports): given target
-    * domain fractions and the corpus's available tokens per domain, find
-    * the LARGEST total training budget `T` such that no domain repeats
-    * more than `maxEpochs` times — `T = min over domains of
-    * maxEpochs · available_d / frac_d` — then plan `frac_d · T` tokens per
-    * domain. `epochs < 1` means subsample (feed [[stratifiedSample]] /
-    * [[hashSplit]] rates); `epochs > 1` means repeat. Domains absent from
-    * `targetWeights` are excluded from the plan (weight 0).
-    *
-    * Scale shape: one map-side-combinable groupBy on the domain — the
-    * result is one row per domain, so the min-over-plan window is tiny by
-    * construction (and the validation action below is over those same
-    * few rows, never the corpus). The corpus is scanned once, two columns.
-    *
-    * Every `targetWeights` domain must have tokens in the corpus: a
-    * weighted domain with zero available tokens makes the maxEpochs
-    * contract unsatisfiable for any positive budget (the plan would
-    * silently train on a different mixture than asked), so this raises
-    * instead.
-    */
   /** Temperature-scaled mixture weights (the T5/mT5 multilingual sampling
     * recipe, public): weight_d ∝ tokens_d^tau, normalized. tau = 1 keeps
     * natural proportions; tau → 0 flattens toward uniform, up-sampling
@@ -493,6 +472,27 @@ object Corpus {
       .select(col("domain"), col("available_tokens"), col("weight"))
   }
 
+  /** Epoch-capped data-mixture planning (the standard pretraining mixing
+    * computation — public practice in LLM corpus reports): given target
+    * domain fractions and the corpus's available tokens per domain, find
+    * the LARGEST total training budget `T` such that no domain repeats
+    * more than `maxEpochs` times — `T = min over domains of
+    * maxEpochs · available_d / frac_d` — then plan `frac_d · T` tokens per
+    * domain. `epochs < 1` means subsample (feed [[stratifiedSample]] /
+    * [[hashSplit]] rates); `epochs > 1` means repeat. Domains absent from
+    * `targetWeights` are excluded from the plan (weight 0).
+    *
+    * Scale shape: one map-side-combinable groupBy on the domain — the
+    * result is one row per domain, so the min-over-plan window is tiny by
+    * construction (and the validation action below is over those same
+    * few rows, never the corpus). The corpus is scanned once, two columns.
+    *
+    * Every `targetWeights` domain must have tokens in the corpus: a
+    * weighted domain with zero available tokens makes the maxEpochs
+    * contract unsatisfiable for any positive budget (the plan would
+    * silently train on a different mixture than asked), so this raises
+    * instead.
+    */
   def mixturePlan(df: DataFrame, domainCol: String, textCol: String,
       targetWeights: Map[String, Double], maxEpochs: Double = 4.0): DataFrame = {
     require(targetWeights.nonEmpty, "need at least one target domain")
@@ -1273,13 +1273,6 @@ object Corpus {
 
   // ------------------------------------------------------------ classifier
 
-  /** Hashed-unigram feature table for the perceptron: one row per
-    * (doc, bucket) with the integer token count, bucket = first-8-hex of
-    * md5(token) mod `dim` (the hashing trick), PLUS a bias row per doc at
-    * bucket −1 with count 1 — so the bias is just another feature and one
-    * aggregate updates weights and bias together. Docs whose text
-    * normalizes to zero tokens carry no rows (no evidence, not scored).
-    */
   /** Feature-hashing text vectorization (Weinberger et al. 2009, the
     * "hashing trick"): token counts fold into a FIXED dim via
     * md5 % dim — the dimension-bounded featurizer behind
@@ -1310,6 +1303,13 @@ object Corpus {
         .as("features"))
   }
 
+  /** Hashed-unigram feature table for the perceptron: one row per
+    * (doc, bucket) with the integer token count, bucket = first-8-hex of
+    * md5(token) mod `dim` (the hashing trick), PLUS a bias row per doc at
+    * bucket −1 with count 1 — so the bias is just another feature and one
+    * aggregate updates weights and bias together. Docs whose text
+    * normalizes to zero tokens carry no rows (no evidence, not scored).
+    */
   private def hashedCounts(df: DataFrame, idCol: String, textCol: String,
       labelCol: String, dim: Int): DataFrame = {
     val toks = df.select(col(idCol).as("_did"),
@@ -1457,20 +1457,6 @@ object Corpus {
     (Seq(base) ++ laterRounds ++ Seq(finalSel)).mkString(",\n")
   }
 
-  /** One-pass column profile — the data-quality summary (row count, null
-    * count, exact distinct count, min/max rendered as strings) a pipeline
-    * runs on every new table before trusting it. Long-format output: one
-    * row per profiled column.
-    *
-    * Scale shape: a SINGLE aggregate job. The exact multi-column DISTINCT
-    * counts make Catalyst plan one Expand (rows × n_cols) feeding one
-    * shuffle — the standard exact-profile cost; swap
-    * `approx_count_distinct` into the same shape when a 100 TB profile can
-    * tolerate ±2% (the Expand disappears and the pass is narrow). Min/max
-    * stringify AFTER aggregation (n_cols values, not n_rows casts).
-    * Callers pre-cast float columns (e.g. to DECIMAL) so the string
-    * rendering is engine-portable.
-    */
   /** Equi-width histogram of a numeric column — the profiling companion to
     * [[profile]] and the shape a query optimizer's column stats want.
     * Bin width = (max − min)/nBins from ONE tiny stats aggregate broadcast
@@ -1499,6 +1485,20 @@ object Corpus {
       .select("bin", "bin_lo", "bin_hi", "cnt")
   }
 
+  /** One-pass column profile — the data-quality summary (row count, null
+    * count, exact distinct count, min/max rendered as strings) a pipeline
+    * runs on every new table before trusting it. Long-format output: one
+    * row per profiled column.
+    *
+    * Scale shape: a SINGLE aggregate job. The exact multi-column DISTINCT
+    * counts make Catalyst plan one Expand (rows × n_cols) feeding one
+    * shuffle — the standard exact-profile cost; swap
+    * `approx_count_distinct` into the same shape when a 100 TB profile can
+    * tolerate ±2% (the Expand disappears and the pass is narrow). Min/max
+    * stringify AFTER aggregation (n_cols values, not n_rows casts).
+    * Callers pre-cast float columns (e.g. to DECIMAL) so the string
+    * rendering is engine-portable.
+    */
   def profile(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): org.apache.spark.sql.DataFrame = {
     require(cols.nonEmpty, "need at least one column to profile")
     val aggs = count(lit(1)).as("_n_rows") +: cols.flatMap { c =>

@@ -191,11 +191,6 @@ object Dedup {
     seeded.groupBy(col(idCol), col("seed")).agg(min(col("h")).as("minhash"))
   }
 
-  /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand =
-    * numHashes), hash each band, self-join on (band, bandHash). Pairs agreeing
-    * on ≥1 band are candidates; optionally verified by exact jaccard.
-    * shingle→minhash→band→bucket-join, all shuffle-keyed on hashes.
-    */
   /** Per-(doc, band) LSH signature: the md5 of the band's sorted
     * seed=minhash rows. Shared by self-join and cross-snapshot candidate
     * generation — both sides must band bit-identically.
@@ -209,6 +204,11 @@ object Dedup {
         concat(lpad(col("seed").cast("string"), 2, "0"), lit("="), col("minhash")))))).as("bsig"))
   }
 
+  /** MinHash-LSH candidate pairs: band the signature (bands × rowsPerBand =
+    * numHashes), hash each band, self-join on (band, bandHash). Pairs agreeing
+    * on ≥1 band are candidates; optionally verified by exact jaccard.
+    * shingle→minhash→band→bucket-join, all shuffle-keyed on hashes.
+    */
   def minhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int

@@ -1384,9 +1384,6 @@ object Events {
        |FROM s GROUP BY 1""".stripMargin
   }
 
-  /** DuckDB replay of [[holtSmooth]]: the same integer recurrence as a
-    * recursive CTE stepping all series in lockstep on the day ordinal.
-    */
   /** Holt–Winters additive triple exponential smoothing per series —
     * [[holtSmooth]] plus a 7-slot weekly seasonal state: for each
     * observation y on day d (season slot i = d mod 7),
@@ -1492,6 +1489,9 @@ object Events {
        |FROM fin JOIN n ON n.t = fin.t ORDER BY $typeCol""".stripMargin
   }
 
+  /** DuckDB replay of [[holtSmooth]]: the same integer recurrence as a
+    * recursive CTE stepping all series in lockstep on the day ordinal.
+    */
   def holtOracleSql(table: String, typeCol: String, tsCol: String,
       valueCol: String, horizon: Int = 7): String = {
     def fd(a: String) = s"(($a - ((($a) % 10 + 10) % 10)) / 10)::BIGINT"

@@ -307,9 +307,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Synthesize deterministic QOI payloads per id — procedural RGB so the
-    * oracle can recompute any decoded statistic closed-form.
-    */
   /** The closed-form test image: each channel a small linear formula of
     * (x, y, id) mod 256 — reproducible in plain SQL, so decode statistics
     * oracle exactly.
@@ -343,6 +340,9 @@ object Multimodal {
       }(enc)
   }
 
+  /** Synthesize deterministic QOI payloads per id — procedural RGB so the
+    * oracle can recompute any decoded statistic closed-form.
+    */
   def synthesizeQoi(df: DataFrame, idCol: String, w: Int, h: Int): DataFrame =
     synthesize(df, idCol, w, h, qoiPack)
 

@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
-  /** `points` (with numeric `ptCol`) ⋈ `intervals` (numeric `startCol`,
-    * `endCol`, inclusive ends): all pairs with start <= pt <= end, matching
-    * on `extraKeys` first when given.
-    */
   /** Exact floor division in LONG arithmetic — a double cast mis-buckets
     * values above 2^53 (epoch-nanos territory), silently losing matches at
     * bucket boundaries. `pmod` gives the floor remainder for negatives; the
@@ -33,6 +29,10 @@ object RangeJoin {
     ((c.cast("decimal(38,0)") - pmod(c.cast("decimal(38,0)"), lit(w))) / lit(w))
       .cast("bigint")
 
+  /** `points` (with numeric `ptCol`) ⋈ `intervals` (numeric `startCol`,
+    * `endCol`, inclusive ends): all pairs with start <= pt <= end, matching
+    * on `extraKeys` first when given.
+    */
   def pointInInterval(
       points: DataFrame,
       intervals: DataFrame,

@@ -354,13 +354,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("_rk").as("rank"))
   }
 
-  /** IVF (inverted-file) ANN — the classic coarse-quantizer path: k-means
-    * centroids partition the corpus into cells; a query probes its `nprobe`
-    * nearest cells only. The 100 TB disposition: centroids are trained once
-    * on a sample (driver-small), the corpus is bucketed with one narrow pass
-    * + shuffle on `cell`, and probes fan out to nprobe cells — scan cost is
-    * nprobe/nlist of brute force, with recall controlled by nprobe.
-    */
   /** L2-normalize a vector column (cosine metric ⇒ spherical k-means: cells
     * must be direction-based, or a large-magnitude vector with the same
     * direction lands in a far L2 cell and is missed at nprobe < nlist).
@@ -375,6 +368,13 @@ object Similarity {
     org.apache.spark.sql.functions.transform(vec,
       x => when(n > 0, x.cast("double") / n).otherwise(0.0))
 
+  /** IVF (inverted-file) ANN — the classic coarse-quantizer path: k-means
+    * centroids partition the corpus into cells; a query probes its `nprobe`
+    * nearest cells only. The 100 TB disposition: centroids are trained once
+    * on a sample (driver-small), the corpus is bucketed with one narrow pass
+    * + shuffle on `cell`, and probes fan out to nprobe cells — scan cost is
+    * nprobe/nlist of brute force, with recall controlled by nprobe.
+    */
   def ivfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long = 42L, trainRowsPerCell: Int = 256
@@ -1119,12 +1119,6 @@ object Similarity {
         org.apache.spark.sql.functions.transform(col("_s"),
           s => round(s.getField("_avg"), centroidScale)).as("centroid"))
 
-  /** Prototypicality: each vector's cosine to its OWN label's centroid —
-    * the D4/SSL-prototypes curation signal (public method family): the
-    * low end is outliers/label noise, the high end is redundancy near the
-    * class mode; both are pruning candidates. The centroid table is
-    * labels-many rows and broadcasts; the corpus is scanned once.
-    */
   /** Per-dimension int8 scalar quantization of an embedding column — the
     * standard 4× memory/IO compression before ANN indexing at corpus scale
     * (values are linearly mapped to 0..255 codes per dimension; dequantize
@@ -1153,6 +1147,12 @@ object Similarity {
         s => s("code")).as("codes"))
   }
 
+  /** Prototypicality: each vector's cosine to its OWN label's centroid —
+    * the D4/SSL-prototypes curation signal (public method family): the
+    * low end is outliers/label noise, the high end is redundancy near the
+    * class mode; both are pruning candidates. The centroid table is
+    * labels-many rows and broadcasts; the corpus is scanned once.
+    */
   def prototypicality(df: DataFrame, idCol: String, labelCol: String,
       vecCol: String): DataFrame = {
     val cents = labelCentroids(df, labelCol, vecCol)

@@ -45,11 +45,6 @@ object Sketch {
       .otherwise(zeroChars * 4 + nibbleZeros + 1)
   }
 
-  /** HyperLogLog registers for `valueCol` within each `groupCols` cell:
-    * bucket = first 2 hex chars of md5 (m = 256 registers), register =
-    * max ρ over the next 48 bits. Returns (groupCols…, bucket, reg) — at
-    * most 256 rows per group after the (map-side combinable) max.
-    */
   /** The per-row (bucket, _rho) projection shared by the batch register
     * builder and [[graft.streaming.StreamIngest.hllRegisterStream]] — one
     * derivation, so a stream-built register always equals the batch
@@ -62,6 +57,11 @@ object Sketch {
       .withColumn("_rho", rho(substring(h, 3, 12)))
   }
 
+  /** HyperLogLog registers for `valueCol` within each `groupCols` cell:
+    * bucket = first 2 hex chars of md5 (m = 256 registers), register =
+    * max ρ over the next 48 bits. Returns (groupCols…, bucket, reg) — at
+    * most 256 rows per group after the (map-side combinable) max.
+    */
   def hllRegisters(df: DataFrame, groupCols: Seq[String], valueCol: String,
       m: Int = 256): DataFrame = {
     require(m == 256, "register count is fixed at 256 (2 hex chars) for oracle parity")
@@ -126,12 +126,6 @@ object Sketch {
         .groupBy("bucket").agg(max(col("reg")).as("reg")),
       Nil)
 
-  /** Count-min sketch counters: `depth` independent md5 hash rows × `width`
-    * buckets. Input explodes to `depth` rows per record, then a counting
-    * groupBy — map-side combine keeps the shuffle at depth×width rows. The
-    * sketch answers point frequency queries for an UNBOUNDED key space in
-    * depth×width integers of memory (overestimates only, by ≤ collisions).
-    */
   /** The ONE bucket hash shared by counter build and probe — CMS is only
     * correct if both sides hash bit-identically, so neither may drift.
     */
@@ -139,6 +133,12 @@ object Sketch {
     conv(substring(md5(concat(depth.cast("string"), lit(":"), key)),
       1, 8), 16, 10).cast("long") % width
 
+  /** Count-min sketch counters: `depth` independent md5 hash rows × `width`
+    * buckets. Input explodes to `depth` rows per record, then a counting
+    * groupBy — map-side combine keeps the shuffle at depth×width rows. The
+    * sketch answers point frequency queries for an UNBOUNDED key space in
+    * depth×width integers of memory (overestimates only, by ≤ collisions).
+    */
   def cmsCounters(df: DataFrame, keyCol: String,
       depth: Int = 4, width: Int = 64): DataFrame = {
     require(depth >= 1 && width >= 1, "depth and width must be positive")

@@ -262,6 +262,8 @@ object GraphAlgos {
     requireRankArgs(iterations, dampingPct)
     require(seeds.nonEmpty, "need at least one seed")
     val g = encodeGraph(edges, srcCol, dstCol)
+    require(g.n > 0,
+      "personalized PageRank needs at least one edge with two non-null endpoints")
     val seedIds = g.dict.where(col("node").isin(seeds: _*))
       .select("nid").collect().map(_.getLong(0)).toSeq
     val isSeed =
@@ -508,20 +510,6 @@ object GraphAlgos {
        |FROM ag""".stripMargin
   }
 
-  /** Per-node triangle participation counts over an undirected graph given
-    * as a directed edge frame (direction and duplicates are normalized
-    * away; self-loops dropped).
-    *
-    * The join is DEGREE-ORDERED — each undirected edge is oriented from
-    * its lower-(degree, node) endpoint to the higher one, and wedges are
-    * built only from a node's outgoing oriented edges. Every triangle is
-    * then found exactly once, and no node fans out more than O(√m)
-    * oriented edges regardless of raw degree — the standard bound that
-    * keeps the wedge join at O(m^1.5) total instead of Σ deg² (a celebrity
-    * node with degree 10⁶ would otherwise mint 10¹² wedge candidates).
-    * The wedge→closing-edge probe is an equi-join on the oriented edge
-    * set itself.
-    */
   /** Degree-ordered orientation of a canonical undirected edge frame
     * (columns `a` < `b`): each edge oriented `lo → hi` from its
     * lower-(deg, node) endpoint, both endpoints joined against the
@@ -560,6 +548,20 @@ object GraphAlgos {
       Seq("u", "v"))
   }
 
+  /** Per-node triangle participation counts over an undirected graph given
+    * as a directed edge frame (direction and duplicates are normalized
+    * away; self-loops dropped).
+    *
+    * The join is DEGREE-ORDERED — each undirected edge is oriented from
+    * its lower-(degree, node) endpoint to the higher one, and wedges are
+    * built only from a node's outgoing oriented edges. Every triangle is
+    * then found exactly once, and no node fans out more than O(√m)
+    * oriented edges regardless of raw degree — the standard bound that
+    * keeps the wedge join at O(m^1.5) total instead of Σ deg² (a celebrity
+    * node with degree 10⁶ would otherwise mint 10¹² wedge candidates).
+    * The wedge→closing-edge probe is an equi-join on the oriented edge
+    * set itself.
+    */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val o = materialize(orientByDegree(undirectedPairs(edges, srcCol, dstCol)))
     orientedTriangles(o).select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
@@ -1003,20 +1005,6 @@ object GraphAlgos {
         round(col("_sq").cast("double") / 1e6, 4).as("aa_score"))
   }
 
-  /** Deterministic random walks (the node2vec/DeepWalk sampling kernel):
-    * `walksPerSeed` walks of `steps` hops from every seed; at each hop a
-    * walk moves to the out-neighbor minimizing md5(walk_id:step:neighbor)
-    * — a hash-derived "random" choice that is reproducible across engines
-    * and reruns (true RNG would make the corpus un-oracle-able and break
-    * append-stability). Walks at a sink node simply end. Returns one row
-    * per (walk_id, step, node) visited, step 0 = the seed.
-    *
-    * Scale shape: the edge frame is read once per hop via a keyed join
-    * against the (walks × 1)-row frontier — broadcast-sized for any sane
-    * walk count — and the argmin is a map-side-combinable min over a
-    * (hash, neighbor) struct, so no hop ever sorts or windows the
-    * candidate set. The frontier is materialized per hop.
-    */
   /** Walk-kernel edge prep: project, drop self-loops, materialize — NO global
     * distinct. Duplicate (src, dst) rows cannot change any hop's outcome:
     * the next-hop choice is an argmin (plain `min` for [[randomWalks]],
@@ -1033,6 +1021,20 @@ object GraphAlgos {
       col(dstCol).cast("string").as("dst"))
       .where(col("src") =!= col("dst")))
 
+  /** Deterministic random walks (the node2vec/DeepWalk sampling kernel):
+    * `walksPerSeed` walks of `steps` hops from every seed; at each hop a
+    * walk moves to the out-neighbor minimizing md5(walk_id:step:neighbor)
+    * — a hash-derived "random" choice that is reproducible across engines
+    * and reruns (true RNG would make the corpus un-oracle-able and break
+    * append-stability). Walks at a sink node simply end. Returns one row
+    * per (walk_id, step, node) visited, step 0 = the seed.
+    *
+    * Scale shape: the edge frame is read once per hop via a keyed join
+    * against the (walks × 1)-row frontier — broadcast-sized for any sane
+    * walk count — and the argmin is a map-side-combinable min over a
+    * (hash, neighbor) struct, so no hop ever sorts or windows the
+    * candidate set. The frontier is materialized per hop.
+    */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], steps: Int, walksPerSeed: Int = 1): DataFrame = {
     require(steps >= 1, "need at least one step")
@@ -1358,14 +1360,6 @@ object GraphAlgos {
     biasedWalksOracleCte(edgesSql, seeds, steps, pReturn, qOut, walksPerSeed) +
       "\nSELECT walk_id, step, node FROM walks ORDER BY walk_id, step"
 
-  /** Skip-gram training pairs from a walk corpus (the DeepWalk/node2vec
-    * second stage, public): for every walk, all (center, context) node
-    * pairs within `window` steps, counted — the co-occurrence statistics a
-    * node-embedding trainer consumes. One self-join of the walks frame
-    * keyed on the walk id with a bounded step-distance predicate, then a
-    * map-side-combinable pair count; walks are steps-bounded so the join
-    * fan-out is ≤ 2·window per position.
-    */
   /** Link-prediction evaluation — the standard graph-ML benchmark loop,
     * engine-exact end to end: hold out ~10% of edges deterministically
     * (md5 tag < '1a'), score held-out positives and a deterministic
@@ -2096,6 +2090,14 @@ object GraphAlgos {
     sb.toString
   }
 
+  /** Skip-gram training pairs from a walk corpus (the DeepWalk/node2vec
+    * second stage, public): for every walk, all (center, context) node
+    * pairs within `window` steps, counted — the co-occurrence statistics a
+    * node-embedding trainer consumes. One self-join of the walks frame
+    * keyed on the walk id with a bounded step-distance predicate, then a
+    * map-side-combinable pair count; walks are steps-bounded so the join
+    * fan-out is ≤ 2·window per position.
+    */
   def skipGramPairs(walks: DataFrame, window: Int): DataFrame = {
     require(window >= 1, "window must be >= 1")
     // the walk corpus feeds BOTH sides of the self-join — materialize it

@@ -85,21 +85,6 @@ final case class GraphOutput(
     (vs, es)
   }
 
-  /** Materialize every collection in ONE Spark job: a union of 1-row
-    * projections. One count per collection (as [[sizes]] does) serializes a
-    * job per collection; a single union lets the independent collection
-    * plans run their stages concurrently across the executor cores, and
-    * populates every [[cache]]d collection in one pass. Returns the total
-    * element count. Safe only when shared sub-plans are either
-    * materialized already (the compiler checkpoints order-unstable bases
-    * through [[Rounds.materialize]]) or cheap to recompute (parquet scans)
-    * — racing branches would otherwise duplicate heavy shared work.
-    */
-  def materialize(): Long =
-    (vertices.values ++ edges.values)
-      .map(_.select(org.apache.spark.sql.functions.lit(1).as("one")))
-      .reduceOption(_ union _).map(_.count()).getOrElse(0L)
-
   /** Register every collection as a session temp view — the SQL surface
     * over the property graph: `<prefix><vertex>` per vertex collection and
     * `<prefix><src>__<rel>__<tgt>` per edge collection, so SQL-only
@@ -114,19 +99,10 @@ final case class GraphOutput(
       df.createOrReplaceTempView(s"$prefix${k.storeName}") }
   }
 
-  /** Persist every collection — for read paths that touch the same derived
-    * DataFrames repeatedly (BFS hops, multi-query readers). Lazy: storage
-    * fills on first action per collection.
+  /** Unpersist every collection (blocking = false): releases a caller's
+    * own `persist`, and does nothing to frames that hold no cache, such as
+    * the query plane's frozen results.
     */
-  def cache(): GraphOutput = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    GraphOutput(
-      vertices.map { case (k, v) => k -> v.persist(lvl) },
-      edges.map { case (k, e) => k -> e.persist(lvl) },
-      errors)
-  }
-
-  /** Release storage taken by [[cache]] (blocking = false). */
   def unpersist(): GraphOutput = {
     vertices.values.foreach(_.unpersist())
     edges.values.foreach(_.unpersist())

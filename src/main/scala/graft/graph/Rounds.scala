@@ -8,14 +8,15 @@ import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
-/** The one materialization primitive of graft's operators. Every frame an
-  * operator computes once and reads more than once goes through
+/** The one materialization primitive of graft. Every frame an operator or
+  * a read query computes once and reads more than once goes through
   * [[materialize]]: a loop's per-round state, a loop's edge frame, an
   * index (postings, adjacency, candidate and shingle sets), an id-stamped
-  * base and the battery's fixture graphs. It is an eager
-  * `localCheckpoint`, never `persist`; `MaterializePolicySpec` keeps
-  * `persist` to the query plane's hop frames and the public
-  * `GraphOutput.cache`, so a reliable-checkpoint switch has one site.
+  * base, the battery's fixture graphs, and the query plane's hop
+  * branches, over-cap frontiers and results. It is an eager
+  * `localCheckpoint`, never a cache; `MaterializePolicySpec` keeps every
+  * cache call out of `src/main` with no exception, so a reliable-checkpoint
+  * switch has one site, and it covers reads as well as operators.
   *
   * Why a checkpoint and not a cache:
   *   - it materializes AND severs lineage. A cache keeps the symbolic plan

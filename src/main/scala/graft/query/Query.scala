@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model._
 import graft.expr.FilterExpr
-import graft.graph.GraphOutput
+import graft.graph.{GraphOutput, Rounds}
 
 /** A query asked for more than a cap allows (reference CapExceededError,
   * caps.py:96-112): carries the cap's NAME so the surface can say which
@@ -269,7 +269,7 @@ final class GraphReader(
         s"group_by is only supported for COUNT, not $aggName")
     var df = vertexDf(q.vertex)
     q.filters.foreach(f => df = df.where(FilterExpr.compile(f)))
-    val fn = q.agg.toUpperCase match {
+    val fn = aggName match {
       case "COUNT"         => count(lit(1))
       case "MAX"           => max(col(q.aggregatedField.get))
       case "MIN"           => min(col(q.aggregatedField.get))
@@ -278,11 +278,8 @@ final class GraphReader(
       case other           => throw new IllegalArgumentException(s"unknown aggregation: $other")
     }
     q.discriminant match {
-      case Some(d) =>
-        require(q.agg.equalsIgnoreCase("COUNT"),
-          "group_by supported with COUNT only (reference models.py:252-283)")
-        df.groupBy(col(d)).agg(fn.as("_value"))
-      case None => df.agg(fn.as("_value"))
+      case Some(d) => df.groupBy(col(d)).agg(fn.as("_value"))
+      case None    => df.agg(fn.as("_value"))
     }
   }
 
@@ -300,7 +297,7 @@ final class GraphReader(
     *     (the reference's frontier is the HYDRATED docs, traversal.py:227-235);
     *   - the edge budget is GLOBAL across hops and stops the walk at the
     *     hop boundary where it exhausts (traversal.py:175-177). Within one
-    *     hop graft runs every (edge, side) branch in one parallel job with
+    *     hop graft freezes every (edge, side) branch on its own job with
     *     the budget applied per branch, where the reference truncates in
     *     its sequential edge order — mid-hop truncation keeps a different
     *     (backend-order-dependent) subset: graft keeps a branch's rows
@@ -324,9 +321,8 @@ final class GraphReader(
     // the reference passes them into the per-hop edge fetch
     // (db/traversal.py:121-204), not onto the result vertices
     withTimeout(anchor.sparkSession) {
-      val (out, hopFrames) = walk(Seq(q.vertex -> anchor), hops, q.direction,
-        q.relations, q.edgeLimit.getOrElse(caps.defaultEdgeLimit), q.filters)
-      finish(out, hopFrames)
+      enforceElementCap(walk(Seq(q.vertex -> anchor), hops, q.direction,
+        q.relations, q.edgeLimit.getOrElse(caps.defaultEdgeLimit), q.filters))
     }
   }
 
@@ -346,13 +342,12 @@ final class GraphReader(
         q.seedIds.map { case (t, id) => t -> anchorIds(t, Some(id), None) }
     if (anchors.isEmpty) return GraphOutput.empty
     withTimeout(anchors.head._2.sparkSession) {
-      val (out, hopFrames) = walk(anchors, hops, q.direction, q.relations, budget,
-        q.edgeFilter)
+      val out = walk(anchors, hops, q.direction, q.relations, budget, q.edgeFilter)
       // reference container.pick_unique() after the merge (conn.py:829):
       // a vertex reached by several seeds is one document (the walk's edge
       // frames are already deduplicated)
-      finish(out.copy(vertices = out.vertices.map { case (t, df) => t -> df.dropDuplicates() }),
-        hopFrames)
+      enforceElementCap(out.copy(
+        vertices = out.vertices.map { case (t, df) => t -> df.dropDuplicates() }))
     }
   }
 
@@ -416,27 +411,24 @@ final class GraphReader(
     } finally { timer.cancel(); sc.clearJobGroup() }
   }
 
-  /** Enforce the element cap (materializing + caching the result), then
-    * release the intermediate hop frames — the result frames are cached, so
-    * downstream actions don't recompute through the released limits.
-    */
-  private def finish(out: GraphOutput, hopFrames: Seq[DataFrame]): GraphOutput =
-    try enforceElementCap(out)
-    finally hopFrames.foreach(_.unpersist()) // also on the cap-exceeded path
-
   /** `max_elements` hard cap (caps.py:23-92): total vertices + edges in the
-    * result. Counting is bounded — per-hop edge limits already cap the
-    * result size near the ceiling.
+    * result. Each collection is frozen ([[Rounds.materialize]]) with its row
+    * count riding its checkpoint job, so the caller's actions read the
+    * frozen rows and the call registers no cache. Counting is bounded —
+    * per-hop edge limits already cap the result size near the ceiling.
     */
   private def enforceElementCap(g: GraphOutput): GraphOutput = {
-    val cached = g.cache()
-    // one job for the whole cap check (GraphOutput.materialize is the one
-    // union-of-1-projections counting idiom)
-    val total = cached.materialize()
+    def freeze[K](m: Map[K, DataFrame]): Map[K, (DataFrame, Long)] = m.map { case (k, df) =>
+      val (frozen, n) = Rounds.materialize(df, count(lit(1)).as("_rows"))
+      k -> (frozen, n.getLong(0))
+    }
+    val (vs, es) = (freeze(g.vertices), freeze(g.edges))
+    val total = (vs.values ++ es.values).map(_._2).sum
     if (total > caps.maxElements)
       throw new IllegalStateException(
         s"traversal result $total elements exceeds cap ${caps.maxElements}")
-    cached
+    GraphOutput(vs.map { case (k, (f, _)) => k -> f }, es.map { case (k, (f, _)) => k -> f },
+      g.errors)
   }
 
   /** Bounded-set localization: BFS frontier / visited id-sets are small by
@@ -446,15 +438,17 @@ final class GraphReader(
     * LocalRelation resets the logical-plan depth each hop — otherwise every
     * hop's joins re-analyze (and re-broadcast) the whole anchor→hopN lineage,
     * and the job count grows quadratically with hops. Sets larger than
-    * `localizeCap` stay distributed (the scale path: broadcast joins).
+    * `localizeCap` (any set when it is 0) stay distributed and are frozen
+    * with [[Rounds.materialize]] (the scale path: broadcast joins).
     */
   private def localize(df: DataFrame): DataFrame = {
-    if (localizeCap <= 0) return df // forced-distributed (tests / huge walks)
-    val cap = math.min(localizeCap, Int.MaxValue - 1) // limit(cap+1) must not wrap
-    val spark = df.sparkSession
-    val rows = df.limit(cap + 1).collect()
-    if (rows.length > cap) df
-    else spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    if (localizeCap > 0) {
+      val cap = math.min(localizeCap, Int.MaxValue - 1) // limit(cap+1) must not wrap
+      val rows = df.limit(cap + 1).collect()
+      if (rows.length <= cap)
+        return df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    }
+    Rounds.materialize(df)
   }
 
   /** The BFS walk of one or more seeds — the engine's `bfs_neighbors`
@@ -467,7 +461,7 @@ final class GraphReader(
     *   - each seed has its own edge budget, assigned to the hop's branches
     *     in order; a bounded branch numbers each seed's rows (`_rn`, first
     *     by far-endpoint identity), so trimming a seed's share of a branch
-    *     is a filter on the persisted frame;
+    *     is a filter on the frozen frame;
     *   - the edges of all seeds merge with `dropDuplicates` (pick_unique).
     */
   private def walk(
@@ -477,7 +471,7 @@ final class GraphReader(
       relations: Seq[String],
       edgeLimit: Int,
       edgeFilter: Option[FilterExpr] = None
-  ): (GraphOutput, Seq[DataFrame]) = {
+  ): GraphOutput = {
     // visited / frontier are Map[vertexType -> DataFrame of (id columns,
     // seed)]; visited only ever gains HYDRATABLE ids (the anchors aside) —
     // a dangling endpoint is re-attempted if reached again, like the
@@ -493,7 +487,6 @@ final class GraphReader(
     var visited = anchorSets
     var frontier = visited
     var collectedEdges = Map.empty[EdgeKey, DataFrame]
-    val hopFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val unbounded = edgeLimit >= Int.MaxValue / 2
     val budget = Array.fill(anchors.size)(edgeLimit) // per seed, in seed order
     // a per-seed amount as a column: element `_seed` of an array literal
@@ -509,10 +502,10 @@ final class GraphReader(
     val allowedEdges = schema.edges
       .filter(e => relations.isEmpty || relations.contains(e.relation))
 
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one hop's (edge, side) expansion, pending budget assignment
+    // one hop's frozen (edge, side) expansion and, in a bounded walk, its
+    // row count per seed, pending budget assignment
     final case class Branch(key: EdgeKey, toType: String, toPrefix: String,
-        joined: DataFrame)
+        joined: DataFrame, rows: Seq[Long])
 
     for (_ <- 1 to hops if frontier.nonEmpty && (unbounded || budget.exists(_ > 0))) {
       var nextFrontier = Map.empty[String, DataFrame]
@@ -544,7 +537,7 @@ final class GraphReader(
           // truncation beyond a seed's remaining budget keeps its rows
           // first by far-endpoint identity (the reference's truncation
           // order is backend-dependent, db/traversal.py:36). The ranked
-          // frame is persisted ONCE and both the edge set and the frontier
+          // frame is frozen ONCE and both the edge set and the frontier
           // derive from it. The literal bound on the rank lets Spark cut
           // each seed's rows per partition before the shuffle (a partial
           // WindowGroupLimit, for budgets up to its threshold). At most
@@ -552,7 +545,7 @@ final class GraphReader(
           // partition: every consumer then reads it in one task. The
           // unbounded sentinel skips the ranking, so uncapped traversals
           // keep their parallelism.
-          val joined = (if (unbounded) expanded
+          val ranked = if (unbounded) expanded
             else {
               val far = idCols(toType).map(k => s"$toPrefix$k")
               val rest = edf.schema.fields.collect {
@@ -563,9 +556,13 @@ final class GraphReader(
                 .where(col(RankCol) <= budget.max &&
                   col(RankCol) <= perSeed(budget.toSeq.map(_.toLong)))
                 .coalesce(1)
-            }).persist(lvl)
-          hopFrames += joined
-          branches += Branch(e.key, toType, toPrefix, joined)
+            }
+          // one checkpoint job per branch; a bounded walk's per-seed row
+          // counts ride it as counters
+          val seeds = if (unbounded) Nil else budget.indices
+          val (joined, n) = Rounds.materialize(ranked,
+            seeds.map(s => count(when(col(SeedCol) === s, 1)).as(s"_n$s")): _*)
+          branches += Branch(e.key, toType, toPrefix, joined, seeds.map(n.getLong))
         }
 
       allowedEdges.foreach { e =>
@@ -590,38 +587,21 @@ final class GraphReader(
         if (doIn)  expand(e, e.target, "dst_", e.source, "src_")
       }
 
-      // materialize every branch's persisted frame in ONE job (a union of
-      // narrow projections): the branches run in parallel inside a single
-      // job DAG — per-hop wall time is max(branch) + one job overhead
-      // rather than sum(branch). A bounded walk takes its per-(branch,
-      // seed) row counts from the same job; the unbounded path counts
-      // nothing.
-      val counts: Map[(Int, Int), Long] =
-        if (branches.isEmpty) Map.empty
-        else if (unbounded) {
-          branches.map(_.joined.select(lit(1).as("one"))).reduce(_.union(_)).count(): Unit
-          Map.empty
-        } else branches.zipWithIndex
-          .map { case (b, i) => b.joined.select(lit(i).as("_branch"), col(SeedCol)) }
-          .reduce(_.union(_)).groupBy("_branch", SeedCol).count().collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-
       // per-seed edge budget (reference edge_count, traversal.py:173-177,
       // 202-203), assigned to branches IN ORDER like the reference's
       // sequential edge loop — a branch past a seed's exhaustion point
       // contributes none of that seed's rows, a straddling branch is
       // trimmed to the seed's remainder.
-      branches.zipWithIndex.foreach { case (b, i) =>
+      branches.foreach { b =>
         val frame =
           if (unbounded) b.joined
           else {
-            val n = budget.indices.map(s => counts.getOrElse((i, s), 0L))
             val take = budget.indices.map { s =>
-              val t = math.min(n(s), budget(s).toLong)
+              val t = math.min(b.rows(s), budget(s).toLong)
               budget(s) -= t.toInt
               t
             }
-            if (take == n) b.joined
+            if (take == b.rows) b.joined
             else if (take.forall(_ == 0L)) null
             else b.joined.where(col(RankCol) <= perSeed(take))
           }
@@ -650,18 +630,9 @@ final class GraphReader(
       // localize each hop's small frontier set (≤ edgeLimit rows per
       // expand and seed): later hops, hydration, and the element-cap count
       // reuse it with a depth-0 plan. A frontier above the cap stays
-      // distributed and is persisted instead (re-evaluation through the
-      // budget filter would otherwise be recomputed per consumer).
-      nextFrontier = nextFrontier.map { case (t, df) =>
-        // persist BEFORE probing: an over-cap frontier's probe partitions
-        // land in the cache and its consumers reuse them, instead of the
-        // probe evaluating the un-persisted plan and every consumer
-        // recomputing it from scratch
-        val p = df.persist(lvl)
-        val loc = localize(p)
-        if (loc eq p) { hopFrames += p; t -> p }
-        else { p.unpersist(): Unit; t -> loc }
-      }
+      // distributed and is frozen instead, so its consumers read its rows
+      // rather than each re-evaluating the anti- and semi-joins.
+      nextFrontier = nextFrontier.map { case (t, df) => t -> localize(df) }
 
       collectedEdges = (collectedEdges.keySet ++ newEdges.keySet).map { k =>
         k -> Seq(collectedEdges.get(k), newEdges.get(k)).flatten
@@ -686,7 +657,7 @@ final class GraphReader(
         .fold(ids)(a => ids.join(a, tagged(t), "left_anti")).drop(SeedCol)
       vertexCollection(t).map(v => t -> v.join(reached, idCols(t), "left_semi"))
     }
-    (GraphOutput(hydrated, collectedEdges), hopFrames.toSeq)
+    GraphOutput(hydrated, collectedEdges)
   }
 }
 

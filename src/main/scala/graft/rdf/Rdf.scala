@@ -207,12 +207,6 @@ object Rdf {
       .agg(map_from_entries(collect_list(struct(col("k"), col("vs")))).as("props"))
   }
 
-  /** Manifest → RDF serialization (the reference's manifest↔RDF round-trip,
-    * graflo/rdf/serializer.py + namespace.py): vertices become owl:Class,
-    * edges owl:ObjectProperty with domain/range, typed fields
-    * owl:DatatypeProperty with domain. Inverse of [[inferSchema]] up to
-    * ordering. N-Triples lines, base IRI configurable.
-    */
   /** gf: meta-ontology 1.4.0 semantic-anchoring predicates (reference
     * rdf/namespace.py: gf:semanticIri / gf:unit, reusing skos:exactMatch /
     * skos:altLabel rather than minting equivalents). Declared without
@@ -237,6 +231,12 @@ object Rdf {
       s.synonyms.map(l => s"""$subject <$SkosAltLabel> "${escapeLiteral(l)}" .""") ++
       s.unit.map(u => s"""$subject <$GfUnit> "${escapeLiteral(u)}" .""").toSeq
 
+  /** Manifest → RDF serialization (the reference's manifest↔RDF round-trip,
+    * graflo/rdf/serializer.py + namespace.py): vertices become owl:Class,
+    * edges owl:ObjectProperty with domain/range, typed fields
+    * owl:DatatypeProperty with domain. Inverse of [[inferSchema]] up to
+    * ordering. N-Triples lines, base IRI configurable.
+    */
   def schemaToNTriples(schema: GraphSchema, base: String = "http://graft.local/"): Seq[String] = {
     def iri(n: String) = s"<$base$n>"
     val classes = schema.vertices.flatMap(v =>

@@ -78,13 +78,6 @@ object StreamIngest {
       .trigger(trigger)
       .start()
 
-  /** Streaming deduplication for at-least-once sources: one row per id
-    * within the watermark horizon (state for ids older than the watermark
-    * is evicted, which bounds state size — the scale contract). Duplicates
-    * arriving within `watermark` of the original are dropped exactly; pick
-    * the horizon from the source's redelivery window (e.g. a Kafka
-    * retention / replay bound), not from wall-clock hope.
-    */
   /** Streaming distinct-count state: HLL registers maintained incrementally
     * — `max(reg)` per bucket is exactly the streaming-aggregation shape
     * (monotone, mergeable, 256 rows of state per group regardless of how
@@ -103,6 +96,13 @@ object StreamIngest {
       .agg(max(col("_rho")).as("reg"))
   }
 
+  /** Streaming deduplication for at-least-once sources: one row per id
+    * within the watermark horizon (state for ids older than the watermark
+    * is evicted, which bounds state size — the scale contract). Duplicates
+    * arriving within `watermark` of the original are dropped exactly; pick
+    * the horizon from the source's redelivery window (e.g. a Kafka
+    * retention / replay bound), not from wall-clock hope.
+    */
   def dedupStream(source: DataFrame, idCols: Seq[String], tsCol: String,
       watermark: String): DataFrame =
     source.withWatermark(tsCol, watermark)
@@ -159,20 +159,6 @@ object StreamIngest {
           expr(s"INTERVAL $windowSec SECONDS"))
   }
 
-  /** Custom session state via flatMapGroupsWithState: a session closes (and
-    * is emitted) when a later event arrives past `gapMs`, or when the
-    * EVENT-TIME timeout fires — the watermark passing `last + gapMs` — so
-    * trailing sessions are eventually emitted and their state cleaned up.
-    * Event time, not processing time, deliberately: a wall-clock timeout
-    * would close sessions by ingestion speed (wrong under backfill /
-    * catch-up), AND pending processing-time timeouts keep the micro-batch
-    * engine spinning empty batches at full tilt until they fire — measured
-    * as a busy-looped never-quiescing query on this very operator. The
-    * final open session per key stays in state awaiting more data or a
-    * further watermark advance — batch sessionization is `q_sessionize`'s
-    * window program. This is the engine's `mapGroupsWithState` surface —
-    * the reference has no stateful operator at all (SURVEY §2.11).
-    */
   /** Streaming SCD2 (the CDC face of [[graft.ext.Events.scd2History]]):
     * per key, state holds the OPEN run (current value + its start); a
     * batch's events process in event-time order, and every value change
@@ -300,6 +286,20 @@ object StreamIngest {
       }
   }
 
+  /** Custom session state via flatMapGroupsWithState: a session closes (and
+    * is emitted) when a later event arrives past `gapMs`, or when the
+    * EVENT-TIME timeout fires — the watermark passing `last + gapMs` — so
+    * trailing sessions are eventually emitted and their state cleaned up.
+    * Event time, not processing time, deliberately: a wall-clock timeout
+    * would close sessions by ingestion speed (wrong under backfill /
+    * catch-up), AND pending processing-time timeouts keep the micro-batch
+    * engine spinning empty batches at full tilt until they fire — measured
+    * as a busy-looped never-quiescing query on this very operator. The
+    * final open session per key stays in state awaiting more data or a
+    * further watermark advance — batch sessionization is `q_sessionize`'s
+    * window program. This is the engine's `mapGroupsWithState` surface —
+    * the reference has no stateful operator at all (SURVEY §2.11).
+    */
   def sessionize(events: Dataset[SessionEvent], gapMs: Long): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events.withWatermark("ts", s"$gapMs milliseconds")

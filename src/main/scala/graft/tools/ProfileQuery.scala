@@ -72,7 +72,6 @@ object ProfileQuery {
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => cachedBefore(id) }
         .values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache() // and the repeat's Dataset cache registrations
       System.gc()
     }
   }

@@ -208,11 +208,13 @@ class PlanAssertSpec extends SparkSpec {
     val reader = new GraphReader(graft.fixtures.TpchGraph.schema,
       Map("customer" -> cust, "orders" -> ord).apply _, es.get(_),
       QueryCaps.Hard.copy(timeoutSeconds = 600))
-    val out = reader.neighbors(
-      NeighborQuery("customer", FilterExpr.eq("c_custkey", 7L)))
-    val p = out.vertices("orders").queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(!p.contains("SortMergeJoin"),
-      s"walk hydration plans a SortMergeJoin:\n$p")
+    // the result is frozen, so read the plans of the walk's own executions
+    val plans = plansDuring {
+      reader.neighbors(NeighborQuery("customer", FilterExpr.eq("c_custkey", 7L))): Unit
+    }
+    assert(plans.exists(_.contains("BroadcastHashJoin")),
+      "the walk planned no broadcast join:\n" + plans.mkString("\n"))
+    assert(!plans.exists(_.contains("SortMergeJoin")),
+      "the walk plans a SortMergeJoin:\n" + plans.mkString("\n"))
   }
 }

@@ -65,6 +65,9 @@ class GraphAlgosSpec extends SparkSpec {
     val plain = intercept[IllegalArgumentException](
       GraphAlgos.pageRankFixed(nullOnly, "s", "t", iterations = 2))
     assert(plain.getMessage.contains("at least one edge"), plain.getMessage)
+    val personalized = intercept[IllegalArgumentException](
+      GraphAlgos.personalizedPageRankFixed(nullOnly, "s", "t", Seq("a"), iterations = 2))
+    assert(personalized.getMessage.contains("at least one edge"), personalized.getMessage)
     val nonPositive = Seq(("a", "b", 2L), ("a", "b", -2L), ("b", "c", 0L))
       .toDF("s", "t", "w")
     val weighted = intercept[IllegalArgumentException](

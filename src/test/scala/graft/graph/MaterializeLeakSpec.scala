@@ -5,7 +5,7 @@ import graft.ext.Dedup
 import org.apache.spark.sql.graftspec.CacheRegistry
 import org.apache.spark.storage.StorageLevel
 
-/** Operators share their multi-consumer frames through
+/** Operators and read queries share their multi-consumer frames through
   * [[Rounds.materialize]], so calling them leaves the session's cache as
   * it was and leaves the caller's frames alone.
   */
@@ -30,6 +30,26 @@ class MaterializeLeakSpec extends SparkSpec {
       GraphAlgos.linkPredictionAuc(edges, "s", "t"),
       Dedup.jaccardPairs(docs, "id", "text", n = 2, minSim = 0.1)
     ).foreach(_.collect(): Unit)
+    assert(CacheRegistry.entries(spark) == before)
+  }
+
+  test("neighbor and traverse queries register no cached data") {
+    import graft.expr.FilterExpr
+    import graft.model._
+    import graft.query._
+    val schema = GraphSchema(
+      vertices = Seq(VertexDef("n", Nil, Identity.Natural(Seq("id")))),
+      edges = Seq(EdgeDef("n", "n", "link")))
+    val reader = new GraphReader(schema,
+      Map("n" -> Seq("a", "b", "c", "d", "e", "f").toDF("id")),
+      Map(EdgeKey("n", "n", "link") -> edges.toDF("src_id", "dst_id")).get(_))
+    def collected(g: GraphOutput): Long =
+      (g.vertices.values ++ g.edges.values).map(_.collect().length.toLong).sum
+    val before = CacheRegistry.entries(spark)
+    assert(collected(reader.neighbors(
+      NeighborQuery("n", FilterExpr.eq("id", "a"), hops = 2))) > 0)
+    assert(collected(reader.traverseQuery(TraverseQuery(
+      Seq("a", "c", "e").map(k => "n" -> FilterExpr.eq("id", k)), hops = 2))) > 0)
     assert(CacheRegistry.entries(spark) == before)
   }
 
